@@ -198,21 +198,6 @@ object DedupIndex {
       .getOrElse(throw new java.io.FileNotFoundException(
         s"no committed version at ${spec.srcRoot}"))
     val streamId = StreamPrefix + spec.srcRoot
-    // pre-epoch layout migration: an index built before epoch
-    // partitioning maps partCols = (band_idx) and every commit path
-    // now writes (band_idx, epoch) — prepare would refuse the layout
-    // change and wedge the refresh loudly but uselessly. The index is
-    // DERIVED data, always reconstructible from its source: wipe the
-    // table state (the _dedupindex spec survives) and fall through to
-    // the full rebuild below.
-    if (VersionedTable.currentVersion(spark, indexRoot).exists { _ =>
-        VersionedTable.resolveManifest(spark, indexRoot, None)
-          .partCols == Seq("band_idx") }) {
-      val fs = graft.ops.SpecFile.fs(spark, specPath(indexRoot))
-      fs.listStatus(new Path(indexRoot))
-        .filterNot(_.getPath.getName == "_dedupindex")
-        .foreach(s => fs.delete(s.getPath, true))
-    }
     val synced = VersionedTable.currentVersion(spark, indexRoot)
       .flatMap(_ => VersionedTable.lastTxn(spark, indexRoot, streamId))
     synced match {

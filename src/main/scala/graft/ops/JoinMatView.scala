@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.LongType
  * sum + non-null count), both legs fold into per-group signed deltas
  * joined against the view's current rows — no group ever re-aggregates
  * from scratch on the delta path. A dimension change touching more than
- * `spark.graft.matview.rescanFraction` of the dim's rows falls back to
+ * [[MatView.RescanFraction]] of the dim's rows falls back to
  * ONE full recompute (the initial build's plan) plus a group-keyed
  * tombstone anti-join, the [[MatView]] mass-removal discipline.
  *
@@ -91,10 +91,6 @@ object JoinMatView {
     override def initialValue: java.lang.Long = -1L
   }
   private[graft] def lastDimChangedKeys: Long = lastDimKeysTl.get
-
-  private def rescanFraction(spark: SparkSession): Double =
-    spark.conf.getOption("spark.graft.matview.rescanFraction")
-      .map(_.toDouble).getOrElse(0.5)
 
   /** Define the view and run the initial full build (the only time the
     * whole fact table joins the whole dim). Returns the view version. */
@@ -230,7 +226,7 @@ object JoinMatView {
   /** The incremental refresh: signed joined-row legs → per-group
     * deltas → join against the view's current rows → new group states.
     * Falls back to a full recompute when the dim change set exceeds
-    * [[rescanFraction]] of the dim's rows. */
+    * [[MatView.RescanFraction]] of the dim's rows. */
   private def deltaRows(spark: SparkSession, viewRoot: String, spec: Spec,
                         fFrom: Int, fCur: Int, dFrom: Int, dCur: Int)
       : DataFrame = {
@@ -253,13 +249,13 @@ object JoinMatView {
         val nKeys = cdfD.select(spec.dimKeys.map(col): _*).distinct()
           .count()
         lastDimKeysTl.set(nKeys)
-        // mass dim change: past rescanFraction of the dim, the "pruned"
+        // mass dim change: past RescanFraction of the dim, the "pruned"
         // fact re-read selects most of the table — one full recompute
         // (the initial build's plan) beats it, exactly the MatView
         // mass-removal fallback. Dim row count is a metadata fold.
         val dimRows =
           VersionedTable.read(spark, spec.dimRoot, Some(dCur)).count()
-        if (nKeys > rescanFraction(spark) * math.max(dimRows, 1L)) {
+        if (nKeys > MatView.RescanFraction * math.max(dimRows, 1L)) {
           cdfD.unpersist()
           lastFullTl.set(true)
           return fullRecompute(spark, viewRoot, spec, fCur, dCur)

@@ -191,7 +191,7 @@ object MatView {
   private[graft] def lastRescanGroups: Long = lastRescan.get
 
   /** Whether the LAST [[refresh]] took the full-recompute fallback
-    * (mass-removal: the rescan set exceeded [[rescanFraction]] of the
+    * (mass-removal: the rescan set exceeded [[RescanFraction]] of the
     * view's live groups). Same per-thread observability contract as
     * [[lastRescanGroups]]. */
   private val lastFullRecomputeTl = new ThreadLocal[java.lang.Boolean] {
@@ -205,11 +205,9 @@ object MatView {
     * a near-table-sized group-key set into the pruned path — past this
     * point the "pruned" rescan reads most of the source anyway, and the
     * broadcast of |groups| keys is pure overhead (a driver OOM at 100 TB
-    * group cardinalities). Override per session with
-    * `spark.graft.matview.rescanFraction`. */
-  private def rescanFraction(spark: SparkSession): Double =
-    spark.conf.getOption("spark.graft.matview.rescanFraction")
-      .map(_.toDouble).getOrElse(0.5)
+    * group cardinalities). [[JoinMatView]] applies the same threshold to
+    * the dim's changed keys. */
+  private[graft] val RescanFraction = 0.5
 
   /** The view's served contents: group columns + measures, tombstones
     * and internal columns hidden. */
@@ -359,7 +357,7 @@ object MatView {
       lastFullRecomputeTl.set(false)
       if (lastRescanGroups == 0) (deltaRows, Seq(rescanKeys))
       else {
-        // mass-removal fallback: past rescanFraction of the LIVE groups
+        // mass-removal fallback: past RescanFraction of the LIVE groups
         // the pruned path degenerates (IN/semi probes select most of the
         // source; the broadcast key set scales with the view), so
         // recompute the whole view instead — one full aggregation, the
@@ -367,7 +365,7 @@ object MatView {
         // groups. The live count is one O(groups) scan of the view,
         // paid only on refreshes that already need a rescan.
         val liveGroups = cur.filter(col("__cnt") > 0).count()
-        if (lastRescanGroups > rescanFraction(spark) * liveGroups) {
+        if (lastRescanGroups > RescanFraction * liveGroups) {
           lastFullRecomputeTl.set(true)
           (fullRecompute(spark, spec, cur, srcCur), Seq(rescanKeys))
         } else (deltaRows.unionByName(

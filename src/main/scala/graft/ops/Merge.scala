@@ -270,6 +270,10 @@ object Merge {
       "")
   }
 
+  /** Touched-dir count up to which [[readTouchedDirs]] inlines its
+    * rel→values lookup as a CASE/WHEN projection instead of a join. */
+  private val InlineLookupMax = 64
+
   /** ONE multi-path scan over touched partition directories with the
     * update side's EXACT values reattached. The naive shape — one
     * `spark.read.parquet(dir)` relation per touched directory, unioned —
@@ -311,12 +315,11 @@ object Merge {
     // job-count-priced (CommitCostProbe). `lit(v).cast(pType)` round-trips
     // the collected external value through the same Catalyst converters
     // the createDataFrame path uses; any value lit() cannot represent
-    // (Try) falls back to the join, as does a live set past the cap —
-    // a thousand-branch CASE is where codegen, not correctness, degrades.
-    val inlineMax = scala.util.Try(spark.conf.get(
-      "spark.graft.commit.inlineLookupMax", "64").toInt).getOrElse(64)
+    // (Try) falls back to the join, as does a live set past
+    // InlineLookupMax — a thousand-branch CASE is where codegen, not
+    // correctness, degrades.
     val inlineLits: Option[Seq[(String, Seq[org.apache.spark.sql.Column])]] =
-      if (live.isEmpty || live.size > inlineMax) None
+      if (live.isEmpty || live.size > InlineLookupMax) None
       else scala.util.Try(live.map { case (vals, rel) =>
         rel -> vals.zipWithIndex.map { case (v, i) =>
           (if (v == null) lit(null) else lit(v)).cast(pTypes(i)) }

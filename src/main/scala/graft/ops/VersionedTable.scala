@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *                                               IS the commit of version N
  * }}}
  *
- * The manifest is self-describing (format v2): a header records the
- * partition column NAMES and the full table SCHEMA (StructType JSON), so
- * reads never depend on partition-type inference — each generation is
+ * The manifest is self-describing (format v3, the only one the reader
+ * accepts): a header records the partition column NAMES and the full
+ * table SCHEMA (StructType JSON), so reads never depend on
+ * partition-type inference — each generation is
  * scanned with the schema its version committed, and partition values parse
  * from the directory names under their DECLARED types. That kills two
  * silent-corruption classes: non-canonical string values ('01', '1.50')
@@ -225,12 +226,6 @@ object VersionedTable {
   private[graft] case class ColStat(min: Option[String], max: Option[String],
                                     nulls: Long, dtJson: Option[String])
 
-  /** Parsed manifest: partition column names, the version's full schema,
-    * relative partition dir -> generation dir, per-file column stats
-    * (file path relative to root -> column -> stat; empty when the
-    * version was written without `statsCols`), and per-file Bloom
-    * filters for equality skipping (same keying; empty without
-    * `bloomCols`). */
   /** One dir's index-block slice ref: where the block lives in its
     * `_idx` sidecar, plus the stat/bloom COLUMN NAMES the block covers —
     * carried on the #diridx manifest line so index-coverage inference
@@ -252,39 +247,37 @@ object VersionedTable {
         Map[String, Map[String, (String, Long, Int)]])]
   }
 
+  /** Parsed manifest: partition column names, the version's full schema,
+    * relative partition dir -> generation dir, and per live dir its row,
+    * data-file and byte counts, its content token and (when indexed) its
+    * `_idx` block ref — the reader guarantees the four per-dir counts
+    * and the token for every mapped dir. Per-file column stats and bloom
+    * refs live in the blocks, loaded lazily per dir. */
   private[graft] case class Manifest(partCols: Seq[String], schema: StructType,
                               mapping: Map[String, String],
-                              stats: Map[String, Map[String, ColStat]],
-                              blooms: Map[String, Map[String, Array[Byte]]],
                               txns: Map[String, Long],
-                              dirRows: Map[String, Long] = Map.empty,
-                              dirFiles: Map[String, Long] = Map.empty,
-                              bloomRefs: Map[String,
-                                Map[String, (String, Long, Int)]] = Map.empty,
-                              dvs: Map[String,
-                                (String, Long, Int, Long)] = Map.empty,
-                              dirBytes: Map[String, Long] = Map.empty,
-                              checks: Map[String, String] = Map.empty,
-                              derived: Map[String, (String, String)] =
-                                Map.empty,
-                              dirVers: Map[String, String] = Map.empty,
-                              fork: Option[(String, Int)] = None,
-                              op: Option[String] = None,
-                              idxRefs: Map[String, IdxRef] = Map.empty,
-                              keys: Seq[String] = Nil,
-                              props: Map[String, String] = Map.empty,
+                              dirRows: Map[String, Long],
+                              dirFiles: Map[String, Long],
+                              dvs: Map[String, (String, Long, Int, Long)],
+                              dirBytes: Map[String, Long],
+                              checks: Map[String, String],
+                              derived: Map[String, (String, String)],
+                              // the generation token of the commit that
+                              // last CHANGED each dir's LOGICAL rows —
+                              // maintenance rewrites (compact, small-file
+                              // compaction) carry it while real writes
+                              // bump it, so two versions' tokens agree
+                              // exactly when the dir's content does
+                              dirVers: Map[String, String],
+                              fork: Option[(String, Int)],
+                              op: Option[String],
+                              idxRefs: Map[String, IdxRef],
+                              keys: Seq[String],
+                              props: Map[String, String],
                               // per-commit expectation violation counts
                               // (round 10): what THIS commit's gate saw,
                               // NOT carried — the DLT event-log shape
-                              expectLog: Map[String, Long] = Map.empty) {
-    /** The generation token of the commit that last CHANGED this dir's
-      * LOGICAL rows — maintenance rewrites (compact, small-file
-      * compaction) carry it forward while real writes bump it, so two
-      * versions' tokens agree exactly when the dir's content does.
-      * None for pre-feature manifests (callers fall back to comparing
-      * physical generations). */
-    private[graft] def contentOf(rel: String): Option[String] =
-      dirVers.get(rel)
+                              expectLog: Map[String, Long]) {
     // one lazy fetch per sidecar object per Manifest instance: an eq
     // probe over N indexed files costs ONE sidecar GET, not N, and a
     // manifest read costs ZERO (refs are offsets, not payloads)
@@ -301,21 +294,22 @@ object VersionedTable {
       c
     }
 
-    /** The bloom bytes for (file, column) — inline (pre-sidecar
-      * manifests) or sliced out of the lazily-fetched sidecar object. */
+    private def sidecarSlice(fs: FileSystem, root: String, sc: String,
+                             off: Long, len: Int): Array[Byte] = {
+      val bytes = sidecarCache.getOrElseUpdate(sc, {
+        val in = fs.open(new Path(tableRoot(root), sc))
+        try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
+        finally in.close()
+      })
+      java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
+    }
+
+    /** The bloom bytes for (file, column), sliced out of the
+      * lazily-fetched `_bloomx` sidecar its dir's block points at. */
     private[graft] def bloomFor(fs: FileSystem, root: String, f: String,
                                 c: String): Option[Array[Byte]] =
-      blooms.get(f).flatMap(_.get(c)).orElse(
-        bloomRefs.get(f).flatMap(_.get(c))
-          .orElse(blockFor(fs, root, relOf(f))._2.get(f).flatMap(_.get(c)))
-          .map { case (sc, off, len) =>
-            val bytes = sidecarCache.getOrElseUpdate(sc, {
-              val in = fs.open(new Path(tableRoot(root), sc))
-              try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-              finally in.close()
-            })
-            java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
-          })
+      blockFor(fs, root, relOf(f))._2.get(f).flatMap(_.get(c))
+        .map { case (sc, off, len) => sidecarSlice(fs, root, sc, off, len) }
 
     /** The deletion vector (sorted deleted row positions) for file `f` —
       * sliced out of the lazily-fetched `_dvx.*` sidecar. Same one-GET-
@@ -323,30 +317,25 @@ object VersionedTable {
     private[graft] def dvFor(fs: FileSystem, root: String,
                              f: String): Option[Array[Long]] =
       dvs.get(f).map { case (sc, off, len, _) =>
-        val bytes = sidecarCache.getOrElseUpdate(sc, {
-          val in = fs.open(new Path(tableRoot(root), sc))
-          try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-          finally in.close()
-        })
-        deserializeDv(
-          java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len))
+        deserializeDv(sidecarSlice(fs, root, sc, off, len))
       }
 
-    // ----- per-dir index blocks (round 6) ----------------------------
+    // ----- per-dir index blocks --------------------------------------
     // The per-FILE index (stats + bloom refs) of every commit lives in
     // per-dir text blocks inside an `_idx.<v>` sidecar; the manifest
     // carries ONE `#diridx` slice ref per dir, so its size is
     // O(partitions), a commit writes index bytes only for the dirs it
     // touched, and a partition-pruned query loads only the surviving
     // dirs' blocks (one ranged read per dir, cached per Manifest
-    // instance). Inline #filestat/#filebloomref lines remain the
-    // legacy-manifest path; accessors below serve the union.
+    // instance). A dir without a ref is unindexed.
 
-    private type IdxBlock = (Map[String, Map[String, ColStat]],
+    private[graft] type IdxBlock = (Map[String, Map[String, ColStat]],
       Map[String, Map[String, (String, Long, Int)]])
 
-    private def blockFor(fs: FileSystem, root: String,
-                         rel: String): IdxBlock =
+    /** One dir's full index (stats + bloom refs) — per-dir consumers
+      * (rewrite index inference, metadata folds). */
+    private[graft] def blockFor(fs: FileSystem, root: String,
+                                rel: String): IdxBlock =
       caches.blocks.getOrElseUpdate(rel, idxRefs.get(rel) match {
         case None => (Map.empty, Map.empty)
         case Some(IdxRef(sc, off, len, _, _)) =>
@@ -362,58 +351,34 @@ object VersionedTable {
     private def relOf(f: String): String =
       f.substring(f.indexOf('/') + 1, f.lastIndexOf('/'))
 
-    /** All indexed file keys under `prefix` (= `$gen/$rel/`): inline
-      * legacy entries plus the dir's block — the per-dir enumeration
-      * [[selectScan]] prunes over. */
+    /** All indexed file keys under `prefix` (= `$gen/$rel/`) — the
+      * per-dir enumeration [[selectScan]] prunes over. */
     private[graft] def idxFilesUnder(fs: FileSystem, root: String,
                                      rel: String,
                                      prefix: String): Seq[String] = {
       val (bs, br) = blockFor(fs, root, rel)
-      ((stats.keySet ++ blooms.keySet ++ bloomRefs.keySet)
-        .filter(_.startsWith(prefix)) ++
-        (bs.keySet ++ br.keySet).filter(_.startsWith(prefix)))
-        .toSeq.sorted
+      (bs.keySet ++ br.keySet).filter(_.startsWith(prefix)).toSeq.sorted
     }
 
-    /** The recorded stat of (file, column) — inline or block. */
+    /** The recorded stat of (file, column). */
     private[graft] def statOf(fs: FileSystem, root: String, f: String,
                               column: String): Option[ColStat] =
-      stats.get(f).flatMap(_.get(column)).orElse(
-        blockFor(fs, root, relOf(f))._1.get(f).flatMap(_.get(column)))
+      blockFor(fs, root, relOf(f))._1.get(f).flatMap(_.get(column))
 
-    /** Columns with a bloom (inline, manifest ref, or block ref) for
-      * `f` — membership without fetching any payload beyond the dir's
-      * block. */
+    /** Columns with a bloom for `f` — membership without fetching any
+      * payload beyond the dir's block. */
     private[graft] def bloomColsOf(fs: FileSystem, root: String,
                                    f: String): Set[String] =
-      blooms.getOrElse(f, Map.empty).keySet ++
-        bloomRefs.getOrElse(f, Map.empty).keySet ++
-        blockFor(fs, root, relOf(f))._2.getOrElse(f, Map.empty).keySet
-
-    /** One dir's full index (stats + bloom refs), inline ++ block —
-      * per-dir consumers (rewrite index inference, metadata folds). */
-    private[graft] def statsAndRefsUnder(fs: FileSystem, root: String,
-                                         rel: String)
-        : (Map[String, Map[String, ColStat]],
-           Map[String, Map[String, (String, Long, Int)]]) = {
-      val prefix = mapping.get(rel).map(g => s"$g/$rel/")
-      val (bs, br) = blockFor(fs, root, rel)
-      def inl[A](x: Map[String, A]) = prefix match {
-        case Some(p) => x.filter(_._1.startsWith(p))
-        case None => Map.empty[String, A]
-      }
-      (inl(stats) ++ bs, inl(bloomRefs) ++ br)
-    }
+      blockFor(fs, root, relOf(f))._2.getOrElse(f, Map.empty).keySet
 
     /** Every dir's full index, materialized — for whole-table consumers
-      * (column drop, files metadata table, vacuum liveness, index
-      * coverage inference). One ranged read per dir block. */
+      * (column DDL, files metadata table). One ranged read per dir
+      * block. */
     private[graft] def materializeIdx(fs: FileSystem, root: String)
-        : (Map[String, Map[String, ColStat]],
-           Map[String, Map[String, (String, Long, Int)]]) = {
+        : IdxBlock = {
       val blocks = idxRefs.keysIterator.map(blockFor(fs, root, _)).toSeq
-      (stats ++ blocks.iterator.flatMap(_._1),
-        bloomRefs ++ blocks.iterator.flatMap(_._2))
+      (blocks.iterator.flatMap(_._1).toMap,
+        blocks.iterator.flatMap(_._2).toMap)
     }
   }
 
@@ -465,31 +430,23 @@ object VersionedTable {
     readManifestFile(fs, new Path(tableRoot(root), manifestName(root, version)),
       s"$root v$version")
 
-  /** Parse a manifest by FILE path — shared by version-keyed reads and
-    * the ref-scoped vacuum's table-wide liveness sweep (which must parse
-    * OTHER refs' manifests it would never address by version). */
   private def b64dec(x: String) = new String(
     java.util.Base64.getDecoder.decode(x), StandardCharsets.UTF_8)
 
-  /** #filestat lines -> file -> column -> ColStat. Shared by the manifest
-    * parser (legacy inline lines) and the per-dir index-block parser. */
+  /** #filestat lines of an index block -> file -> column -> ColStat. */
   private def parseStatLines(lines: Array[String])
       : Map[String, Map[String, ColStat]] =
     lines.filter(_.startsWith("#filestat\t")).map { line =>
       val parts = line.split("\t", -1)
-      // 6 fields = pre-type-tag lines (no tag -> stat unusable for
-      // skipping, file scans); 7 = current
-      require(parts.length == 6 || parts.length == 7,
-        s"malformed #filestat line: $line")
+      require(parts.length == 7, s"malformed #filestat line: $line")
       val opt = (x: String) => if (x == "-") None else Some(b64dec(x))
       (b64dec(parts(1)), b64dec(parts(2)),
-        ColStat(opt(parts(3)), opt(parts(4)), parts(5).toLong,
-          parts.lift(6).filter(_ != "-").map(b64dec)))
+        ColStat(opt(parts(3)), opt(parts(4)), parts(5).toLong, opt(parts(6))))
     }.groupBy(_._1).map { case (f, rows) =>
       f -> rows.map { case (_, c, st) => c -> st }.toMap }
 
-  /** #filebloomref lines -> file -> column -> (sidecar, offset, length).
-    * Shared like [[parseStatLines]]. */
+  /** #filebloomref lines of an index block -> file -> column ->
+    * (sidecar, offset, length). */
   private def parseBloomRefLines(lines: Array[String])
       : Map[String, Map[String, (String, Long, Int)]] =
     lines.filter(_.startsWith("#filebloomref\t")).map { l =>
@@ -500,6 +457,25 @@ object VersionedTable {
     }.groupBy(_._1).map { case (f, rows) =>
       f -> rows.map { case (_, c, ref) => c -> ref }.toMap }
 
+  /** The directives [[stageVersion]] writes first: the header, then the
+    * per-stream `#txn` watermarks ([[readTxnDirectives]] stops after
+    * them). */
+  private val LeadingDirectives = Set("#graft-manifest", "#partcols",
+    "#schema", "#fork", "#op", "#expectlog", "#keys", "#txn")
+
+  /** Every directive [[stageVersion]] writes — the manifest format is
+    * exactly these plus `<relDir>\t<gen>` mapping lines, and the reader
+    * refuses anything else. */
+  private val ManifestDirectives = LeadingDirectives ++ Set("#constraint",
+    "#derivedpart", "#prop", "#dirrows", "#dirfiles", "#dirbytes", "#dirver",
+    "#diridx", "#filedv")
+
+  /** Parse a manifest by FILE path — shared by version-keyed reads and
+    * the ref-scoped vacuum's table-wide liveness sweep (which must parse
+    * OTHER refs' manifests it would never address by version). Accepts
+    * only the `#graft-manifest\t3` shape the current writer emits: an
+    * older header, an unknown directive, or a mapped dir missing any of
+    * its per-dir lines fails loudly. */
   private def readManifestFile(fs: FileSystem, path: Path,
                                what: String): Manifest = {
     val in = fs.open(path)
@@ -509,13 +485,13 @@ object VersionedTable {
       new String(out.toByteArray, StandardCharsets.UTF_8)
     } finally in.close()
     val lines = text.split("\n").filter(_.nonEmpty)
-    // v2 = inline file index; v3 = per-dir _idx blocks (#diridx). The
-    // bump makes PRE-BLOCK binaries fail loudly on v3 tables instead of
-    // vacuuming "unreferenced" _bloomx sidecars that v3 blocks point at.
-    require(lines.headOption.exists(l =>
-        l.startsWith("#graft-manifest\t2") ||
-        l.startsWith("#graft-manifest\t3")),
-      s"unrecognized manifest format at $what")
+    def formatError(detail: String) = throw new IllegalArgumentException(
+      s"unrecognized manifest format at $what: $detail")
+    if (!lines.headOption.contains("#graft-manifest\t3"))
+      formatError(s"header ${lines.headOption.getOrElse("<empty>")}")
+    lines.find(l => l.startsWith("#") &&
+        !ManifestDirectives.contains(l.takeWhile(_ != '\t')))
+      .foreach(l => formatError(s"line ${l.takeWhile(_ != '\t')}"))
     val partCols = lines.collectFirst {
       case l if l.startsWith("#partcols\t") =>
         l.split("\t").toSeq.drop(1)
@@ -528,109 +504,83 @@ object VersionedTable {
       val Array(part, gen) = line.split("\t")
       part -> gen
     }.toMap
-    // additive directive: older manifests simply have none (no skipping);
-    // values are base64 so tabs/newlines inside data can't break the format
-    def b64d(s: String) = new String(
-      java.util.Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
-    val stats = parseStatLines(lines)
     // one line PER STREAM: every manifest carries the full per-stream
     // watermark map forward (Delta's SetTransaction idea), so maintenance
     // commits + vacuum can never erase a stream's exactly-once state
     val txns = lines.filter(_.startsWith("#txn\t")).map { l =>
       val parts = l.split("\t", -1)
-      (b64d(parts(1)), parts(2).toLong)
+      (b64dec(parts(1)), parts(2).toLong)
     }.groupBy(_._1).map { case (sid, xs) => sid -> xs.map(_._2).max }
-    val blooms = lines.filter(_.startsWith("#filebloom\t")).map { line =>
-      val parts = line.split("\t", -1)
-      require(parts.length == 4, s"malformed #filebloom line: $line")
-      (b64d(parts(1)), b64d(parts(2)),
-        java.util.Base64.getDecoder.decode(parts(3)))
-    }.groupBy(_._1).map { case (f, rows) =>
-      f -> rows.map { case (_, c, b) => c -> b }.toMap }
-    // additive (absent in pre-r6 manifests): exact row count and data-file
-    // count per live partition dir — the metadata-only COUNT(*) index
-    // (fastCount) and the coverage proof for metadata MIN/MAX (a column's
-    // file stats are complete for a dir iff usable-stat files == dirfiles)
-    val dirRows = lines.filter(_.startsWith("#dirrows\t")).map { l =>
+    // exact row count, data-file count and data bytes per live partition
+    // dir — the metadata-only COUNT(*) index (fastCount), the coverage
+    // proof for metadata MIN/MAX (a column's file stats are complete for
+    // a dir iff usable-stat files == dirfiles) and the relation's
+    // sizeInBytes statistic, all without any file listing
+    def perDir(tag: String) = lines.filter(_.startsWith(s"$tag\t")).map { l =>
       val parts = l.split("\t", -1)
-      (b64d(parts(1)), parts(2).toLong)
+      (b64dec(parts(1)), parts(2))
     }.toMap
-    val dirFiles = lines.filter(_.startsWith("#dirfiles\t")).map { l =>
-      val parts = l.split("\t", -1)
-      (b64d(parts(1)), parts(2).toLong)
-    }.toMap
-    // additive (round 6): exact data bytes per live partition dir — the
-    // relation's sizeInBytes statistic (broadcast/runtime-filter
-    // decisions) without any file listing
-    val dirBytes = lines.filter(_.startsWith("#dirbytes\t")).map { l =>
-      val parts = l.split("\t", -1)
-      (b64d(parts(1)), parts(2).toLong)
-    }.toMap
-    // sidecar bloom references (round 6): blooms live in _bloomx.<N>
-    // objects, the manifest holds (sidecar, offset, length) — at 100k
-    // files the manifest stays file-list-sized instead of carrying
-    // megabytes of base64 filter payload every read
-    val bloomRefs = parseBloomRefLines(lines)
-    // deletion vectors (round 6): per-file deleted row positions living
-    // in _dvx.<N> sidecars — merge-on-read DELETE; absent in older
-    // manifests (no deletes recorded)
+    val dirRows = perDir("#dirrows").map { case (r, n) => r -> n.toLong }
+    val dirFiles = perDir("#dirfiles").map { case (r, n) => r -> n.toLong }
+    val dirBytes = perDir("#dirbytes").map { case (r, n) => r -> n.toLong }
+    // content-version tokens: the gen that last changed each dir's
+    // logical rows — what lets a change feed see THROUGH maintenance
+    // rewrites
+    val dirVers = perDir("#dirver")
+    missingDirLine(mapping, dirRows, dirFiles, dirBytes, dirVers)
+      .foreach(formatError)
+    // deletion vectors: per-file deleted row positions living in _dvx.<N>
+    // sidecars — merge-on-read DELETE
     val dvs = lines.filter(_.startsWith("#filedv\t")).map { l =>
       val parts = l.split("\t", -1)
       require(parts.length == 6, s"malformed #filedv line: $l")
-      b64d(parts(1)) -> (parts(2), parts(3).toLong, parts(4).toInt,
+      b64dec(parts(1)) -> (parts(2), parts(3).toLong, parts(4).toInt,
         parts(5).toLong)
     }.toMap
-    // CHECK constraints (round 6): named SQL predicates every write must
-    // satisfy; carried verbatim through every commit like the txn map
+    // CHECK constraints: named SQL predicates every write must satisfy;
+    // carried verbatim through every commit like the txn map
     val checks = lines.filter(_.startsWith("#constraint\t")).map { l =>
       val parts = l.split("\t", -1)
-      (b64d(parts(1)), b64d(parts(2)))
+      (b64dec(parts(1)), b64dec(parts(2)))
     }.toMap
-    // derived-partition registrations (round 6): partCol -> (kind, srcCol);
+    // derived-partition registrations: partCol -> (kind, srcCol);
     // carried verbatim through every commit like checks
     val derived = lines.filter(_.startsWith("#derivedpart\t")).map { l =>
       val parts = l.split("\t", -1)
-      b64d(parts(1)) -> (b64d(parts(2)), b64d(parts(3)))
+      b64dec(parts(1)) -> (b64dec(parts(2)), b64dec(parts(3)))
     }.toMap
-    // content-version tokens (round 6): the gen that last changed each
-    // dir's logical rows — what lets a change feed see THROUGH
-    // maintenance rewrites
-    val dirVers = lines.filter(_.startsWith("#dirver\t")).map { l =>
-      val parts = l.split("\t", -1)
-      (b64d(parts(1)), parts(2))
-    }.toMap
-    // branch fork point (round 6): (source branch name or "" for main,
-    // source version) — written by createBranch, carried by every branch
+    // branch fork point: (source branch name or "" for main, source
+    // version) — written by createBranch, carried by every branch
     // commit; what fastForward's three-way merge anchors on
     val fork = lines.collectFirst { case l if l.startsWith("#fork\t") =>
       val parts = l.split("\t", -1)
-      (if (parts(1) == "-") "" else b64d(parts(1)), parts(2).toInt)
+      (if (parts(1) == "-") "" else b64dec(parts(1)), parts(2).toInt)
     }
-    // operation name (round 6): what kind of commit produced this
-    // version — merge/delete/update/compact/... — for DESCRIBE HISTORY
+    // operation name: what kind of commit produced this version —
+    // merge/delete/update/compact/... — for DESCRIBE HISTORY
     val op = lines.collectFirst { case l if l.startsWith("#op\t") =>
-      b64d(l.split("\t", -1)(1)) }
-    // per-dir index-block refs (round 6): the file-level stats/bloom-ref
-    // index lives in `_idx.<v>` sidecar blocks, one slice ref per dir —
-    // the manifest stays O(partitions) at any file count
-    // the table's merge keys (round 6): recorded at every upsert so
-    // SQL-only consumers (graft_changes) need no out-of-band knowledge
+      b64dec(l.split("\t", -1)(1)) }
+    // the table's merge keys: recorded at every upsert so SQL-only
+    // consumers (graft_changes) need no out-of-band knowledge
     val keyCols = lines.collectFirst {
       case l if l.startsWith("#keys\t") => l.split("\t").toSeq.drop(1)
     }.getOrElse(Nil)
-    // table properties (round 6): free-form governance key/values,
-    // carried verbatim through every commit like the CHECK registry
+    // table properties: free-form governance key/values, carried
+    // verbatim through every commit like the CHECK registry
     val props = lines.filter(_.startsWith("#prop\t")).map { l =>
       val parts = l.split("\t", -1)
       require(parts.length == 3, s"malformed #prop line: $l")
-      (b64d(parts(1)), b64d(parts(2)))
+      (b64dec(parts(1)), b64dec(parts(2)))
     }.toMap
+    // per-dir index-block refs: the file-level stats/bloom-ref index
+    // lives in `_idx.<v>` sidecar blocks, one slice ref per dir — the
+    // manifest stays O(partitions) at any file count
     val idxRefs = lines.filter(_.startsWith("#diridx\t")).map { l =>
       val parts = l.split("\t", -1)
       require(parts.length == 7, s"malformed #diridx line: $l")
       def cols(x: String) =
-        b64d(x).split("\t").filter(_.nonEmpty).toSeq
-      b64d(parts(1)) -> IdxRef(parts(2), parts(3).toLong, parts(4).toInt,
+        b64dec(x).split("\t").filter(_.nonEmpty).toSeq
+      b64dec(parts(1)) -> IdxRef(parts(2), parts(3).toLong, parts(4).toInt,
         cols(parts(5)), cols(parts(6)))
     }.toMap
     // per-commit expectation gate counts (round 10): what THIS commit's
@@ -638,11 +588,11 @@ object VersionedTable {
     val expectLog = lines.filter(_.startsWith("#expectlog\t")).map { l =>
       val parts = l.split("\t", -1)
       require(parts.length == 3, s"malformed #expectlog line: $l")
-      b64d(parts(1)) -> parts(2).toLong
+      b64dec(parts(1)) -> parts(2).toLong
     }.toMap
-    Manifest(partCols, schema, mapping, stats, blooms, txns, dirRows,
-      dirFiles, bloomRefs, dvs, dirBytes, checks, derived, dirVers, fork,
-      op, idxRefs, keyCols, props, expectLog)
+    Manifest(partCols, schema, mapping, txns, dirRows, dirFiles, dvs,
+      dirBytes, checks, derived, dirVers, fork, op, idxRefs, keyCols, props,
+      expectLog)
   }
 
   /** Exact, portable text rendering of a min/max value for the manifest —
@@ -748,7 +698,7 @@ object VersionedTable {
           s"history: ${history(spark, root).mkString(",")})")
     // a partition-less mapping (empty upsert on a fresh table, or a
     // WHERE-less DELETE that cleared every dir) is a VALID 0-row
-    // version: the v2 manifest always carries #schema, so scanUnion
+    // version: the manifest always carries #schema, so scanUnion
     // synthesizes the correctly-typed empty frame and a later upsert
     // repopulates it — no special-casing here
     readManifest(fs, root, v)
@@ -1487,8 +1437,7 @@ object VersionedTable {
       case None =>
         // no pruning possible: report (n, n) from the per-dir file
         // counts — zero index I/O for a pure observability answer
-        val total = m.mapping.keysIterator
-          .map(rel => m.dirFiles.getOrElse(rel, 0L)).sum.toInt
+        val total = m.mapping.keysIterator.map(m.dirFiles).sum.toInt
         (total, total)
       case Some(sel) => (sel.kept, sel.indexedTotal)
     }
@@ -1508,8 +1457,9 @@ object VersionedTable {
   }
 
   /** Per-file min/max/null-count for `statsCols`, per-file Bloom filters
-    * for `bloomCols`, and per-dir row/file/byte counts over the data
-    * files just written under `$root/$genDir`.
+    * for `bloomCols` (payloads written to the version's `_bloomx`
+    * sidecar, refs returned), and per-dir row/file/byte counts over the
+    * data files just written into version `version`'s generation dir.
     *
     * Fast path (no Spark job at all): the parquet FOOTERS the write just
     * produced already carry per-row-group min/max/null-count and row
@@ -1528,15 +1478,16 @@ object VersionedTable {
     * exactly what the read-back path would infer, so the recorded
     * `dtJson` and rendered values are identical either way. */
   private def collectFileStats(spark: SparkSession, root: String,
-                               genDir: String, partCols: Seq[String],
+                               version: Int, partCols: Seq[String],
                                statsCols: Seq[String],
                                bloomCols: Seq[String] = Nil,
                                bloomBits: Long = 8192L,
                                colmap: Map[String, String] = Map.empty,
                                schema: StructType = null)
       : (Map[String, Map[String, ColStat]],
-         Map[String, Map[String, Array[Byte]]],
+         Map[String, Map[String, (String, Long, Int)]],
          Map[String, Long], Map[String, Long], Map[String, Long]) = {
+    val genDir = genName(root, version)
     val footersOn =
       spark.conf.get("spark.graft.stats.footer", "true").toBoolean
     val bloomsWanted = schema != null &&
@@ -1548,10 +1499,37 @@ object VersionedTable {
     viaFooters match {
       case Some((stats, dirRows, dirFiles, dirBytes)) =>
         (stats, Map.empty, dirRows, dirFiles, dirBytes)
-      case None => collectFileStatsScan(spark, root, genDir, partCols,
-        statsCols, bloomCols, bloomBits, colmap)
+      case None =>
+        val (stats, blooms, dirRows, dirFiles, dirBytes) =
+          collectFileStatsScan(spark, root, genDir, partCols, statsCols,
+            bloomCols, bloomBits, colmap)
+        (stats, writeBloomSidecar(fsFor(spark, root), root, version, blooms),
+          dirRows, dirFiles, dirBytes)
     }
   }
+
+  /** Write fresh bloom payloads into version `v`'s ONE `_bloomx`
+    * sidecar object and return their refs (sidecar, offset, length) —
+    * the index blocks record refs, never payloads. */
+  private def writeBloomSidecar(fs: FileSystem, root: String, v: Int,
+                                blooms: Map[String, Map[String, Array[Byte]]])
+      : Map[String, Map[String, (String, Long, Int)]] =
+    if (blooms.isEmpty) Map.empty
+    else {
+      val name = bloomSidecar(root, v)
+      val out = fs.create(new Path(tableRoot(root), name), false)
+      try {
+        var off = 0L
+        blooms.toSeq.sortBy(_._1).map { case (f, cols) =>
+          f -> cols.toSeq.sortBy(_._1).map { case (c, b) =>
+            out.write(b)
+            val ref = c -> ((name, off, b.length))
+            off += b.length
+            ref
+          }.toMap
+        }.toMap
+      } finally out.close()
+    }
 
   /** The read-back implementation of [[collectFileStats]]: ONE
     * delta-sized aggregation grouped by `_metadata.file_path` (the files
@@ -1943,59 +1921,85 @@ object VersionedTable {
     if (bloomBits > 0) bloomBits
     else fileRows.fold(65536L)(r => math.max(8192L, r.toLong * 10))
 
+  /** [[collectFileStats]]'s result for a write that produced no dirs. */
+  private val noFreshIndex = (Map.empty[String, Map[String, ColStat]],
+    Map.empty[String, Map[String, (String, Long, Int)]],
+    Map.empty[String, Long], Map.empty[String, Long], Map.empty[String, Long])
+
   /** What a [[stageVersion]] `stage` callback hands back for the
     * manifest. */
   private case class Staged(partCols: Seq[String], schema: StructType,
                             mapping: Map[String, String],
-                            stats: Map[String, Map[String, ColStat]],
-                            blooms: Map[String, Map[String, Array[Byte]]] =
+                            // the file index written into THIS version's
+                            // _idx blocks: per-file stats and bloom refs
+                            // (sidecar, offset, length) — fresh ones
+                            // point into `_bloomx.<next>`, re-emitted
+                            // ones (column DDL, a schema-changing
+                            // fast-forward) into older sidecars
+                            stats: Map[String, Map[String, ColStat]] =
                               Map.empty,
-                            txns: Map[String, Long] = Map.empty,
-                            dirRows: Map[String, Long] = Map.empty,
-                            dirFiles: Map[String, Long] = Map.empty,
-                            bloomRefs: Map[String,
+                            blooms: Map[String,
                               Map[String, (String, Long, Int)]] = Map.empty,
+                            txns: Map[String, Long] = Map.empty,
                             dvBytes: Map[String, Array[Byte]] = Map.empty,
                             dvRefs: Map[String,
                               (String, Long, Int, Long)] = Map.empty,
-                            dirBytes: Map[String, Long] = Map.empty,
                             checks: Map[String, String] = Map.empty,
                             // no defaults: EVERY staging site must decide
-                            // these carries — silently dropping a derived
-                            // registration loses invariants; a stale
-                            // content token makes a feed MISS changes; a
-                            // dropped index ref silently un-indexes a dir
+                            // these carries — a mapped dir without its
+                            // counts and token cannot be staged; silently
+                            // dropping a derived registration loses
+                            // invariants; a stale content token makes a
+                            // feed MISS changes; a dropped index ref
+                            // silently un-indexes a dir
+                            dirRows: Map[String, Long],
+                            dirFiles: Map[String, Long],
+                            dirBytes: Map[String, Long],
                             derived: Map[String, (String, String)],
                             dirVers: Map[String, String],
                             // carried per-dir index-block refs (rel ->
-                            // slice into an OLDER _idx sidecar); fresh
-                            // index content rides `stats`/`blooms`/
-                            // `bloomRefs` and is written into THIS
-                            // version's _idx blocks by stageVersion
+                            // slice into an OLDER _idx sidecar); a dir
+                            // with fresh `stats`/`blooms` gets a new block
                             idxRefs: Map[String, IdxRef],
                             // table properties: carried verbatim like
                             // checks — no default, a forgotten carry
                             // silently drops governance
                             props: Map[String, String])
 
-  /** Full-coverage content-token map for a manifest: every live dir's
-    * token, falling back to its physical generation for dirs written
-    * before the feature — what metadata-only commits carry so coverage
-    * becomes complete over time. */
-  private def fullDirVers(m: Manifest): Map[String, String] =
-    m.mapping.map { case (rel, g) =>
-      rel -> m.dirVers.getOrElse(rel, {
-        // pre-feature fallback: the physical generation alone is NOT
-        // content — two manifests can share a gen while differing by
-        // deletion vectors (e.g. restores of v0 and its DV-deleted v1);
-        // qualify the token with a deterministic DV fingerprint or a
-        // feed spanning them would silently skip the dir
-        val dv = dvsUnder(m, s"$g/$rel/")
-        if (dv.isEmpty) g
-        else g + "+dv" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.unorderedHash(dv))
-      })
-    }
+  /** A metadata-only commit of `m`: mapping, per-dir counts and tokens,
+    * index refs, deletion vectors, watermarks and registries all carried
+    * verbatim — callers `copy` in the one piece they change. */
+  private def carryAll(m: Manifest): Staged =
+    Staged(m.partCols, m.schema, m.mapping, txns = m.txns, dvRefs = m.dvs,
+      checks = m.checks, dirRows = m.dirRows, dirFiles = m.dirFiles,
+      dirBytes = m.dirBytes, derived = m.derived, dirVers = m.dirVers,
+      idxRefs = m.idxRefs, props = m.props)
+
+  /** A file index with the columns `drop` selects removed — what column
+    * DDL re-emits (files left with no entry drop out). */
+  private def withoutCols[A](idx: Map[String, Map[String, A]],
+                             drop: String => Boolean)
+      : Map[String, Map[String, A]] =
+    idx.map { case (f, cs) => f -> cs.filter { case (c, _) => !drop(c) } }
+      .filter(_._2.nonEmpty)
+
+  /** The first per-dir line a mapped dir lacks — the reader refuses such
+    * a manifest, so [[stageVersion]] refuses to stage one. */
+  private def missingDirLine(mapping: Map[String, String],
+                             dirRows: Map[String, Long],
+                             dirFiles: Map[String, Long],
+                             dirBytes: Map[String, Long],
+                             dirVers: Map[String, String]): Option[String] =
+    Seq("#dirrows" -> dirRows.keySet, "#dirfiles" -> dirFiles.keySet,
+        "#dirbytes" -> dirBytes.keySet, "#dirver" -> dirVers.keySet)
+      .iterator.flatMap { case (tag, covered) =>
+        mapping.keys.find(rel => !covered.contains(rel))
+          .map(rel => s"no $tag line for mapped dir '$rel'")
+      }.nextOption()
+
+  /** The `_bloomx` sidecar holding version `v`'s fresh bloom payloads. */
+  private def bloomSidecar(root: String, v: Int): String =
+    s"_bloomx.${brNs(root)}$v"
 
   /** Carry-forward filter for FLAT file-keyed maps (DV refs), mirroring
     * the nested `carry` the stats/blooms use: an entry survives iff its
@@ -2008,6 +2012,11 @@ object VersionedTable {
       val dirOf = fileRel.lastIndexOf('/')
       dirOf > 0 && liveDirPrefixes.contains(fileRel.substring(0, dirOf + 1))
     }
+
+  /** Recorded data bytes of the given live dirs — the size hint the
+    * static-vs-AQE gate reads for rewrites, served from the manifest. */
+  private def dirsBytes(m: Manifest, rels: Iterator[String]): BigInt =
+    rels.map(r => BigInt(m.dirBytes(r))).sum
 
   /** The session a staged commit's write-side queries should EXECUTE
     * under, keyed by `spark.graft.commit.aqe`:
@@ -2036,15 +2045,6 @@ object VersionedTable {
     * re-bind onto at their terminal action (SessionBridge.rebind).
     * Cloning per commit keeps PAR-N benches and concurrent writers
     * fully isolated. */
-  /** Size hint for a FULL-table rewrite (compact/repartition): the sum
-    * of every live dir's recorded bytes — None (keep AQE) when any dir
-    * predates byte tracking. */
-  private def tableBytesHint(m: Manifest): Option[BigInt] =
-    m.mapping.keysIterator.map(m.dirBytes.get).foldLeft(Option(BigInt(0))) {
-      case (Some(acc), Some(b)) => Some(acc + b)
-      case _ => None
-    }
-
   private def commitSession(spark: SparkSession,
                             sizeHint: => Option[BigInt]): SparkSession = {
     val small = spark.conf.get("spark.graft.commit.aqe", "auto") match {
@@ -2129,41 +2129,25 @@ object VersionedTable {
     // already static (e.g. a frame built ON the clone by a nested
     // operator): re-cloning the clone would leak sessions for nothing
     if (df.sparkSession.conf.get("spark.sql.adaptive.enabled",
-        "true") == "false") {
-      if (sys.props.contains("graft.smallquery.debug"))
-        // scalastyle:off println
-        println("[smallQuery] already-static session, pass-through")
-        // scalastyle:on println
-      df
-    } else {
+        "true") == "false") df
+    else {
       val hint = for { own <- leafBytesHint(df); ex <- extraBytes }
         yield own + ex
-      val s = commitSession(df.sparkSession, hint)
-      if (sys.props.contains("graft.smallquery.debug"))
-        // scalastyle:off println
-        println(s"[smallQuery] hint=$hint static=${s ne df.sparkSession} " +
-          df.queryExecution.optimizedPlan.collectLeaves()
-            .map(l => l.getClass.getSimpleName + ":" + l.stats.sizeInBytes)
-            .mkString(" "))
-        // scalastyle:on println
-      org.apache.spark.sql.graftbridge.SessionBridge.rebind(s, df)
+      org.apache.spark.sql.graftbridge.SessionBridge.rebind(
+        commitSession(df.sparkSession, hint), df)
     }
 
   /** Sum of the CURRENT version's recorded per-dir bytes for a
     * versioned table — the real stored size, served from the manifest
-    * with no Spark job. None when the table has no committed version or
-    * any live dir lacks a recorded size (legacy manifests):
-    * conservative for the [[smallQuery]] gate. */
+    * with no Spark job. None when the table has no committed version (or
+    * its manifest cannot be read): conservative for the [[smallQuery]]
+    * gate. */
   private[graft] def recordedBytes(spark: SparkSession,
                                    root: String): Option[BigInt] =
     scala.util.Try {
-      val fs = fsFor(spark, root)
-      currentVersion(spark, root).flatMap { v =>
-        val m = readManifest(fs, root, v)
-        val live = m.mapping.keys.toSeq
-        if (live.forall(m.dirBytes.contains))
-          Some(live.map(r => BigInt(m.dirBytes(r))).sum)
-        else None
+      currentVersion(spark, root).map { v =>
+        val m = readManifest(fsFor(spark, root), root, v)
+        dirsBytes(m, m.mapping.keysIterator)
       }
     }.toOption.flatten
 
@@ -2191,7 +2175,7 @@ object VersionedTable {
     * [[compact]]: claim `_manifest.<next>` create-exclusive (the
     * concurrency guard — of two racing writers exactly one wins), run
     * `stage` (which writes `$root/gen<next>` and returns the manifest's
-    * partCols/schema/mapping/file-stats), then fill in the v2 manifest.
+    * partCols/schema/mapping/file index), then fill in the v3 manifest.
     * On ANY failure the claim AND the half-staged generation dir are
     * retracted — only the claim owner may do this — so an immediate retry
     * starts clean instead of tripping over its own leftovers ('path
@@ -2215,6 +2199,9 @@ object VersionedTable {
           s"lost the staging race for version $next at $root", e) }
     try {
       val st = stage(genDir)
+      missingDirLine(st.mapping, st.dirRows, st.dirFiles, st.dirBytes,
+        st.dirVers).foreach(detail => throw new IllegalStateException(
+          s"refusing to stage version $next at $root: $detail"))
       val b64 = (s: String) => java.util.Base64.getEncoder
         .encodeToString(s.getBytes(StandardCharsets.UTF_8))
       val opt = (o: Option[String]) => o.fold("-")(b64)
@@ -2240,66 +2227,32 @@ object VersionedTable {
         s"#op\t${b64(op)}\n" + expectLines +
         (if (keys.isEmpty) ""
          else s"#keys\t${keys.mkString("\t")}\n")
-      val statLines = st.stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-        cols.toSeq.sortBy(_._1).map { case (c, s) =>
-          s"#filestat\t${b64(f)}\t${b64(c)}\t${opt(s.min)}\t${opt(s.max)}\t${s.nulls}\t${opt(s.dtJson)}\n"
-        }
-      }
-      // fresh bloom BYTES (plus any inline blooms carried from a
-      // pre-sidecar manifest) land in ONE `_bloomx.<next>` sidecar
-      // object; the manifest records (sidecar, offset, length) — carried
-      // refs to older sidecars pass through verbatim (sidecars are
-      // immutable; vacuum retains every sidecar a retained manifest
-      // references)
-      val sidecarName = s"_bloomx.${brNs(root)}$next"
-      val flatBlooms = st.blooms.toSeq.sortBy(_._1).flatMap {
-        case (f, cols) => cols.toSeq.sortBy(_._1).map {
-          case (c, b) => (f, c, b) }
-      }
-      val freshRefs: Seq[(String, String, (String, Long, Int))] =
-        if (flatBlooms.isEmpty) Seq.empty
-        else {
-          val sc = fs.create(new Path(tableRoot(root), sidecarName), false)
-          try {
-            var off = 0L
-            flatBlooms.map { case (f, c, b) =>
-              sc.write(b)
-              val ref = (f, c, (sidecarName, off, b.length))
-              off += b.length
-              ref
-            }
-          } finally sc.close()
-        }
-      val allRefs = st.bloomRefs.toSeq.flatMap { case (f, cols) =>
-        cols.toSeq.map { case (c, ref) => (f, c, ref) } } ++ freshRefs
-      val bloomLines = allRefs.sortBy(r => (r._1, r._2)).map {
-        case (f, c, (sc, off, len)) =>
-          s"#filebloomref\t${b64(f)}\t${b64(c)}\t$sc\t$off\t$len\n"
-      }
-      // this version's file-level index (fresh stats + all bloom refs
-      // riding the Staged maps — fresh AND legacy-inline-carried, which
-      // migrates pre-block manifests into blocks over time) is written
-      // as per-dir text blocks in ONE `_idx.<next>` sidecar; the
-      // manifest gets one #diridx slice ref per dir, so its own size is
-      // O(partitions) regardless of file count, and a partition-pruned
-      // read fetches only the surviving dirs' blocks
+      // this version's file-level index (the stats and bloom refs riding
+      // Staged) is written as per-dir text blocks in ONE `_idx.<next>`
+      // sidecar; the manifest gets one #diridx slice ref per dir, so its
+      // own size is O(partitions) regardless of file count, and a
+      // partition-pruned read fetches only the surviving dirs' blocks
       val relOfKey = (f: String) =>
         f.substring(f.indexOf('/') + 1, f.lastIndexOf('/'))
       val idxSidecarName = s"_idx.${brNs(root)}$next"
-      val statByDir = statLines.groupBy { l =>
-        relOfKey(new String(java.util.Base64.getDecoder.decode(
-          l.split("\t", -1)(1)), StandardCharsets.UTF_8)) }
-      val bloomByDir = bloomLines.groupBy { l =>
-        relOfKey(new String(java.util.Base64.getDecoder.decode(
-          l.split("\t", -1)(1)), StandardCharsets.UTF_8)) }
+      val statByDir = st.stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+        cols.toSeq.sortBy(_._1).map { case (c, s) => relOfKey(f) ->
+          s"#filestat\t${b64(f)}\t${b64(c)}\t${opt(s.min)}\t${opt(s.max)}\t${s.nulls}\t${opt(s.dtJson)}\n"
+        }
+      }.groupMap(_._1)(_._2)
+      val bloomByDir = st.blooms.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+        cols.toSeq.sortBy(_._1).map { case (c, (sc, off, len)) =>
+          relOfKey(f) -> s"#filebloomref\t${b64(f)}\t${b64(c)}\t$sc\t$off\t$len\n"
+        }
+      }.groupMap(_._1)(_._2)
       val freshIdxDirs = (statByDir.keySet ++ bloomByDir.keySet).toSeq.sorted
       // covered column names per fresh dir ride the ref (and then the
       // #diridx line), so coverage inference never opens the sidecar
-      val statColsByDir = st.stats.toSeq.groupBy(kv => relOfKey(kv._1))
-        .map { case (rel, kvs) =>
+      def colsByDir[A](x: Map[String, Map[String, A]]) =
+        x.toSeq.groupBy(kv => relOfKey(kv._1)).map { case (rel, kvs) =>
           rel -> kvs.flatMap(_._2.keys).distinct.sorted }
-      val bloomColsByDir = allRefs.groupBy(r => relOfKey(r._1))
-        .map { case (rel, rs) => rel -> rs.map(_._2).distinct.sorted }
+      val statColsByDir = colsByDir(st.stats)
+      val bloomColsByDir = colsByDir(st.blooms)
       val freshIdxRefs: Seq[(String, IdxRef)] =
         if (freshIdxDirs.isEmpty) Seq.empty
         else {
@@ -2377,7 +2330,7 @@ object VersionedTable {
       // exists lets a racing writer claim this version and collide with
       // our half-deleted generation dir
       fs.delete(new Path(tableRoot(root), genDir), true)
-      fs.delete(new Path(tableRoot(root), s"_bloomx.${brNs(root)}$next"), false)
+      fs.delete(new Path(tableRoot(root), bloomSidecar(root, next)), false)
       fs.delete(new Path(tableRoot(root), s"_dvx.${brNs(root)}$next"), false)
       fs.delete(new Path(tableRoot(root), s"_idx.${brNs(root)}$next"), false)
       fs.delete(manifestPath, false)
@@ -2534,17 +2487,10 @@ object VersionedTable {
         else priorMapping.filter { case (p, _) => valueOf.contains(p) }
       // the write's true input = delta + the touched dirs' surviving
       // rows: a 1-row upsert into a multi-GB partition must NOT take
-      // the static small-commit plan on the delta estimate alone. Any
-      // touched dir without recorded bytes → None → AQE stays on.
-      val touchedBytes: Option[BigInt] = prior.fold(Option(BigInt(0))) {
-        m => touchedLive.keysIterator.map(m.dirBytes.get)
-          .foldLeft(Option(BigInt(0))) {
-            case (Some(acc), Some(b)) => Some(acc + b)
-            case _ => None
-          }
-      }
-      val sparkWrite = commitSession(spark,
-        for (u <- updatesBytes; t <- touchedBytes) yield u + t)
+      // the static small-commit plan on the delta estimate alone
+      val touchedBytes = prior.fold(BigInt(0))(
+        dirsBytes(_, touchedLive.keysIterator))
+      val sparkWrite = commitSession(spark, updatesBytes.map(_ + touchedBytes))
       val pTypes = partCols.map(c => gated.schema(c).dataType)
       val merged =
         if (touchedLive.isEmpty) gated
@@ -2618,18 +2564,13 @@ object VersionedTable {
             }) && old.columns.contains(keys(i)) &&
               old.schema(keys(i)).dataType == keyTypes(i)
           }
-          // survivors-row budget from the manifest (None = unknown = skip)
-          val touchedRows: Option[Long] = prior.flatMap { m =>
-            touchedLive.keysIterator.map(m.dirRows.get)
-              .foldLeft(Option(0L)) {
-                case (Some(acc), Some(r)) => Some(acc + r)
-                case _ => None
-              }
-          }
+          // survivors-row budget from the manifest
+          val touchedRows = touchedLive.keysIterator
+            .map(prior.get.dirRows).sum
           val survivorsInline: Option[DataFrame] = probe.flatMap(_._2) match {
             case Some(tuples) if tuples.size <= inlineMax &&
-                inlineTypesSafe && touchedRows.exists(r =>
-                  r * math.max(tuples.size.toLong, 1L) <= inlineCmpBudget) =>
+                inlineTypesSafe && touchedRows *
+                  math.max(tuples.size.toLong, 1L) <= inlineCmpBudget =>
               scala.util.Try {
                 if (tuples.isEmpty) old
                 else {
@@ -2703,23 +2644,15 @@ object VersionedTable {
       val newMapping =
         (if (replaceAll) Map.empty[String, String] else priorMapping) ++
           written.map(_ -> genDir)
-      // stats carry-forward: a prior file's stats survive iff its
-      // (generation, partition dir) is still what the NEW mapping points
-      // at — replaced partitions drop their old files' stats with them
+      // DV carry-forward: a prior file's DVs survive iff its (generation,
+      // partition dir) is still what the NEW mapping points at —
+      // replaced partitions drop their old files' DVs with them
       val liveDirPrefixes = newMapping.toSeq
         .map { case (rel, gen) => s"$gen/$rel/" }.toSet
-      def carry[A](prev: Map[String, Map[String, A]]) = prev.filter {
-        case (fileRel, _) =>
-          val dirOf = fileRel.lastIndexOf('/')
-          dirOf > 0 && liveDirPrefixes.contains(fileRel.substring(0, dirOf + 1))
-      }
       val (freshStats, freshBlooms, freshDirRows, freshDirFiles,
           freshDirBytes) =
-        if (written.isEmpty) (Map.empty[String, Map[String, ColStat]],
-          Map.empty[String, Map[String, Array[Byte]]],
-          Map.empty[String, Long], Map.empty[String, Long],
-          Map.empty[String, Long])
-        else collectFileStats(sparkWrite, root, genDir, partCols, statsCols,
+        if (written.isEmpty) noFreshIndex
+        else collectFileStats(sparkWrite, root, next, partCols, statsCols,
           bloomCols, sizedBloomBits(bloomBits, fileRows),
           colmap = renameMap(outSchema), schema = outSchema)
       // dir-count carry: a prior dir's counts survive iff its mapping
@@ -2731,25 +2664,24 @@ object VersionedTable {
       // the full per-stream watermark map carries into EVERY manifest (new
       // tag merged in), so a later maintenance commit + vacuum cannot
       // erase another stream's exactly-once state
-      Staged(partCols, outSchema, newMapping,
-        carry(prior.map(_.stats).getOrElse(Map.empty)) ++ freshStats,
-        carry(prior.map(_.blooms).getOrElse(Map.empty)) ++ freshBlooms,
+      Staged(partCols, outSchema, newMapping, freshStats, freshBlooms,
         prior.map(_.txns).getOrElse(Map.empty) ++ txn ++ extraTxns,
-        carryDir(prior.map(_.dirRows).getOrElse(Map.empty)) ++ freshDirRows,
-        carryDir(prior.map(_.dirFiles).getOrElse(Map.empty)) ++ freshDirFiles,
-        carry(prior.map(_.bloomRefs).getOrElse(Map.empty)),
         dvRefs = carryFlatRefs(prior.map(_.dvs).getOrElse(Map.empty),
           liveDirPrefixes),
+        checks = prior.map(_.checks).getOrElse(Map.empty),
+        dirRows = carryDir(prior.map(_.dirRows).getOrElse(Map.empty)) ++
+          freshDirRows,
+        dirFiles = carryDir(prior.map(_.dirFiles).getOrElse(Map.empty)) ++
+          freshDirFiles,
         dirBytes = carryDir(prior.map(_.dirBytes).getOrElse(Map.empty)) ++
           freshDirBytes,
-        checks = prior.map(_.checks).getOrElse(Map.empty),
         derived = prior.map(_.derived).getOrElse(Map.empty),
+        // a dir not written here is a prior dir: its token carries
         dirVers = {
           val writtenSet = written.toSet
           newMapping.map { case (rel, _) =>
             rel -> (if (writtenSet.contains(rel)) genDir
-              else prior.flatMap(_.contentOf(rel))
-                .getOrElse(priorMapping.getOrElse(rel, genDir))) }
+              else prior.get.dirVers(rel)) }
         },
         idxRefs = prior.map(_.idxRefs).getOrElse(Map.empty).filter {
           case (rel, _) => newMapping.get(rel) == priorMapping.get(rel) },
@@ -2875,8 +2807,8 @@ object VersionedTable {
     * (c) every dir common to both versions has an IDENTICAL content
     * token (maintenance rewrites carry tokens, so compaction between
     * the versions still qualifies — its diff is empty; delete-dv
-    * commits and the pre-feature fallback token are both DV-aware, so
-    * a DV change on a common dir is caught here too). The upsert
+    * commits bump the token, so a DV change on a common dir is caught
+    * here too). The upsert
     * contract (partition cols ⊆ merge keys) makes new-dir rows pure
     * inserts: a key's rows live in ONE dir, so a new dir can never
     * hold an update of an old dir's key. None → the caller takes the
@@ -2891,16 +2823,15 @@ object VersionedTable {
         initialDefaults(mt.schema).nonEmpty) return None
     if (mf.mapping.keysIterator.exists(rel => !mt.mapping.contains(rel)))
       return None // a dir vanished: deletes in the diff
-    val fv = fullDirVers(mf)
-    val tv = fullDirVers(mt)
-    if (mf.mapping.keysIterator.exists(rel => fv(rel) != tv(rel)))
+    if (mf.mapping.keysIterator.exists(rel =>
+        mf.dirVers(rel) != mt.dirVers(rel)))
       return None // a common dir's CONTENT changed: updates in the diff
     // deletion vectors parked on OLD dirs are FINE (those dirs are not
     // served, and a DV that changed on a common dir between the
-    // endpoints is caught by the token compare above — the delete-dv
-    // commit and the pre-feature fallback token are both DV-aware); a
-    // DV on a SERVED file means some of its rows were added then
-    // deleted within (from, to] — not pure inserts, fall back
+    // endpoints is caught by the token compare above — a delete-dv
+    // commit bumps the token); a DV on a SERVED file means some of its
+    // rows were added then deleted within (from, to] — not pure
+    // inserts, fall back
     val newDirs = mt.mapping.toSeq.sortBy(_._1)
       .filterNot { case (rel, _) => mf.mapping.contains(rel) }
     val newRels = newDirs.map(_._1).toSet
@@ -2939,8 +2870,7 @@ object VersionedTable {
     require(!isPublished(spark, root, version),
       s"version $version at $root is published — cannot retract")
     fs.delete(new Path(tableRoot(root), genName(root, version)), true)
-    fs.delete(new Path(tableRoot(root),
-      s"_bloomx.${brNs(root)}$version"), false)
+    fs.delete(new Path(tableRoot(root), bloomSidecar(root, version)), false)
     fs.delete(new Path(tableRoot(root),
       s"_dvx.${brNs(root)}$version"), false)
     fs.delete(new Path(tableRoot(root),
@@ -3098,34 +3028,25 @@ object VersionedTable {
     * Vacuum bounds the memory: keep a retention window at least as long
     * as the replay horizon or a vacuumed batch could re-apply (harmless
     * for key-idempotent MERGEs, an extra version otherwise). */
-  def lastTxn(spark: SparkSession, root: String, txnId: String): Option[Long] = {
-    val fs = fsFor(spark, root)
-    // every manifest carries the FULL per-stream watermark map forward, so
-    // the newest manifest normally answers in one read; the backward walk
-    // remains for manifests written before the carry-forward existed
-    // (a stream's batch ids increase with version number, so the newest
-    // manifest mentioning this txnId holds its max)
-    history(spark, root).reverseIterator
-      .map(v => readTxnDirectives(fs, root, v))
-      .collectFirst { case txns if txns.contains(txnId) => txns(txnId) }
-  }
+  def lastTxn(spark: SparkSession, root: String, txnId: String): Option[Long] =
+    // every manifest carries the FULL per-stream watermark map forward
+    // (REPLACE TABLE resets it), so the newest manifest answers alone
+    currentVersion(spark, root).flatMap(v =>
+      readTxnDirectives(fsFor(spark, root), root, v).get(txnId))
 
   /** [[lastTxn]] PINNED at a specific committed version: the watermark
     * as of that manifest — consumers pairing versioned sidecar state
     * with a snapshot read (AnnIndex centroids) resolve both from the
     * same version instead of racing a concurrent commit. */
   private[graft] def lastTxnAt(spark: SparkSession, root: String,
-                               txnId: String, version: Int): Option[Long] = {
-    val fs = fsFor(spark, root)
-    history(spark, root).takeWhile(_ <= version).reverseIterator
-      .map(v => readTxnDirectives(fs, root, v))
-      .collectFirst { case txns if txns.contains(txnId) => txns(txnId) }
-  }
+                               txnId: String, version: Int): Option[Long] =
+    history(spark, root).takeWhile(_ <= version).lastOption.flatMap(v =>
+      readTxnDirectives(fsFor(spark, root), root, v).get(txnId))
 
-  /** Parse ONLY the #txn directives of a manifest — they are written
-    * before the (large, base64-heavy) stat/bloom sections, so the scan
-    * stops at the first #filestat/#filebloom/mapping line instead of
-    * decoding the whole file-index per micro-batch. */
+  /** Parse ONLY the #txn directives of a manifest — [[stageVersion]]
+    * writes them right after the header, so the scan stops at the first
+    * line past them (the registries, per-dir lines and mapping) instead
+    * of parsing the whole manifest per micro-batch. */
   private def readTxnDirectives(fs: FileSystem, root: String,
                                 version: Int): Map[String, Long] = {
     val in = fs.open(new Path(tableRoot(root), manifestName(root, version)))
@@ -3134,10 +3055,7 @@ object VersionedTable {
     try {
       Iterator.continually(reader.readLine()).takeWhile(_ != null)
         .map(_.trim).filter(_.nonEmpty)
-        .takeWhile(l => l.startsWith("#graft-manifest") ||
-          l.startsWith("#partcols") || l.startsWith("#schema") ||
-          l.startsWith("#fork") || l.startsWith("#op") ||
-          l.startsWith("#keys") || l.startsWith("#txn"))
+        .takeWhile(l => LeadingDirectives.contains(l.takeWhile(_ != '\t')))
         .collect { case l if l.startsWith("#txn\t") =>
           val parts = l.split("\t", -1)
           (new String(java.util.Base64.getDecoder.decode(parts(1)),
@@ -3188,10 +3106,8 @@ object VersionedTable {
     * place, check the other. */
   /** The two version-side scans a change feed diffs, restricted to
     * partition dirs whose CONTENT can differ between the versions: a
-    * dir is included iff its mapped generation changed, it was added or
-    * dropped, or its deletion-vector refs changed (compared by ref
-    * tuple — conservative superset when a rewrite re-homes sidecar
-    * refs). Exact, because partCols ⊆ merge keys means a logical key
+    * dir is included iff its content token changed or it was added or
+    * dropped. Exact, because partCols ⊆ merge keys means a logical key
     * can NEVER move between partition dirs — rows of untouched dirs
     * are bit-identical on both sides and the feed would drop them
     * anyway. This is what makes the feed (and everything built on it:
@@ -3199,33 +3115,18 @@ object VersionedTable {
     * O(|changed partitions|) instead of O(|table|) per call.
     * Maintenance rewrites (compact, small-file compaction, DV
     * materialization) carry each dir's CONTENT token while real writes
-    * bump it, so a feed spanning an OPTIMIZE still skips the untouched
-    * bulk; only a partition-LAYOUT change (repartitionTable) forces a
-    * full diff — dir names are incomparable across it. */
-  private def dvsUnder(m: Manifest, prefix: String)
-      : Map[String, (String, Long, Int, Long)] =
-    m.dvs.filter { case (f, _) => f.startsWith(prefix) }
-
+    * (deletion-vector deletes included) bump it, so a feed spanning an
+    * OPTIMIZE still skips the untouched bulk; only a partition-LAYOUT
+    * change (repartitionTable) forces a full diff — dir names are
+    * incomparable across it. */
   private def changedSideScans(spark: SparkSession, root: String,
                                fromVersion: Int, toVersion: Int)
       : (DataFrame, DataFrame) = {
     val mF = resolveManifest(spark, root, Some(fromVersion))
     val mT = resolveManifest(spark, root, Some(toVersion))
-    val rels = (mF.mapping.keySet ++ mT.mapping.keySet).filter { rel =>
-      (mF.mapping.get(rel), mT.mapping.get(rel)) match {
-        case (Some(gf), Some(gt)) =>
-          (mF.contentOf(rel), mT.contentOf(rel)) match {
-            // content tokens see THROUGH maintenance rewrites: a
-            // compaction re-gens every dir but carries the tokens, so
-            // a feed spanning it still skips the untouched bulk
-            case (Some(cf), Some(ct)) => cf != ct
-            // pre-feature manifests: physical generation + DV refs
-            case _ => gf != gt ||
-              dvsUnder(mF, s"$gf/$rel/") != dvsUnder(mT, s"$gt/$rel/")
-          }
-        case _ => true // dir added or dropped
-      }
-    }
+    // a dir absent on one side (added or dropped) compares None
+    val rels = (mF.mapping.keySet ++ mT.mapping.keySet)
+      .filter(rel => mF.dirVers.get(rel) != mT.dirVers.get(rel))
     def side(m: Manifest): DataFrame = {
       val dirs = m.mapping.filter { case (rel, _) => rels.contains(rel) }
       if (dirs.isEmpty) spark.createDataFrame(
@@ -3422,30 +3323,20 @@ object VersionedTable {
                              expectLog: Map[String, Long] = Map.empty)
                             (transform: DataFrame => DataFrame): Int = {
     val fs = fsFor(spark, root)
-    val touchedFilePrefix = touched.toSeq
-      .map { case (rel, gen) => s"$gen/$rel/" }
-    val coveredCols = (kind: Map[String, Map[String, _]]) => kind.iterator
-      .filter { case (f, _) => touchedFilePrefix.exists(f.startsWith) }
-      .flatMap(_._2.keys).toSeq.distinct
-    // the touched dirs' block-held coverage reads off the #diridx col
-    // lists — no sidecar I/O just to learn which columns to re-collect
+    // the touched dirs' coverage reads off the #diridx col lists — no
+    // sidecar I/O just to learn which columns to re-collect
     val tRefs = touched.keysIterator.flatMap(m.idxRefs.get).toSeq
-    val statsCols = (coveredCols(m.stats) ++ tRefs.flatMap(_.statCols))
+    val statsCols = tRefs.flatMap(_.statCols)
       .distinct.filterNot(m.partCols.contains)
-    val bloomCols = (coveredCols(m.blooms) ++ coveredCols(m.bloomRefs) ++
-      tRefs.flatMap(_.bloomCols))
+    val bloomCols = tRefs.flatMap(_.bloomCols)
       .distinct.filterNot(m.partCols.contains)
-    // the rewrite's input is exactly the touched dirs — their recorded
-    // byte totals are a FREE size hint for the small-commit AQE-off
-    // plan (None when any touched dir predates byte tracking)
-    val sizeHint: Option[BigInt] =
-      touched.keysIterator.map(m.dirBytes.get).foldLeft(Option(BigInt(0))) {
-        case (Some(acc), Some(b)) => Some(acc + b)
-        case _ => None
-      }
     val next = stageVersion(fs, root, cur + 1, op, m.keys,
         expectLog = expectLog) { genDir =>
-      val sparkW = commitSession(spark, sizeHint)
+      // the rewrite's input is exactly the touched dirs — their recorded
+      // byte totals are a FREE size hint for the small-commit AQE-off
+      // plan
+      val sparkW = commitSession(spark,
+        Some(dirsBytes(m, touched.keysIterator)))
       val survivorsByGen = transform(scanDirs(spark, root, m, touched))
       val base = survivorsByGen.repartition(m.partCols.map(col): _*)
       val clustered =
@@ -3467,35 +3358,28 @@ object VersionedTable {
         written.map(_ -> genDir)
       val liveDirPrefixes = newMapping.toSeq
         .map { case (rel, gen) => s"$gen/$rel/" }.toSet
-      def carry[A](prev: Map[String, Map[String, A]]) = prev.filter {
-        case (fileRel, _) =>
-          val dirOf = fileRel.lastIndexOf('/')
-          dirOf > 0 && liveDirPrefixes.contains(fileRel.substring(0, dirOf + 1))
-      }
       val (freshStats, freshBlooms, freshDirRows, freshDirFiles,
           freshDirBytes) =
-        if (written.isEmpty) (Map.empty[String, Map[String, ColStat]],
-          Map.empty[String, Map[String, Array[Byte]]],
-          Map.empty[String, Long], Map.empty[String, Long],
-          Map.empty[String, Long])
-        else collectFileStats(sparkW, root, genDir, m.partCols, statsCols,
+        if (written.isEmpty) noFreshIndex
+        else collectFileStats(sparkW, root, cur + 1, m.partCols, statsCols,
           bloomCols, sizedBloomBits(bloomBits, fileRows),
           colmap = renameMap(m.schema), schema = m.schema)
       def carryDir(prev: Map[String, Long]): Map[String, Long] =
         prev.filter { case (rel, _) =>
           m.mapping.contains(rel) &&
             newMapping.get(rel) == m.mapping.get(rel) }
-      Staged(m.partCols, m.schema, newMapping,
-        carry(m.stats) ++ freshStats, carry(m.blooms) ++ freshBlooms,
-        m.txns, carryDir(m.dirRows) ++ freshDirRows,
-        carryDir(m.dirFiles) ++ freshDirFiles, carry(m.bloomRefs),
-        dvRefs = carryFlatRefs(m.dvs, liveDirPrefixes),
+      Staged(m.partCols, m.schema, newMapping, freshStats, freshBlooms,
+        m.txns, dvRefs = carryFlatRefs(m.dvs, liveDirPrefixes),
+        checks = m.checks,
+        dirRows = carryDir(m.dirRows) ++ freshDirRows,
+        dirFiles = carryDir(m.dirFiles) ++ freshDirFiles,
         dirBytes = carryDir(m.dirBytes) ++ freshDirBytes,
-        checks = m.checks, derived = m.derived,
+        derived = m.derived,
+        // a dir new to the table (a MERGE insert into a fresh partition)
+        // gets this version's token
         dirVers = newMapping.map { case (rel, _) =>
           rel -> (if (contentChanging && touched.contains(rel)) genDir
-            else m.contentOf(rel).getOrElse(m.mapping.getOrElse(rel,
-              genDir))) },
+            else m.dirVers.getOrElse(rel, genDir)) },
         idxRefs = m.idxRefs.filter { case (rel, _) =>
           newMapping.get(rel) == m.mapping.get(rel) },
         props = m.props)
@@ -3767,19 +3651,15 @@ object VersionedTable {
     }.toMap
     val next = stageVersion(fs, root, cur + 1, "delete-dv",
         m.keys) { genDir =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs,
-        dvBytes = freshBytes, dvRefs = m.dvs -- freshBytes.keys,
-        dirBytes = m.dirBytes, checks = m.checks, derived = m.derived,
+      carryAll(m).copy(dvBytes = freshBytes, dvRefs = m.dvs -- freshBytes.keys,
         dirVers = {
           // new DV positions HIDE rows: that dir's content changed even
           // though its data files are byte-identical
           val dvDirs = freshBytes.keySet.map { f =>
             f.substring(f.indexOf('/') + 1, f.lastIndexOf('/')) }
-          fullDirVers(m).map { case (rel, tok) =>
+          m.dirVers.map { case (rel, tok) =>
             rel -> (if (dvDirs.contains(rel)) genDir else tok) }
-        },
-        idxRefs = m.idxRefs, props = m.props)
+        })
     }
     publish(spark, root, next)
     next
@@ -4068,16 +3948,11 @@ object VersionedTable {
     * The same inference [[rewriteTouched]] applies per touched dir. */
   private[graft] def coveredIndexCols(m: Manifest)
       : (Seq[String], Seq[String]) = {
-    // block-held coverage reads off the #diridx col lists — zero
-    // sidecar I/O; inline maps cover legacy manifests
-    val stats = (m.stats.valuesIterator.flatMap(_.keys) ++
-      m.idxRefs.valuesIterator.flatMap(_.statCols)).toSeq.distinct
-      .filter(m.schema.fieldNames.contains).filterNot(m.partCols.contains)
-    val blooms = (m.blooms.valuesIterator.flatMap(_.keys) ++
-      m.bloomRefs.valuesIterator.flatMap(_.keys) ++
-      m.idxRefs.valuesIterator.flatMap(_.bloomCols)).toSeq.distinct
-      .filter(m.schema.fieldNames.contains).filterNot(m.partCols.contains)
-    (stats, blooms)
+    // coverage reads off the #diridx col lists — zero sidecar I/O
+    def covered(cols: IdxRef => Seq[String]) =
+      m.idxRefs.valuesIterator.flatMap(cols).toSeq.distinct
+        .filter(m.schema.fieldNames.contains).filterNot(m.partCols.contains)
+    (covered(_.statCols), covered(_.bloomCols))
   }
 
   /** A write was rejected because rows violate a registered CHECK
@@ -4121,10 +3996,7 @@ object VersionedTable {
     enforceChecks(readM(spark, root, m), Map(name -> sql),
       s"existing data at $root")
     val next = stageVersion(fs, root, cur + 1, "add-constraint", m.keys) { _ =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks + (name -> sql),
-        derived = m.derived, dirVers = fullDirVers(m), idxRefs = m.idxRefs, props = m.props)
+      carryAll(m).copy(checks = m.checks + (name -> sql))
     }
     publish(spark, root, next)
     next
@@ -4139,10 +4011,7 @@ object VersionedTable {
     val m = readManifest(fs, root, cur)
     require(m.checks.contains(name), s"constraint $name does not exist")
     val next = stageVersion(fs, root, cur + 1, "drop-constraint", m.keys) { _ =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks - name,
-        derived = m.derived, dirVers = fullDirVers(m), idxRefs = m.idxRefs, props = m.props)
+      carryAll(m).copy(checks = m.checks - name)
     }
     publish(spark, root, next)
     next
@@ -4178,11 +4047,7 @@ object VersionedTable {
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     val m = readManifest(fs, root, cur)
     val next = stageVersion(fs, root, cur + 1, "set-properties", m.keys) { _ =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks, derived = m.derived,
-        dirVers = fullDirVers(m), idxRefs = m.idxRefs,
-        props = m.props ++ kvs)
+      carryAll(m).copy(props = m.props ++ kvs)
     }
     publish(spark, root, next)
     next
@@ -4198,11 +4063,7 @@ object VersionedTable {
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     val m = readManifest(fs, root, cur)
     val next = stageVersion(fs, root, cur + 1, "unset-properties", m.keys) { _ =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks, derived = m.derived,
-        dirVers = fullDirVers(m), idxRefs = m.idxRefs,
-        props = m.props -- ks)
+      carryAll(m).copy(props = m.props -- ks)
     }
     publish(spark, root, next)
     next
@@ -4306,10 +4167,8 @@ object VersionedTable {
       Map(s"derived $partCol" -> derivedSqlExpr(transform, partCol, srcCol)),
       s"existing data at $root")
     val next = stageVersion(fs, root, cur + 1, "add-derived-partition", m.keys) { _ =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks,
-        derived = m.derived + (partCol -> ((transform, srcCol))), dirVers = fullDirVers(m), idxRefs = m.idxRefs, props = m.props)
+      carryAll(m).copy(
+        derived = m.derived + (partCol -> ((transform, srcCol))))
     }
     publish(spark, root, next)
     next
@@ -4327,10 +4186,7 @@ object VersionedTable {
     require(m.derived.contains(partCol),
       s"$partCol has no derived-partition registration")
     val next = stageVersion(fs, root, cur + 1, "drop-derived-partition", m.keys) { _ =>
-      Staged(m.partCols, m.schema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks,
-        derived = m.derived - partCol, dirVers = fullDirVers(m), idxRefs = m.idxRefs, props = m.props)
+      carryAll(m).copy(derived = m.derived - partCol)
     }
     publish(spark, root, next)
     next
@@ -4347,9 +4203,8 @@ object VersionedTable {
     * from the manifest — the Iceberg-metadata-table idea: `partition`
     * (rel dir), `generation` (physical), `content` (the token that last
     * CHANGED the dir's rows — equal tokens across versions ⇒ equal
-    * content), nullable `rows`/`files`/`bytes` (null where the dir
-    * predates that index), and `dv_deleted` (merge-on-read rows hidden
-    * by deletion vectors). Zero data I/O; also served as the
+    * content), `rows`/`files`/`bytes` (physical counts), and
+    * `dv_deleted` (merge-on-read rows hidden by deletion vectors). Zero data I/O; also served as the
     * `graft_partitions('/root'[, version])` SQL table function. */
   def partitionsMeta(spark: SparkSession, root: String,
                      asOfVersion: Option[Int] = None): DataFrame = {
@@ -4358,11 +4213,8 @@ object VersionedTable {
     val rows = m.mapping.toSeq.sortBy(_._1).map { case (rel, gen) =>
       val dvDel = m.dvs.iterator
         .filter(_._1.startsWith(s"$gen/$rel/")).map(_._2._4).sum
-      org.apache.spark.sql.Row(rel, gen, m.dirVers.getOrElse(rel, gen),
-        m.dirRows.get(rel).map(java.lang.Long.valueOf).orNull,
-        m.dirFiles.get(rel).map(java.lang.Long.valueOf).orNull,
-        m.dirBytes.get(rel).map(java.lang.Long.valueOf).orNull,
-        java.lang.Long.valueOf(dvDel))
+      org.apache.spark.sql.Row(rel, gen, m.dirVers(rel), m.dirRows(rel),
+        m.dirFiles(rel), m.dirBytes(rel), dvDel)
     }
     spark.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters
@@ -4371,9 +4223,9 @@ object VersionedTable {
         StructField("partition", StringType, nullable = false),
         StructField("generation", StringType, nullable = false),
         StructField("content", StringType, nullable = false),
-        StructField("rows", LongType, nullable = true),
-        StructField("files", LongType, nullable = true),
-        StructField("bytes", LongType, nullable = true),
+        StructField("rows", LongType, nullable = false),
+        StructField("files", LongType, nullable = false),
+        StructField("bytes", LongType, nullable = false),
         StructField("dv_deleted", LongType, nullable = false))))
   }
 
@@ -4390,12 +4242,12 @@ object VersionedTable {
     import org.apache.spark.sql.types._
     val m = resolveManifest(spark, root, asOfVersion)
     val fs = fsFor(spark, root)
-    val (allStats, allBloomRefs) = m.materializeIdx(fs, root)
+    val (allStats, allBlooms) = m.materializeIdx(fs, root)
     val liveDirs = m.mapping.toSeq.map { case (rel, gen) =>
       s"$gen/$rel/" -> ((rel, gen)) }.toMap
     def dirOf(f: String) = f.substring(0, f.lastIndexOf('/') + 1)
-    val keys = (allStats.keySet ++ m.blooms.keySet ++ allBloomRefs.keySet ++
-      m.dvs.keySet).toSeq.sorted
+    val keys = (allStats.keySet ++ allBlooms.keySet ++ m.dvs.keySet)
+      .toSeq.sorted
     val rows = keys.flatMap { f =>
       liveDirs.get(dirOf(f)).map { case (rel, gen) =>
         val st = allStats.getOrElse(f, Map.empty)
@@ -4405,8 +4257,7 @@ object VersionedTable {
         org.apache.spark.sql.Row(f, rel, gen,
           java.lang.Long.valueOf(m.dvs.get(f).map(_._4).getOrElse(0L)),
           scala.collection.immutable.Map(statMap.toSeq: _*),
-          (m.blooms.getOrElse(f, Map.empty).keySet ++
-            allBloomRefs.getOrElse(f, Map.empty).keySet).toSeq.sorted)
+          allBlooms.getOrElse(f, Map.empty).keys.toSeq.sorted)
       }
     }
     spark.createDataFrame(
@@ -4609,7 +4460,8 @@ object VersionedTable {
       require(!m.partCols.contains(c),
         s"stats column $c is a partition column"))
     val next = stageVersion(fs, root, cur + 1, "compact", m.keys) { genDir =>
-      val sparkW = commitSession(spark, tableBytesHint(m))
+      val sparkW = commitSession(spark,
+        Some(dirsBytes(m, m.mapping.keysIterator)))
       val base = read(spark, root, Some(cur))
         .repartition(m.partCols.map(col): _*)
       val clustered =
@@ -4626,21 +4478,19 @@ object VersionedTable {
       writer.partitionBy(m.partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
       val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"), m.partCols)
       val (stats, blooms, dirRows, dirFiles, dirBytes) =
-        collectFileStats(sparkW, root, genDir, m.partCols, statsCols,
+        collectFileStats(sparkW, root, cur + 1, m.partCols, statsCols,
           bloomCols, sizedBloomBits(bloomBits, fileRows),
           // compact writes CURRENT logical names (renames materialize)
           schema = stripPhysical(m.schema))
       // the rewrite wrote CURRENT logical names — renames are now
       // materialized, drop the column mapping
       Staged(m.partCols, stripPhysical(m.schema),
-        written.map(_ -> genDir).toMap,
-        stats, blooms, m.txns, dirRows, dirFiles, dirBytes = dirBytes,
-        checks = m.checks, derived = m.derived,
+        written.map(_ -> genDir).toMap, stats, blooms, m.txns,
+        checks = m.checks, dirRows = dirRows, dirFiles = dirFiles,
+        dirBytes = dirBytes, derived = m.derived,
         // full-table rewrite, logical rows preserved (DVs were applied
         // at read before, materialized now): tokens carry
-        dirVers = written.map(rel => rel ->
-          m.contentOf(rel).getOrElse(m.mapping.getOrElse(rel, genDir)))
-          .toMap,
+        dirVers = written.map(rel => rel -> m.dirVers(rel)).toMap,
         idxRefs = Map.empty, props = m.props)
     }
     publish(spark, root, next)
@@ -4652,8 +4502,7 @@ object VersionedTable {
     * a file per merge — the small-files tax), leaving every other dir's
     * mapping, bytes, and index entries untouched — O(|hot partitions|)
     * I/O instead of [[compact]]'s O(|table|). File counts come from the
-    * manifest's #dirfiles (a directory listing per dir only for
-    * pre-feature manifests); stats/bloom coverage for the rewritten dirs
+    * manifest's #dirfiles; stats/bloom coverage for the rewritten dirs
     * is re-derived from what their files carried (same inference as
     * [[deleteWhere]]), so the index family survives. A run where no dir
     * qualifies commits NOTHING (returns the current version — no version
@@ -4670,13 +4519,8 @@ object VersionedTable {
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     val m = readManifest(fs, root, cur)
-    def fileCount(rel: String, gen: String): Long =
-      m.dirFiles.getOrElse(rel,
-        fs.listStatus(new Path(s"${tableRoot(root)}/$gen/$rel")).count(s =>
-          s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith(".")))
-    val touched = m.mapping.filter { case (rel, gen) =>
-      fileCount(rel, gen) >= minFilesPerDir }
+    val touched = m.mapping.filter { case (rel, _) =>
+      m.dirFiles(rel) >= minFilesPerDir }
     if (touched.isEmpty) return cur
     rewriteTouched(spark, root, m, touched, cur, fileRows, bloomBits,
       zOrderCols, contentChanging = false, op = "compact-files")(identity)
@@ -4685,9 +4529,8 @@ object VersionedTable {
   /** Targeted deletion-vector materialization: rewrite ONLY dirs whose
     * DV density (deleted / physical rows) reaches `minFraction` —
     * bounded-I/O reclamation of the scan tax sparse deletes accumulate,
-    * without [[compact]]'s O(|table|). Dirs without a recorded row count
-    * but carrying DVs materialize conservatively. Returns the new
-    * version (current unchanged when nothing qualifies). */
+    * without [[compact]]'s O(|table|). Returns the new version (current
+    * unchanged when nothing qualifies). */
   def materializeDvs(spark: SparkSession, root: String,
                      minFraction: Double = 0.1,
                      fileRows: Option[Int] = None,
@@ -4700,9 +4543,8 @@ object VersionedTable {
     val m = readManifest(fs, root, cur)
     val dvByDir = dvCountsByDir(m)
     val touched = m.mapping.filter { case (rel, _) =>
-      dvByDir.getOrElse(rel, 0L) > 0L &&
-        m.dirRows.get(rel).forall(n =>
-          n > 0 && dvByDir(rel).toDouble / n >= minFraction)
+      dvByDir.getOrElse(rel, 0L) > 0L && m.dirRows(rel) > 0 &&
+        dvByDir(rel).toDouble / m.dirRows(rel) >= minFraction
     }
     if (touched.isEmpty) return cur
     rewriteTouched(spark, root, m, touched, cur, fileRows,
@@ -4771,7 +4613,8 @@ object VersionedTable {
     (statsCols ++ bloomCols).foreach(c => require(!partCols.contains(c),
       s"stats column $c is a partition column"))
     val next = stageVersion(fs, root, cur + 1, "repartition", m.keys) { genDir =>
-      val sparkW = commitSession(spark, tableBytesHint(m))
+      val sparkW = commitSession(spark,
+        Some(dirsBytes(m, m.mapping.keysIterator)))
       val base = read(spark, root, Some(cur))
         .repartition(partCols.map(col): _*)
       val clustered =
@@ -4784,18 +4627,15 @@ object VersionedTable {
       writer.partitionBy(partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
       val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"), partCols)
       val (stats, blooms, dirRows, dirFiles, dirBytes) =
-        if (written.isEmpty) (Map.empty[String, Map[String, ColStat]],
-          Map.empty[String, Map[String, Array[Byte]]],
-          Map.empty[String, Long], Map.empty[String, Long],
-          Map.empty[String, Long])
-        else collectFileStats(sparkW, root, genDir, partCols, statsCols,
+        if (written.isEmpty) noFreshIndex
+        else collectFileStats(sparkW, root, cur + 1, partCols, statsCols,
           bloomCols, sizedBloomBits(bloomBits, fileRows),
           schema = stripPhysical(m.schema))
       // full rewrite under logical names: renames materialize here too
       Staged(partCols, stripPhysical(m.schema),
-        written.map(_ -> genDir).toMap,
-        stats, blooms, m.txns, dirRows, dirFiles, dirBytes = dirBytes,
-        checks = m.checks,
+        written.map(_ -> genDir).toMap, stats, blooms, m.txns,
+        checks = m.checks, dirRows = dirRows, dirFiles = dirFiles,
+        dirBytes = dirBytes,
         // a registration for a partition column the new layout dropped
         // cannot survive the layout change
         derived = m.derived.filter { case (p, _) => partCols.contains(p) },
@@ -4844,12 +4684,8 @@ object VersionedTable {
         curM.checks ++ derivedChecks(curM),
         s"restore target v$toVersion at $root")
     val next = stageVersion(fs, root, cur + 1, s"restore:v$toVersion", curM.keys) { _ =>
-      Staged(target.partCols, target.schema, target.mapping,
-        target.stats, target.blooms, curTxns, target.dirRows,
-        target.dirFiles, target.bloomRefs, dvRefs = target.dvs,
-        dirBytes = target.dirBytes, checks = curM.checks,
-        derived = curM.derived, dirVers = fullDirVers(target),
-        idxRefs = target.idxRefs, props = curM.props)
+      carryAll(target).copy(txns = curTxns, checks = curM.checks,
+        derived = curM.derived, props = curM.props)
     }
     publish(spark, root, next)
     next
@@ -4857,53 +4693,46 @@ object VersionedTable {
 
   /** Metadata-only COUNT(*): the table's exact row count from the
     * manifest's per-dir counts — zero data I/O at any table size (the
-    * Delta/Iceberg snapshot-count trick). Some(n) when EVERY live
-    * partition dir has a recorded count; None when any is missing
-    * (manifests written before the dir-count index existed) — callers
-    * fall back to `read().count()`, correctness never depends on
-    * coverage. */
+    * Delta/Iceberg snapshot-count trick). Always Some: every mapped dir
+    * carries its count. */
   def fastCount(spark: SparkSession, root: String,
                 asOfVersion: Option[Int] = None): Option[Long] =
-    manifestCount(resolveManifest(spark, root, asOfVersion))
+    Some(manifestCount(resolveManifest(spark, root, asOfVersion)))
 
   /** Pure-manifest half of [[fastCount]] — no I/O; also called by the
     * optimizer fold on a pinned manifest. */
-  private[graft] def manifestCount(m: Manifest): Option[Long] =
-    if (m.mapping.keySet.forall(m.dirRows.contains)) {
-      // dir counts are PHYSICAL rows; merge-on-read deletes subtract
-      // exactly (a carried DV always references a live file, but the
-      // live-prefix filter double-guards against a drifted manifest)
-      val live = m.mapping.toSeq.map { case (rel, gen) => s"$gen/$rel/" }.toSet
-      val deleted = m.dvs.iterator.collect {
-        case (f, (_, _, _, n))
-            if { val d = f.lastIndexOf('/')
-                 d > 0 && live.contains(f.substring(0, d + 1)) } => n
-      }.sum
-      Some(m.mapping.keySet.toSeq.map(m.dirRows).sum - deleted)
-    } else None
+  private[graft] def manifestCount(m: Manifest): Long = {
+    // dir counts are PHYSICAL rows; merge-on-read deletes subtract
+    // exactly (a carried DV always references a live file, but the
+    // live-prefix filter double-guards against a drifted manifest)
+    val live = m.mapping.toSeq.map { case (rel, gen) => s"$gen/$rel/" }.toSet
+    val deleted = m.dvs.iterator.collect {
+      case (f, (_, _, _, n))
+          if { val d = f.lastIndexOf('/')
+               d > 0 && live.contains(f.substring(0, d + 1)) } => n
+    }.sum
+    m.mapping.keysIterator.map(m.dirRows).sum - deleted
+  }
 
   /** Metadata-only table size: exact data bytes from the manifest's
-    * per-dir byte counts — Some(n) when EVERY live dir is covered, None
-    * for pre-feature manifests (callers fall back to listing). Powers
-    * the relation's sizeInBytes statistic (broadcast and runtime-filter
-    * decisions) and capacity dashboards. DV'd tables report PHYSICAL
-    * bytes — the scan cost, which is what a size statistic means. */
+    * per-dir byte counts (always Some). Powers the relation's
+    * sizeInBytes statistic (broadcast and runtime-filter decisions) and
+    * capacity dashboards. DV'd tables report PHYSICAL bytes — the scan
+    * cost, which is what a size statistic means. */
   def tableSize(spark: SparkSession, root: String,
                 asOfVersion: Option[Int] = None): Option[Long] =
-    manifestSizeBytes(resolveManifest(spark, root, asOfVersion))
+    Some(manifestSizeBytes(resolveManifest(spark, root, asOfVersion)))
 
   /** Pure-manifest half of [[tableSize]] — no I/O; also the optimizer
     * statistic on the pinned relation. */
-  private[graft] def manifestSizeBytes(m: Manifest): Option[Long] =
-    if (m.mapping.keySet.forall(m.dirBytes.contains))
-      Some(m.mapping.keySet.toSeq.map(m.dirBytes).sum)
-    else None
+  private[graft] def manifestSizeBytes(m: Manifest): Long =
+    m.mapping.keysIterator.map(m.dirBytes).sum
 
   /** Metadata-only MIN/MAX of a stats-indexed column — folds over the
     * manifest's per-file min/max instead of scanning, zero data I/O.
-    * Sound only when coverage is PROVABLE: every live dir needs a
-    * recorded data-file count (#dirfiles) and every one of its files a
-    * stat for the column recorded under the column's CURRENT type — one
+    * Sound only when coverage is PROVABLE: every file of every live dir
+    * (#dirfiles counts them) needs a stat for the column recorded under
+    * the column's CURRENT type — one
     * uncovered or type-evolved file returns None (callers fall back to
     * an aggregate scan; correctness never depends on coverage). Files
     * whose stat records no min/max are all-null for the column: they
@@ -4942,17 +4771,16 @@ object VersionedTable {
     var lo: Option[String] = None
     var hi: Option[String] = None
     for ((rel, gen) <- m.mapping if keep(rel)) {
-      val nFiles = m.dirFiles.getOrElse(rel, return None)
       val prefix = s"$gen/$rel/"
       // a deletion vector breaks the fold: the deleted row may BE the
       // recorded extremum — conservative None, the aggregate scans
       if (m.dvs.keysIterator.exists(_.startsWith(prefix))) return None
-      val covered = m.statsAndRefsUnder(fs, root, rel)._1.iterator
+      val covered = m.blockFor(fs, root, rel)._1.iterator
         .filter(_._1.startsWith(prefix))
         .flatMap { case (_, cols) => cols.get(column) }
         .filter(_.dtJson.contains(dtJson))
         .toSeq
-      if (covered.length != nFiles) return None
+      if (covered.length != m.dirFiles(rel)) return None
       covered.foreach { st =>
         st.min.foreach(v => if (lo.forall(ord(v, _) < 0)) lo = Some(v))
         st.max.foreach(v => if (hi.forall(ord(v, _) > 0)) hi = Some(v))
@@ -4965,7 +4793,7 @@ object VersionedTable {
   /** Metadata-only COUNT(column) — total rows minus the recorded per-file
     * null counts, under the SAME provable-coverage check as
     * [[manifestMinMax]] (every file of every dir carries a current-type
-    * stat) plus full dir-row coverage. Null counts are type-independent,
+    * stat). Null counts are type-independent,
     * but the type-tag requirement stays: a column dropped and re-added
     * under a different type would otherwise reuse stale counts. */
   private[graft] def manifestNonNullCount(fs: FileSystem, root: String,
@@ -4981,35 +4809,26 @@ object VersionedTable {
     if (!m.schema.fieldNames.contains(column) ||
         m.partCols.contains(column)) return None
     val kept = m.mapping.filter { case (rel, _) => keep(rel) }
-    if (!kept.keySet.forall(m.dirRows.contains)) return None
     // deleted rows' null-ness is unrecorded: the per-dir loop below
     // bails on any kept dir carrying DVs, so total is plain dir rows
-    val total = kept.keySet.toSeq.map(m.dirRows).sum
+    val total = kept.keysIterator.map(m.dirRows).sum
     val dtJson = m.schema(column).dataType.json
     var nulls = 0L
     for ((rel, gen) <- kept) {
-      val nFiles = m.dirFiles.getOrElse(rel, return None)
       val prefix = s"$gen/$rel/"
       // DV'd files: deleted rows' null-ness is unrecorded — no fold
       if (m.dvs.keysIterator.exists(_.startsWith(prefix))) return None
-      val covered = m.statsAndRefsUnder(fs, root, rel)._1.iterator
+      val covered = m.blockFor(fs, root, rel)._1.iterator
         .filter(_._1.startsWith(prefix))
         .flatMap { case (_, cols) => cols.get(column) }
         .filter(_.dtJson.contains(dtJson))
         .toSeq
-      if (covered.length != nFiles) return None
+      if (covered.length != m.dirFiles(rel)) return None
       nulls += covered.map(_.nulls).sum
     }
     Some(total - nulls)
   }
 
-  /** Metadata-only GROUP BY partition-column COUNT(*): per distinct
-    * partition-value tuple (over `cols` ⊆ partCols), the summed dir row
-    * counts — external Scala values, null for the default (null)
-    * partition. None when any live dir lacks a row count or any
-    * partition value fails its exact typed parse (conservative: the
-    * scan runs). Exact because the dir name IS the value for every row
-    * in the dir. */
   /** Per-dir DV-deleted row counts: every row of a DV'd file shares the
     * dir's partition tuple, so the deleted count is attributable with no
     * data read (belt-and-braces: the DV's gen must match the dir's live
@@ -5026,11 +4845,10 @@ object VersionedTable {
   /** Every live dir's mapping key, exact partition values (in partCols
     * order, null for the null partition), and LIVE row count (DV
     * deletes subtracted) — the base fact the partition-filtered folds
-    * evaluate predicates against. None when any dir lacks a row count
-    * or any partition value fails its exact typed parse. */
+    * evaluate predicates against. None when any partition value fails
+    * its exact typed parse. */
   private[graft] def manifestDirLiveRows(m: Manifest)
       : Option[Seq[(String, Seq[Any], Long)]] = {
-    if (!m.mapping.keySet.forall(m.dirRows.contains)) return None
     val dvByDir = dvCountsByDir(m)
     Some(m.mapping.keys.toSeq.map { rel =>
       val vals = m.partCols.map(c => partitionValue(m, rel, c) match {
@@ -5041,10 +4859,15 @@ object VersionedTable {
     })
   }
 
+  /** Metadata-only GROUP BY partition-column COUNT(*): per distinct
+    * partition-value tuple (over `cols` ⊆ partCols), the summed live dir
+    * row counts — external Scala values, null for the default (null)
+    * partition. None when any partition value fails its exact typed
+    * parse (conservative: the scan runs). Exact because the dir name IS
+    * the value for every row in the dir. */
   private[graft] def manifestGroupCounts(m: Manifest, cols: Seq[String])
       : Option[Seq[(Seq[Any], Long)]] = {
     if (cols.isEmpty || !cols.forall(m.partCols.contains)) return None
-    if (!m.mapping.keySet.forall(m.dirRows.contains)) return None
     val dvByDir = dvCountsByDir(m)
     val parsed = m.mapping.keys.toSeq.map { rel =>
       val vals = cols.map(c => partitionValue(m, rel, c))
@@ -5242,10 +5065,7 @@ object VersionedTable {
     val op = default.fold(s"drop-default:$name")(_ =>
       s"set-default:$name")
     val next = stageVersion(fs, root, cur + 1, op, m.keys) { _ =>
-      Staged(m.partCols, newSchema, m.mapping, m.stats, m.blooms, m.txns,
-        m.dirRows, m.dirFiles, m.bloomRefs, dvRefs = m.dvs,
-        dirBytes = m.dirBytes, checks = m.checks, derived = m.derived,
-        dirVers = fullDirVers(m), idxRefs = m.idxRefs, props = m.props)
+      carryAll(m).copy(schema = newSchema)
     }
     publish(spark, root, next)
     next
@@ -5282,10 +5102,7 @@ object VersionedTable {
             .putString(DefaultPreKey, renderPreMap(pre)).build())
     }
     val next = stageVersion(fs, root, cur + 1, s"add-column:$name", m.keys) { _ =>
-      Staged(m.partCols, StructType(m.schema.fields :+ field),
-        m.mapping, m.stats, m.blooms, m.txns, m.dirRows, m.dirFiles,
-        m.bloomRefs, dvRefs = m.dvs, dirBytes = m.dirBytes,
-        checks = m.checks, derived = m.derived, dirVers = fullDirVers(m), idxRefs = m.idxRefs, props = m.props)
+      carryAll(m).copy(schema = StructType(m.schema.fields :+ field))
     }
     publish(spark, root, next)
     next
@@ -5322,22 +5139,15 @@ object VersionedTable {
     // the dropped column's index entries die with it — MATERIALIZE the
     // block-held index, strip the column, and re-emit everything fresh
     // (carrying block refs verbatim would resurrect its stats on read)
-    val (allStats, allBloomRefs) = m.materializeIdx(fs, root)
+    val (allStats, allBlooms) = m.materializeIdx(fs, root)
     val next = stageVersion(fs, root, cur + 1, s"drop-column:$name", m.keys) { _ =>
-      Staged(m.partCols,
-        StructType(m.schema.filterNot(_.name == name)), m.mapping,
-        allStats.map { case (f, cols) => f -> (cols - name) }
-          .filter(_._2.nonEmpty),
-        m.blooms.map { case (f, cols) => f -> (cols - name) }
-          .filter(_._2.nonEmpty),
-        m.txns, m.dirRows, m.dirFiles,
-        allBloomRefs.map { case (f, cols) => f -> (cols - name) }
-          .filter(_._2.nonEmpty),
-        dvRefs = m.dvs, dirBytes = m.dirBytes, checks = m.checks,
+      carryAll(m).copy(schema = StructType(m.schema.filterNot(_.name == name)),
+        stats = withoutCols(allStats, _ == name),
+        blooms = withoutCols(allBlooms, _ == name),
         // a registration referencing the dropped column dies with it
         derived = m.derived.filter { case (p, (_, src)) =>
           src != name && p != name },
-        dirVers = fullDirVers(m), idxRefs = Map.empty, props = m.props)
+        idxRefs = Map.empty)
     }
     publish(spark, root, next)
     next
@@ -5614,11 +5424,10 @@ object VersionedTable {
     if (m.mapping.isEmpty) return cur // already empty: commit nothing
     try {
       val next = stageVersion(fs, root, cur + 1, "truncate", m.keys) { _ =>
-        Staged(m.partCols, m.schema, Map.empty, Map.empty, Map.empty,
-          m.txns, Map.empty, Map.empty, Map.empty,
-          dvRefs = Map.empty, dirBytes = Map.empty, checks = m.checks,
-          derived = m.derived, dirVers = Map.empty, idxRefs = Map.empty,
-          props = m.props)
+        Staged(m.partCols, m.schema, Map.empty, txns = m.txns,
+          checks = m.checks, dirRows = Map.empty, dirFiles = Map.empty,
+          dirBytes = Map.empty, derived = m.derived, dirVers = Map.empty,
+          idxRefs = Map.empty, props = m.props)
       }
       publish(spark, root, next)
       next
@@ -5652,11 +5461,9 @@ object VersionedTable {
       throw new java.io.FileNotFoundException(s"no committed version at $root"))
     try {
       val next = stageVersion(fs, root, cur + 1, "replace", keys) { _ =>
-        Staged(partCols, schema, Map.empty, Map.empty, Map.empty,
-          Map.empty, Map.empty, Map.empty, Map.empty,
-          dvRefs = Map.empty, dirBytes = Map.empty, checks = Map.empty,
-          derived = Map.empty, dirVers = Map.empty, idxRefs = Map.empty,
-          props = Map.empty)
+        Staged(partCols, schema, Map.empty, dirRows = Map.empty,
+          dirFiles = Map.empty, dirBytes = Map.empty, derived = Map.empty,
+          dirVers = Map.empty, idxRefs = Map.empty, props = Map.empty)
       }
       publish(spark, root, next)
       next
@@ -5675,9 +5482,8 @@ object VersionedTable {
     * the column-mapping note above scanUnion). Continuity carries
     * everything the column owns:
     *
-    *  - stats/bloom index entries (inline AND sidecar-block-held — the
-    *    block index is materialized and re-keyed, like dropColumn) keep
-    *    pruning under the new name;
+    *  - stats/bloom index entries (the block index is materialized and
+    *    re-keyed, like dropColumn) keep pruning under the new name;
     *  - CHECK constraint expressions are rewritten to reference it;
     *  - derived-partition registrations tracking it as SOURCE follow;
     *  - merge keys rename with it.
@@ -5741,18 +5547,16 @@ object VersionedTable {
     // index continuity: MATERIALIZE the block-held index and re-key the
     // renamed column's entries (carrying block refs verbatim would keep
     // serving them under the dead name)
-    val (allStats, allBloomRefs) = m.materializeIdx(fs, root)
+    val (allStats, allBlooms) = m.materializeIdx(fs, root)
     def rekey[A](mm: Map[String, Map[String, A]])
         : Map[String, Map[String, A]] =
       mm.map { case (f, cols) => f -> cols.map { case (c, v) =>
         (if (c == from) to else c) -> v } }
     val next = stageVersion(fs, root, cur + 1,
         s"rename-column:$from>$to", newKeys) { _ =>
-      Staged(m.partCols, newSchema, m.mapping, rekey(allStats),
-        rekey(m.blooms), m.txns, m.dirRows, m.dirFiles,
-        rekey(allBloomRefs), dvRefs = m.dvs, dirBytes = m.dirBytes,
-        checks = newChecks, derived = newDerived,
-        dirVers = fullDirVers(m), idxRefs = Map.empty, props = m.props)
+      carryAll(m).copy(schema = newSchema, stats = rekey(allStats),
+        blooms = rekey(allBlooms), checks = newChecks, derived = newDerived,
+        idxRefs = Map.empty)
     }
     publish(spark, root, next)
     next
@@ -5837,7 +5641,7 @@ object VersionedTable {
       .toMap
     val newSchema = StructType(m.schema.map(f =>
       toOf.get(f.name).fold(f)(t => f.copy(dataType = t))))
-    val (allStats, allBloomRefs) = m.materializeIdx(fs, root)
+    val (allStats, allBlooms) = m.materializeIdx(fs, root)
     val retagged = allStats.map { case (f, cs) => f -> cs.map {
       case (c, st) if toOf.contains(c) && st.dtJson.contains(fromJson(c)) =>
         c -> st.copy(dtJson = Some(toOf(c).json))
@@ -5846,15 +5650,8 @@ object VersionedTable {
     val op = cols.map { case (n, t) => s"$n:${t.simpleString}" }
       .mkString("widen-column:", ",", "")
     val next = stageVersion(fs, root, cur + 1, op, m.keys) { _ =>
-      Staged(m.partCols, newSchema, m.mapping, retagged,
-        m.blooms.map { case (f, cs) => f -> (cs -- widened) }
-          .filter(_._2.nonEmpty),
-        m.txns, m.dirRows, m.dirFiles,
-        allBloomRefs.map { case (f, cs) => f -> (cs -- widened) }
-          .filter(_._2.nonEmpty),
-        dvRefs = m.dvs, dirBytes = m.dirBytes, checks = m.checks,
-        derived = m.derived, dirVers = fullDirVers(m),
-        idxRefs = Map.empty, props = m.props)
+      carryAll(m).copy(schema = newSchema, stats = retagged,
+        blooms = withoutCols(allBlooms, widened), idxRefs = Map.empty)
     }
     publish(spark, root, next)
     next
@@ -6058,10 +5855,9 @@ object VersionedTable {
           k -> pick3(forkM.props.get(k), curM.props.get(k),
             brM.props.get(k), s"table property '$k'")
         }.collect { case (k, Some(v)) => k -> v }.toMap
-      def changed(m: Manifest): Set[String] = {
-        val mv = fullDirVers(m); val fv = fullDirVers(forkM)
-        (mv.keySet ++ fv.keySet).filter(r => mv.get(r) != fv.get(r))
-      }
+      def changed(m: Manifest): Set[String] =
+        (m.dirVers.keySet ++ forkM.dirVers.keySet)
+          .filter(r => m.dirVers.get(r) != forkM.dirVers.get(r))
       val tChanged = changed(curM)
       val bChanged = changed(brM)
       val overlap = tChanged intersect bChanged
@@ -6119,31 +5915,26 @@ object VersionedTable {
       // same discipline dropColumn applies
       val schemaChanged = schema != curM.schema || schema != brM.schema
       val cols = schema.fieldNames.toSet
-      def colScoped[A](x: Map[String, Map[String, A]]) =
-        x.map { case (f, cs) => f -> cs.filter(c => cols(c._1)) }
-          .filter(_._2.nonEmpty)
-      val (mergedStats, mergedRefs) =
-        if (!schemaChanged)
-          (fileScoped(curM.stats, brM.stats),
-            fileScoped(curM.bloomRefs, brM.bloomRefs))
+      val (mergedStats, mergedBlooms) =
+        if (!schemaChanged) (Map.empty[String, Map[String, ColStat]],
+          Map.empty[String, Map[String, (String, Long, Int)]])
         else {
           val (ts, tr) = curM.materializeIdx(fs, tableRoot(target))
           val (bs, br) = brM.materializeIdx(fs, tableRoot(target))
-          (colScoped(fileScoped(ts, bs)), colScoped(fileScoped(tr, br)))
+          (withoutCols(fileScoped(ts, bs), c => !cols(c)),
+            withoutCols(fileScoped(tr, br), c => !cols(c)))
         }
       val next = stageVersion(fs, target, cur + 1, s"fast-forward:$name",
           pick3(forkM.keys, curM.keys, brM.keys, "merge keys")) { _ =>
         Staged(curM.partCols, schema, mapping,
-          stats = mergedStats,
-          blooms = colScoped(fileScoped(curM.blooms, brM.blooms)),
-          txns = txns,
+          stats = mergedStats, blooms = mergedBlooms, txns = txns,
+          dvRefs = fileScoped(curM.dvs, brM.dvs),
+          checks = checks,
           dirRows = perDir(curM.dirRows, brM.dirRows),
           dirFiles = perDir(curM.dirFiles, brM.dirFiles),
-          bloomRefs = mergedRefs,
-          dvRefs = fileScoped(curM.dvs, brM.dvs),
           dirBytes = perDir(curM.dirBytes, brM.dirBytes),
-          checks = checks, derived = derived,
-          dirVers = perDir(fullDirVers(curM), fullDirVers(brM)),
+          derived = derived,
+          dirVers = perDir(curM.dirVers, brM.dirVers),
           // per-dir index refs merge the same way the dirs do — block
           // slices are immutable, so the target simply references the
           // branch's _idx sidecars for branch-won dirs (schema changes
@@ -6240,9 +6031,7 @@ object VersionedTable {
       : Option[(Set[String], Set[String])] =
     blockHeldBloomSidecars(fs, base, ms).map { blockHeld =>
       (ms.flatMap(_.mapping.values).toSet,
-        ms.flatMap(_.bloomRefs.valuesIterator.flatMap(_.valuesIterator))
-          .map(_._1).toSet ++
-          ms.flatMap(_.dvs.valuesIterator).map(_._1).toSet ++
+        ms.flatMap(_.dvs.valuesIterator).map(_._1).toSet ++
           ms.flatMap(_.idxRefs.valuesIterator).map(_.sidecar).toSet ++
           blockHeld)
     }
@@ -6307,7 +6096,7 @@ object VersionedTable {
     }
     val retained = parsed.collect { case scala.util.Success(m) => m }
     // a retained manifest may reference OLDER versions' sidecars
-    // (carried bloom refs, incl. refs held INSIDE _idx blocks) — those
+    // (carried _idx blocks and the bloom refs held INSIDE them) — those
     // survive with it; an unreadable slice disables deletion this pass
     // (like an unparseable manifest)
     val live = liveRefs(fs, b, retained)

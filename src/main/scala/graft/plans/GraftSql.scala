@@ -1605,8 +1605,8 @@ case class GraftShowBranchesCommand(root: String)
 /** `DESCRIBE DETAIL graft.`root`` — Delta's one-row table summary from
   * manifest metadata alone (zero data I/O): current version, partition
   * layout, derived-partition registrations, CHECK constraints, live
-  * partition/row/byte totals (nulls where pre-index manifests lack
-  * coverage), and merge-on-read DV rows awaiting materialization.
+  * partition/row/byte totals, and merge-on-read DV rows awaiting
+  * materialization.
   * `graft_partitions('/root')` is the per-partition drilldown. */
 case class GraftDetailCommand(root: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
@@ -1618,8 +1618,8 @@ case class GraftDetailCommand(root: String) extends LeafRunnableCommand {
     AttributeReference("expectations", StringType, nullable = false)(),
     AttributeReference("merge_keys", StringType, nullable = false)(),
     AttributeReference("num_partitions", IntegerType, nullable = false)(),
-    AttributeReference("total_rows", LongType, nullable = true)(),
-    AttributeReference("total_bytes", LongType, nullable = true)(),
+    AttributeReference("total_rows", LongType, nullable = false)(),
+    AttributeReference("total_bytes", LongType, nullable = false)(),
     AttributeReference("dv_deleted_rows", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     // ONE manifest resolution for every field: per-accessor re-reads
@@ -1641,16 +1641,11 @@ case class GraftDetailCommand(root: String) extends LeafRunnableCommand {
         e.quarantineRoot.fold("")(q => s" INTO $q")
     }.mkString("; ")
     val partCols = m.partCols.mkString(", ")
-    def total(i: Int): java.lang.Long =
-      if (parts.exists(_.isNullAt(i))) null
-      else java.lang.Long.valueOf(parts.map(_.getLong(i)).sum)
-    val dv = parts.map(_.getLong(6)).sum
-    val rows = total(3) match {
-      case null => null
-      case t => java.lang.Long.valueOf(t - dv) // live rows, like COUNT
-    }
+    def total(i: Int): Long = parts.map(_.getLong(i)).sum
+    val dv = total(6)
+    // live rows, like COUNT
     Seq(Row(v, partCols, derived, checks, expects, m.keys.mkString(", "),
-      parts.length, rows, total(5), java.lang.Long.valueOf(dv)))
+      parts.length, total(3) - dv, total(5), dv))
   }
 }
 
@@ -1985,14 +1980,14 @@ case class GraftMvRefreshCommand(viewRoot: String)
 /** `DESCRIBE HISTORY graft.`root`` — one row per still-committed version:
   * its commit instant (the `_commit.N` marker's create time) and LIVE
   * rows from manifest metadata via the same arithmetic the COUNT(*)
-  * fold uses (deletion-vector rows subtracted; null when any live dir
-  * predates per-dir row counts). No data files touched. */
+  * fold uses (deletion-vector rows subtracted). No data files
+  * touched. */
 case class GraftHistoryCommand(root: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("version", IntegerType, nullable = false)(),
     AttributeReference("operation", StringType, nullable = true)(),
     AttributeReference("committed_at", TimestampType, nullable = false)(),
-    AttributeReference("total_rows", LongType, nullable = true)(),
+    AttributeReference("total_rows", LongType, nullable = false)(),
     AttributeReference("expect_violations", StringType, nullable = true)())
   override def run(spark: SparkSession): Seq[Row] = {
     val cur = VersionedTable.currentVersion(spark, root).getOrElse(
@@ -2001,7 +1996,6 @@ case class GraftHistoryCommand(root: String) extends LeafRunnableCommand {
     VersionedTable.historyDetail(spark, root).map { case (v, ms) =>
       val m = VersionedTable.resolveManifestAt(spark, root, v, cur)
       val rows = VersionedTable.manifestCount(m)
-        .map(java.lang.Long.valueOf).orNull
       // per-commit gate counts ("name=n", name-sorted) — null when the
       // commit ran no gate; graft_expect_log() is the typed relation
       val exp =

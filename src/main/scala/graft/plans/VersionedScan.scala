@@ -131,9 +131,8 @@ object VersionedScan {
   * [[PruneVersionedScan]]. The second (non-product) parameter list pins
   * the already-resolved manifest and the owning session, so plan equality
   * and tree rendering stay keyed on (root, version, schema) while the
-  * rule needs no I/O and no SparkSession.active. sizeInBytes is
-  * conservatively large so join planning never broadcasts an unresolved
-  * table. */
+  * rule needs no I/O and no SparkSession.active. Statistics are exact,
+  * from the pinned manifest's per-dir counts. */
 case class VersionedRelation(root: String, asOfVersion: Option[Int],
                              tableSchema: StructType,
                              output: Seq[Attribute])(
@@ -145,12 +144,10 @@ case class VersionedRelation(root: String, asOfVersion: Option[Int],
   // exact statistics from the pinned manifest, zero I/O: data bytes from
   // the per-dir byte index and the exact row count (DV cardinalities
   // subtracted) — mid-optimization consumers (join reorder, runtime
-  // bloom-filter injection) see the truth instead of the conservative
-  // "never broadcast" default a pre-feature manifest falls back to
+  // bloom-filter injection) see the truth
   override def computeStats(): Statistics = Statistics(
-    sizeInBytes = VersionedTable.manifestSizeBytes(manifest)
-      .map(BigInt(_)).getOrElse(BigInt(Long.MaxValue) / 16),
-    rowCount = VersionedTable.manifestCount(manifest).map(BigInt(_)))
+    sizeInBytes = BigInt(VersionedTable.manifestSizeBytes(manifest)),
+    rowCount = Some(BigInt(VersionedTable.manifestCount(manifest))))
   // self-joins of one table() frame: the analyzer's DeduplicateRelations
   // re-instances leaves through this, like every built-in relation
   override def newInstance(): VersionedRelation =
@@ -216,7 +213,7 @@ object PruneVersionedScan extends Rule[LogicalPlan] with PredicateHelper {
       e match {
         case AggregateExpression(Count(Seq(Literal(v, _))), _, false, None, _)
             if v != null =>
-          VersionedTable.manifestCount(m).map(n => n: Any)
+          Some(VersionedTable.manifestCount(m): Any)
         // count(col) = total - recorded nulls, same coverage proof as
         // min/max (for NON-nullable columns Catalyst already rewrote
         // count(c) to count(1) before this rule sees it)

@@ -103,7 +103,7 @@ object SemDedup {
     // array only for (probably equal) colliding rows.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(xxhash64(col(vec)), col(vec))
-    // Materialize the windowed frame ONCE (conf-gated): its three
+    // Materialize the windowed frame ONCE: its three
     // consumers — the verify self-join's two sides and the star-edge
     // leg — do not share one query execution (a broadcast build side
     // materializes as its own execution, so ReusedExchange cannot
@@ -112,21 +112,16 @@ object SemDedup {
     // consumer. Same decision the BPE loop documents: the checkpoint is
     // load-bearing plan hygiene, not caching. At cluster scale replace
     // with a durable staging write if executor loss matters
-    // (localCheckpoint is not resilient); `spark.graft.semdedup
-    // .materialize=none` opts out and keeps the pure-plan form.
+    // (localCheckpoint is not resilient).
     // explicit-N round-robin repartition AFTER the window, BEFORE the
     // checkpoint: AQE coalesces the window's small ENSURE_REQUIREMENTS
     // exchange to one partition, and a 1-partition checkpoint would
     // serialize every downstream verify task onto a single core no
     // matter the cluster (the 1-split trap the multimodal featurize leg
     // pins). A user-specified partition count is not AQE-coalescible.
-    val withRep0 = collapsible.withColumn("__rep", min(col(id)).over(w))
+    val withRep = collapsible.withColumn("__rep", min(col(id)).over(w))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val withRep = df.sparkSession.conf
-      .get("spark.graft.semdedup.materialize", "local") match {
-      case "none" => withRep0
-      case _ => withRep0.localCheckpoint()
-    }
+      .localCheckpoint()
     val starEdges = withRep.filter(col(id) =!= col("__rep"))
       .select(col("__rep").as("id1"), col(id).as("id2"))
     val degenerate = df.filter(col(vec).isNotNull)

@@ -44,6 +44,22 @@ class ExpectationsSpec extends SparkSpec {
     }
   }
 
+  test("a gated commit's stream watermark reads back; replays no-op") {
+    val root = fresh("txn")
+    Expectations.add(spark, root, "v_nonneg", "v >= 0",
+      Expectations.DropRows)
+    def up(bid: Long) = VersionedTable.upsert(spark, root,
+      Seq((500, "g0", 1L), (501, "g1", -1L)).toDF("id", "grp", "v"),
+      Seq("id", "grp"), Seq("grp"), txn = Some(("s1", bid)))
+    up(1)
+    // the gate's #expectlog lines precede #txn in the manifest header
+    assert(VersionedTable.lastTxn(spark, root, "s1").contains(1L))
+    val before = VersionedTable.history(spark, root)
+    up(1)
+    assert(VersionedTable.history(spark, root) == before,
+      "a replayed batch of a gated stream must not commit again")
+  }
+
   test("QUARANTINE mode: violations route keyed; replay re-quarantines " +
       "the same rows without duplicates") {
     val root = fresh("quar")

@@ -724,9 +724,9 @@ class OpsSpec extends SparkSpec {
   test("VersionedTable: stats without a verifiable type tag never prune") {
     // the type tag is what makes carried stats safe under schema
     // evolution (Date->Timestamp re-renders epoch-days as epoch-µs);
-    // simulate the unverifiable case by stripping the tag field from the
-    // committed manifest — the reader must treat those stats as unusable
-    // (scan everything, exact results) rather than mis-skip
+    // simulate a mismatched tag by editing the committed index block —
+    // the reader must treat those stats as unusable (scan everything,
+    // exact results) rather than mis-skip
     val dir = java.nio.file.Files.createTempDirectory("graft_vttag").toString
     val root = s"$dir/table"
     VersionedTable.upsert(spark, root,
@@ -735,25 +735,39 @@ class OpsSpec extends SparkSpec {
       fileRows = Some(20))
     val (k0, t0) = VersionedTable.skipStats(spark, root, "v", 0, 10)
     assert(t0 >= 4 && k0 < t0, s"fixture should skip: $k0/$t0")
-    // stats live in the _idx sidecar's per-dir blocks: splice them back
-    // into the manifest as LEGACY INLINE lines stripped to 6 fields
-    // (pre-type-tag format) and drop the #diridx refs — exactly what a
-    // pre-tag manifest looks like, exercising the legacy parse path too
+    // the stats live in the _idx.0 sidecar's one per-dir block (a single
+    // partition): re-tag every #filestat line as `long` although `v` is
+    // an integer column, then point the manifest's #diridx slice at the
+    // block's new length
+    def b64(x: String) = java.util.Base64.getEncoder
+      .encodeToString(x.getBytes("UTF-8"))
     val mf = java.nio.file.Paths.get(root, "_manifest.0")
     val idxF = java.nio.file.Paths.get(root, "_idx.0")
-    val untagged = new String(java.nio.file.Files.readAllBytes(idxF),
-        "UTF-8").split("\n").filter(_.startsWith("#filestat\t"))
-      .map(_.split("\t", -1).take(6).mkString("\t"))
-      .mkString("", "\n", "\n")
-    val stripped = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-      .split("\n").filterNot(_.startsWith("#diridx\t"))
-      .mkString("", "\n", "\n") + untagged
-    java.nio.file.Files.write(mf, stripped.getBytes("UTF-8"))
-    // drop the local-FS checksum sidecars invalidated by the raw rewrite
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, "._manifest.0.crc"))
+    val block = new String(java.nio.file.Files.readAllBytes(idxF), "UTF-8")
+      .split("\n").map { l =>
+        if (!l.startsWith("#filestat\t")) l
+        else {
+          val parts = l.split("\t", -1)
+          assert(parts(6) == b64("\"integer\""), l)
+          parts.updated(6, b64("\"long\"")).mkString("\t")
+        }
+      }.mkString("", "\n", "\n").getBytes("UTF-8")
+    java.nio.file.Files.write(idxF, block)
+    val manifest = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
+      .split("\n").map { l =>
+        if (!l.startsWith("#diridx\t")) l
+        else {
+          val parts = l.split("\t", -1)
+          assert(parts(3) == "0", s"one block expected: $l")
+          parts.updated(4, block.length.toString).mkString("\t")
+        }
+      }.mkString("", "\n", "\n")
+    java.nio.file.Files.write(mf, manifest.getBytes("UTF-8"))
+    // drop the local-FS checksum sidecars invalidated by the raw rewrites
+    Seq("._manifest.0.crc", "._idx.0.crc").foreach(n =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(root, n)))
     val (k1, t1) = VersionedTable.skipStats(spark, root, "v", 0, 10)
-    assert((k1, t1) == (0, 0), s"untagged stats must not be indexed: $k1/$t1")
+    assert((k1, t1) == (0, 0), s"mis-tagged stats must not be indexed: $k1/$t1")
     assert(VersionedTable.readWhere(spark, root, "v", 0, 10)
       .select($"id").as[Int].collect().toSet == (0 to 10).toSet)
   }
@@ -2787,7 +2801,7 @@ class OpsSpec extends SparkSpec {
     assert(rows() == Map(1 -> "a", 2 -> "b"))
   }
 
-  test("VersionedTable.fastCount: metadata-only counts, carry, coverage fallback") {
+  test("VersionedTable.fastCount: metadata-only counts, carry, old shapes refused") {
     val root = java.nio.file.Files.createTempDirectory("graft_fastcount")
       .toString + "/table"
     val keys = Seq("id", "day")
@@ -2807,20 +2821,43 @@ class OpsSpec extends SparkSpec {
     check() // delete rewrites + drops reflected
     VersionedTable.compact(spark, root)
     check() // full rewrite recounted
-    // pre-feature manifests (no #dirrows lines) must report None, never
-    // a wrong count: strip the directive from the current manifest
+    // the reader accepts only what the current writer writes: an older
+    // header, an inline file-index line, or a mapped dir missing any of
+    // its per-dir lines fails the read loudly, never a wrong count
     val cur = VersionedTable.currentVersion(spark, root).get
     val mp = new org.apache.hadoop.fs.Path(root, s"_manifest.$cur")
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val txt = new String(
       org.apache.hadoop.io.IOUtils.readFullyToByteArray(fs.open(mp)),
       java.nio.charset.StandardCharsets.UTF_8)
-    fs.delete(mp, false)
-    val out = fs.create(mp, false)
-    out.write(txt.split("\n").filterNot(_.startsWith("#dirrows"))
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    assert(VersionedTable.fastCount(spark, root).isEmpty)
+    def writeManifest(lines: Seq[String]): Unit = {
+      fs.delete(mp, false)
+      val out = fs.create(mp, false)
+      out.write(lines.mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.close()
+    }
+    val lines = txt.split("\n").toSeq
+    val inline = "\tZ2VuMC9kYXk9ZDEvZg==\tdg=="
+    val shapes = Seq("#dirrows", "#dirfiles", "#dirbytes", "#dirver").map(
+        tag => s"no $tag" -> lines.filterNot(_.startsWith(tag + "\t"))) ++
+      Seq(
+        "v2 header" -> ("#graft-manifest\t2" +: lines.tail),
+        "inline #filestat" ->
+          (lines :+ s"#filestat$inline\t-\t-\t0\t-"),
+        "inline #filebloom" -> (lines :+ s"#filebloom$inline\tAAAA"),
+        "inline #filebloomref" ->
+          (lines :+ s"#filebloomref$inline\t_bloomx.0\t0\t8"))
+    shapes.foreach { case (what, shape) =>
+      writeManifest(shape)
+      val e = intercept[IllegalArgumentException] {
+        VersionedTable.fastCount(spark, root)
+      }
+      assert(e.getMessage.contains("unrecognized manifest format"),
+        s"$what: ${e.getMessage}")
+    }
+    writeManifest(lines)
+    check() // the untouched manifest still reads
   }
 
   test("VersionedTable.fastMinMax: typed metadata min/max, provable coverage only") {
@@ -2853,7 +2890,8 @@ class OpsSpec extends SparkSpec {
     // unindexed column and partition column: None, never a guess
     assert(VersionedTable.fastMinMax(spark, root, "id").isEmpty)
     assert(VersionedTable.fastMinMax(spark, root, "day").isEmpty)
-    // a dir losing file-count coverage poisons the whole answer
+    // a manifest whose dir lost its file count (the coverage proof) is
+    // not a shape the writer emits: the read fails, never a guess
     val cur = VersionedTable.currentVersion(spark, root).get
     val mp = new org.apache.hadoop.fs.Path(root, s"_manifest.$cur")
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2865,7 +2903,10 @@ class OpsSpec extends SparkSpec {
     out.write(txt.split("\n").filterNot(_.startsWith("#dirfiles"))
       .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
-    assert(VersionedTable.fastMinMax(spark, root, "s").isEmpty)
+    val e = intercept[IllegalArgumentException] {
+      VersionedTable.fastMinMax(spark, root, "s")
+    }
+    assert(e.getMessage.contains("unrecognized manifest format"))
   }
 
   test("VersionedTable add/dropColumn: metadata-only DDL, old files project through") {

@@ -673,45 +673,14 @@ class TextDedupSpec extends SparkSpec {
     assert(DedupIndex.refresh(spark, idx) == v)
   }
 
-  test("DedupIndex: a pre-epoch legacy index migrates by rebuild; " +
-      "reserved column names refuse at create") {
+  test("DedupIndex: reserved column names refuse at create") {
     import graft.dedup.DedupIndex
     import graft.ops.VersionedTable
-    val base = java.nio.file.Files.createTempDirectory("graft_dedupleg")
-    val (src, idx) = (s"$base/src", s"$base/idx")
-    def doc(i: Long) = (i, s"legacy doc number $i with a shared tail", "p0")
-    VersionedTable.upsert(spark, src, Seq(doc(1), doc(2))
-      .toDF("doc_id", "text", "part"), Seq("doc_id", "part"), Seq("part"))
-    // fake the PRE-EPOCH layout by hand: spec file + a (band_idx)-
-    // partitioned index table synced to source v0
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(idx), spark.sparkContext.hadoopConfiguration)
-    def b64(s: String) = java.util.Base64.getEncoder
-      .encodeToString(s.getBytes("UTF-8"))
-    val out = fs.create(new org.apache.hadoop.fs.Path(idx, "_dedupindex"), false)
-    out.write((s"#graft-dedupindex\t1\n#src\t${b64(src)}\n" +
-      s"#id\t${b64("doc_id")}\n#text\t${b64("text")}\n" +
-      "#n\t2\n#perm\t64\n#bands\t32\n#seed\t42\n").getBytes("UTF-8"))
-    out.close()
-    VersionedTable.upsert(spark, idx,
-      Seq((0, 123L, 1L), (1, 456L, 2L)).toDF("band_idx", "band_hash", "doc_id"),
-      keys = Seq("band_idx", "band_hash", "doc_id"),
-      partCols = Seq("band_idx"),
-      txn = Some(("dedupindex:" + src, 0L)))
-    // a new-source commit forces a refresh; the legacy layout must
-    // rebuild into epochs instead of wedging on the partCols check
-    VersionedTable.upsert(spark, src, Seq(doc(3)).toDF("doc_id", "text", "part"),
-      Seq("doc_id", "part"), Seq("part"))
-    DedupIndex.refresh(spark, idx)
-    assert(DedupIndex.lastRefreshRebuild && DedupIndex.lastRefreshDocs == 3)
-    val parts = VersionedTable.filesMeta(spark, idx)
-      .select("partition").collect().map(_.getString(0)).toSet
-    assert(parts.nonEmpty && parts.forall(_.contains("/epoch=")),
-      s"legacy index did not migrate to the epoch layout: $parts")
-    val hits = DedupIndex.verifiedPairs(spark, idx,
-      Seq((9L, doc(1)._2)).toDF("doc_id", "text"), 0.5)
-      .select($"corpus_id").as[Long].collect().toSet
-    assert(hits.contains(1L), s"migrated index lost the corpus: $hits")
+    val base = java.nio.file.Files.createTempDirectory("graft_dedupres")
+    val src = s"$base/src"
+    VersionedTable.upsert(spark, src,
+      Seq((1L, "a reserved-name doc", "p0"), (2L, "another doc", "p0"))
+        .toDF("doc_id", "text", "part"), Seq("doc_id", "part"), Seq("part"))
     // reserved names refuse loudly at create
     val e = intercept[IllegalArgumentException] {
       DedupIndex.create(spark, s"$base/idx2", src, "epoch", "text")
