@@ -64,8 +64,6 @@ object MatView {
                   buckets: Int,
                   avgs: Seq[(String, String)] = Nil,
                   distincts: Seq[(String, String)] = Nil) {
-    private[graft] def deltaOnly: Boolean =
-      mins.isEmpty && maxs.isEmpty && distincts.isEmpty
     /** Aliases whose STORED column name equals the served name. */
     private[graft] def measureAliases: Seq[String] =
       sums.map(_._1) ++ mins.map(_._1) ++ maxs.map(_._1)

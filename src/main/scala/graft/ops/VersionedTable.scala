@@ -1256,12 +1256,6 @@ object VersionedTable {
     count(df.queryExecution.executedPlan)
   }
 
-  /** The committed (or as-of) schema — for building logical-plan leaves
-    * over the table. */
-  private[graft] def schemaOf(spark: SparkSession, root: String,
-                              asOfVersion: Option[Int]): StructType =
-    resolveManifest(spark, root, asOfVersion).schema
-
   /** Range-keep decision for [[readWhereIn]]/[[skipStats]]: a file
     * survives when it has no usable stat (conservative) or its recorded
     * min/max overlaps ANY query range; all-null files are skipped (a
@@ -2018,83 +2012,71 @@ object VersionedTable {
   private def dirsBytes(m: Manifest, rels: Iterator[String]): BigInt =
     rels.map(r => BigInt(m.dirBytes(r))).sum
 
+  /** Optimizer size estimate up to which [[commitSession]] plans a
+    * commit (or a [[smallQuery]]) statically. */
+  private val StaticMaxBytes: BigInt = BigInt(256L * 1024 * 1024)
+
+  /** Shuffle partitions of the static clone. */
+  private val StaticShufflePartitions = 8
+
+  /** The static clone's conf overrides. */
+  private val StaticOverrides = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> StaticShufflePartitions.toString,
+    // limit(n).collect() on a SMALL plan: executeTake's partition ramp
+    // (1, then xscaleUpFactor, ...) costs 3 jobs to scan what one wave
+    // covers — the engine's capped driver probes (changed-id lists,
+    // uniqueness checks) usually read everything anyway, so scan all
+    // partitions in the first job
+    "spark.sql.limit.initialNumPartitions" -> "10000")
+
   /** The session a staged commit's write-side queries should EXECUTE
-    * under, keyed by `spark.graft.commit.aqe`:
-    *
-    *  - `auto` (default): when the staged input's OPTIMIZER SIZE
-    *    ESTIMATE is at most `spark.graft.commit.aqeAutoMaxBytes`
-    *    (256 MB), plan the stage's queries with adaptive execution OFF
-    *    and `spark.graft.commit.smallShufflePartitions` (8) shuffle
-    *    partitions. A small commit's write is then ONE statically
-    *    planned job instead of 5-7 AQE stage-materialization jobs —
-    *    the CommitCostProbe-measured fixed cost that priced every
-    *    lifecycle commit ~1s regardless of data. Misestimates are
-    *    benign in both directions: an overestimate keeps AQE (costs
-    *    jobs, not correctness), an underestimate statically plans a
-    *    big write — the classic pre-AQE plan.
-    *  - `on`: never override — every commit keeps the session's AQE
-    *    (multi-GB commits on a real cluster want runtime re-planning
-    *    for skew/coalescing; set this when commits are routinely big).
-    *  - `off`: always plan commits statically.
+    * under. When the staged input's OPTIMIZER SIZE ESTIMATE is at most
+    * [[StaticMaxBytes]] (256 MB), plan the stage's queries with adaptive
+    * execution OFF and [[StaticShufflePartitions]] (8) shuffle
+    * partitions. A small commit's write is then ONE statically planned
+    * job instead of 5-7 AQE stage-materialization jobs — the
+    * CommitCostProbe-measured fixed cost that priced every lifecycle
+    * commit ~1s regardless of data. Misestimates are benign in both
+    * directions: an overestimate keeps AQE (costs jobs, not
+    * correctness), an underestimate statically plans a big write — the
+    * classic pre-AQE plan. An unknown estimate keeps AQE.
     *
     * AQE's planner rule reads `sessionState.conf` directly, so the
-    * override needs a SESSION, not a thread-local: a fresh clone
-    * (shared SparkContext, snapshotted conf — so it also tracks
-    * session-level settings like the parquet timestamp type at their
-    * values for THIS commit) that plans built on the caller's session
-    * re-bind onto at their terminal action (SessionBridge.rebind).
-    * Cloning per commit keeps PAR-N benches and concurrent writers
-    * fully isolated. */
+    * override needs a SESSION, not a thread-local: a clone (shared
+    * SparkContext, its own conf) that plans built on the caller's
+    * session re-bind onto at their terminal action
+    * (SessionBridge.rebind). */
   private def commitSession(spark: SparkSession,
-                            sizeHint: => Option[BigInt]): SparkSession = {
-    val small = spark.conf.get("spark.graft.commit.aqe", "auto") match {
-      case "on" => false
-      case "off" => true
-      case _ =>
-        val cap = spark.conf.get("spark.graft.commit.aqeAutoMaxBytes",
-          (256L * 1024 * 1024).toString).toLong
-        scala.util.Try(sizeHint).toOption.flatten.exists(_ <= cap)
-    }
-    if (!small) spark
+                            sizeHint: => Option[BigInt]): SparkSession =
+    if (!scala.util.Try(sizeHint).toOption.flatten
+          .exists(_ <= StaticMaxBytes)) spark
     else {
-      val overrides = Map(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" ->
-          spark.conf.get("spark.graft.commit.smallShufflePartitions", "8"),
-        // limit(n).collect() on a SMALL plan: executeTake's partition
-        // ramp (1, then xscaleUpFactor, ...) costs 3 jobs to scan what
-        // one wave covers — the engine's capped driver probes
-        // (changed-id lists, uniqueness checks) usually read everything
-        // anyway, so scan all partitions in the first job
-        "spark.sql.limit.initialNumPartitions" -> "10000")
-      // ONE cached clone per (parent session, overrides): every
-      // cloneSession registers an execution-listener bus on the shared
-      // SparkContext for the life of the app, so cloning per commit
-      // would leak a listener per lifecycle commit. The cached clone's
-      // conf RE-SYNCS from the parent on each use (compare-before-set —
-      // a stable parent conf makes this a read-only pass), so
-      // session-level settings like the parquet timestamp type keep
-      // tracking their current values; a key the parent UNSET since the
-      // last sync keeps its old value in the clone (acceptable: unset
-      // write-side conf mid-flight is already racy on the parent).
+      // ONE cached clone per parent session: every cloneSession
+      // registers an execution-listener bus on the shared SparkContext
+      // for the life of the app, so cloning per commit would leak a
+      // listener per lifecycle commit. The cached clone's conf RE-SYNCS
+      // from the parent on each use (compare-before-set — a stable
+      // parent conf makes this a read-only pass), so session-level
+      // settings like the parquet timestamp type keep tracking their
+      // current values; a key the parent UNSET since the last sync keeps
+      // its old value in the clone (acceptable: unset write-side conf
+      // mid-flight is already racy on the parent).
       val clone = commitClones.synchronized {
-        val per = Option(commitClones.get(spark)).getOrElse {
-          val m = scala.collection.mutable.Map
-            .empty[Map[String, String], SparkSession]
-          commitClones.put(spark, m)
-          m
+        Option(commitClones.get(spark)).getOrElse {
+          val c = org.apache.spark.sql.graftbridge.SessionBridge
+            .cloneWithConf(spark, StaticOverrides)
+          commitClones.put(spark, c)
+          c
         }
-        per.getOrElseUpdate(overrides, org.apache.spark.sql.graftbridge
-          .SessionBridge.cloneWithConf(spark, overrides))
       }
       spark.conf.getAll.foreach { case (k, v) =>
-        if (!overrides.contains(k) &&
+        if (!StaticOverrides.contains(k) &&
             !clone.conf.getOption(k).contains(v))
           scala.util.Try(clone.conf.set(k, v)) // static confs refuse: skip
       }
       clone
     }
-  }
 
   /** Size-gated STATIC execution for engine-side small queries — the
     * read/maintenance twin of [[commitSession]]. The lifecycle
@@ -2105,15 +2087,14 @@ object VersionedTable {
     * round-trips (QueryCostProbe: q_dedup_index's warm rep = 48 jobs
     * whose summed wall is ~65% of the query's — the rest is the gaps
     * between them). When the plan's OPTIMIZER SIZE ESTIMATE is at most
-    * `spark.graft.commit.aqeAutoMaxBytes` (same knob and clone as the
-    * commit path — one policy, one cached session), re-bind the frame
-    * onto the AQE-off clone so its terminal action plans statically as
-    * ONE job. Size-adaptive, not a local-mode tune: a change-sized
-    * refresh probe at 100 TB is still small, and anything estimated
-    * big (or inestimable — ExistingRDD/checkpoint scans report
-    * unknown) keeps AQE. Results are unaffected: the clone shares the
-    * SparkContext, catalog, and cache manager; only planning differs.
-    * No-op under `spark.graft.commit.aqe=on`. */
+    * [[StaticMaxBytes]] (the commit path's gate and clone — one policy,
+    * one cached session), re-bind the frame onto the AQE-off clone so
+    * its terminal action plans statically as ONE job. Size-adaptive,
+    * not a local-mode tune: a change-sized refresh probe at 100 TB is
+    * still small, and anything estimated big (or inestimable —
+    * ExistingRDD/checkpoint scans report unknown) keeps AQE. Results
+    * are unaffected: the clone shares the SparkContext, catalog, and
+    * cache manager; only planning differs. */
   private[graft] def smallQuery(df: DataFrame): DataFrame =
     smallQuery(df, Some(BigInt(0)))
 
@@ -2168,8 +2149,7 @@ object VersionedTable {
   /** See [[commitSession]]: weak on the parent so short-lived sessions
     * (newSession-per-thread patterns) don't pin their clones. */
   private val commitClones =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[Map[String, String], SparkSession]]
+    new java.util.WeakHashMap[SparkSession, SparkSession]
 
   /** The claim → stage → manifest protocol shared by [[prepare]] and
     * [[compact]]: claim `_manifest.<next>` create-exclusive (the
@@ -2338,6 +2318,18 @@ object VersionedTable {
     }
   }
 
+  /** Row cap of [[prepare]]'s delta probe (Merge.deltaProbe): past it
+    * the commit falls back to the separate entries job. */
+  private val DeltaProbeMaxRows = 4096
+
+  /** Probed key tuples up to which [[prepare]]'s survivors anti-join
+    * inlines the key set as one array_contains filter. */
+  private val InlineKeysMax = 1024
+
+  /** Cap on touched-dir rows × inlined key tuples: the inline filter's
+    * per-row linear scan must stay cheaper than the join it replaces. */
+  private val InlineCmpBudget = 100000000L
+
   /** Stage version `current+1`: claim its manifest (the concurrency
     * guard), write merged data for TOUCHED partitions into a fresh
     * generation dir, then fill in the manifest — everything except the
@@ -2459,23 +2451,20 @@ object VersionedTable {
       // the survivors anti-join's key set on the static small-commit
       // path (Merge.deltaProbe) — replacing the separate distinct+
       // collect job AND the write plan's re-aggregation of the delta's
-      // keys. The row cap guards explode-shaped deltas whose leaf bytes
-      // are small but whose output is not (the leaf-sum gate cannot see
-      // a Generate's fan-out); past it the two-pass shape returns.
+      // keys. The row cap (DeltaProbeMaxRows) guards explode-shaped
+      // deltas whose leaf bytes are small but whose output is not (the
+      // leaf-sum gate cannot see a Generate's fan-out); past it the
+      // two-pass shape returns.
       val probe: Option[(Seq[(Seq[Any], String)], Option[Seq[Seq[Any]]])] =
-        if ((sparkW ne spark) && spark.conf.get(
-            "spark.graft.commit.deltaProbe", "on") != "off") {
-          val probeMax = scala.util.Try(spark.conf.get(
-            "spark.graft.commit.deltaProbeMaxRows", "4096").toInt)
-            .getOrElse(4096)
+        if (sparkW ne spark)
           scala.util.Try(
-            Merge.deltaProbe(sparkW, gated, keys, partCols, probeMax,
+            Merge.deltaProbe(sparkW, gated, keys, partCols, DeltaProbeMaxRows,
               // keys feed ONLY the survivors anti-join: an initial load
               // or an INSERT OVERWRITE has no survivors, so skip the
               // key-set transfer outright
               collectKeys = !replaceAll && prior.nonEmpty))
             .toOption
-        } else None
+        else None
       val entries = probe.map(_._1).getOrElse(
         Merge.partitionDirEntries(sparkW, gated, partCols))
       val valueOf: Map[String, Seq[Any]] = entries.map(_.swap).toMap
@@ -2539,14 +2528,9 @@ object VersionedTable {
           // key types skip the inline path and keep the planner's
           // NormalizeFloatingNumbers treatment). The linear scan per
           // survivor row is budgeted against the manifest's touched-dir
-          // row counts. Bigger/unsafe probed sets become a LocalRelation
-          // build side (no delta re-scan; the join shuffles remain).
-          val inlineMax = scala.util.Try(spark.conf.get(
-            "spark.graft.commit.inlineKeysMax", "1024").toInt)
-            .getOrElse(1024)
-          val inlineCmpBudget = scala.util.Try(spark.conf.get(
-            "spark.graft.commit.inlineCmpBudget", "100000000").toLong)
-            .getOrElse(100000000L)
+          // row counts (InlineCmpBudget). Bigger/unsafe probed sets
+          // become a LocalRelation build side (no delta re-scan; the join
+          // shuffles remain).
           val inlineTypesSafe = keys.indices.forall { i =>
             (keyTypes(i) match {
               case org.apache.spark.sql.types.StringType |
@@ -2568,9 +2552,9 @@ object VersionedTable {
           val touchedRows = touchedLive.keysIterator
             .map(prior.get.dirRows).sum
           val survivorsInline: Option[DataFrame] = probe.flatMap(_._2) match {
-            case Some(tuples) if tuples.size <= inlineMax &&
+            case Some(tuples) if tuples.size <= InlineKeysMax &&
                 inlineTypesSafe && touchedRows *
-                  math.max(tuples.size.toLong, 1L) <= inlineCmpBudget =>
+                  math.max(tuples.size.toLong, 1L) <= InlineCmpBudget =>
               scala.util.Try {
                 if (tuples.isEmpty) old
                 else {
@@ -2957,14 +2941,6 @@ object VersionedTable {
     committed
   }
 
-  /** Claim-loss retry for DECLARATIVE ops (deleteWhere, compact,
-    * repartitionTable, restore, DDL): unlike a merge, these derive
-    * everything from the CURRENT version, so losing the claim race needs
-    * no conflict check — wait for the winner's commit marker and simply
-    * re-run the body against the new current state; the rerun IS the
-    * serialized semantics. A claim that never publishes (crashed writer)
-    * rethrows with the vacuum hint after the bounded wait, exactly like
-    * [[upsert]]. */
   /** A claim-race loser's wait: poll until some version NEWER than
     * `basedOn` is COMMITTED (the winner published) or
     * `graft.versioned.claimWaitMs` elapses — Some(newCurrent) to retry
@@ -2983,6 +2959,14 @@ object VersionedTable {
     if (newCur <= basedOn) None else Some(newCur)
   }
 
+  /** Claim-loss retry for DECLARATIVE ops (deleteWhere, compact,
+    * repartitionTable, restore, DDL): unlike a merge, these derive
+    * everything from the CURRENT version, so losing the claim race needs
+    * no conflict check — wait for the winner's commit marker and simply
+    * re-run the body against the new current state; the rerun IS the
+    * serialized semantics. A claim that never publishes (crashed writer)
+    * rethrows with the vacuum hint after the bounded wait, exactly like
+    * [[upsert]]. */
   private def withClaimRetry[A](spark: SparkSession, root: String,
                                 maxAttempts: Int = 5)(body: => A): A = {
     var attempt = 1

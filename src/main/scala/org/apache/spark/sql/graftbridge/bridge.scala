@@ -13,30 +13,10 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Thread-confined SQLConf overrides: clone the effective conf, apply
-  * `overrides`, and run `f` with the clone installed as the THREAD-LOCAL
-  * SQLConf ([[org.apache.spark.sql.internal.SQLConf.withExistingConf]]).
-  * Every rule and planner decision that reads `SQLConf.get` — adaptive
-  * execution on/off among them — sees the override for plans BUILT AND
-  * EXECUTED inside `f`, while concurrent queries on the same session are
-  * untouched (mutating `spark.conf` would race them). The clone starts
-  * from `SQLConf.get`, not the session conf, so nested withConf blocks
-  * compose. NOTE: code paths that read `sessionState.conf` directly
-  * (e.g. parquet's output-timestamp-type at prepareWrite) do NOT see
-  * these overrides — session-level settings stay the contract there. */
-object ConfBridge {
-  import org.apache.spark.sql.internal.SQLConf
-  def withConf[T](overrides: Map[String, String])(f: => T): T = {
-    val c = SQLConf.get.clone()
-    overrides.foreach { case (k, v) => c.setConfString(k, v) }
-    SQLConf.withExistingConf(c)(f)
-  }
-}
-
 /** Session-scoped conf overrides that planner rules reading
   * `sessionState.conf` DIRECTLY (AQE's InsertAdaptiveSparkPlan among
-  * them — it overrides SQLConfHelper.conf with the session's, so the
-  * [[ConfBridge]] thread-local never reaches it) actually observe:
+  * them — it overrides SQLConfHelper.conf with the session's, so a
+  * thread-local SQLConf never reaches it) actually observe:
   * clone the session (shares the SparkContext; snapshots conf, temp
   * views, injected extensions), apply `overrides` to the CLONE's conf,
   * and re-bind already-analyzed plans onto it for execution. The

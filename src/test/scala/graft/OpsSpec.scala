@@ -3469,4 +3469,63 @@ class OpsSpec extends SparkSpec {
     assert(plan.stats.sizeInBytes == BigInt(liveBytes))
     assert(plan.stats.rowCount.contains(BigInt(201)))
   }
+
+  test("commit gate: small frames share one static clone; a warm small " +
+      "upsert's job and stage counts are pinned") {
+    // one cached clone per parent session: every clone registers a
+    // listener bus on the shared SparkContext for the life of the app,
+    // so a fresh clone per small query would leak one per call
+    val a = VersionedTable.smallQuery(spark.range(10).toDF("id"))
+    val b = VersionedTable.smallQuery(spark.range(20).toDF("id"))
+    assert(a.sparkSession ne spark)
+    assert(a.sparkSession eq b.sparkSession)
+    assert(a.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(a.sparkSession.conf.get("spark.sql.shuffle.partitions") == "8")
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_vtjobs").toString
+    val root = s"$dir/table"
+    val keys = Seq("id", "grp")
+    VersionedTable.upsert(spark, root, (0 until 200)
+      .map(i => (i, s"g${i % 4}", i.toLong)).toDF("id", "grp", "v"),
+      keys, Seq("grp"))
+    // warm-up: the first small commit pays one-off planning/codegen
+    VersionedTable.upsert(spark, root,
+      Seq((1000, "g2", 5L)).toDF("id", "grp", "v"), keys, Seq("grp"))
+    // count only the measured commit's jobs (a thread-local job
+    // property), then wait for a marker job so the asynchronous listener
+    // bus has delivered every earlier job start
+    val tag = "graft.test.commitJobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(tag)) match {
+          case Some("commit") =>
+            jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
+          case Some("marker") => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "commit")
+      VersionedTable.upsert(spark, root,
+        Seq((1001, "g1", 6L), (3, "g3", 7L)).toDF("id", "grp", "v"),
+        keys, Seq("grp"))
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(VersionedTable.read(spark, root).count() == 202)
+    // the static path: one delta-probe job, one write job; the stage
+    // count tells the probe apart from the entries-job fallback (7)
+    assert((jobs.get, stages.get) == (2, 3),
+      s"warm small upsert ran ${jobs.get} jobs, ${stages.get} stages")
+  }
 }
