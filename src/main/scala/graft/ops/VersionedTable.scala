@@ -1438,7 +1438,7 @@ object VersionedTable {
   }
 
   /** Walk the nested `c1=v1/c2=v2/...` leaf dirs a partitioned write
-    * produced under `base` — shared by [[prepare]] and [[compact]]. */
+    * produced under `base`. */
   private def leafDirs(fs: FileSystem, base: Path,
                        partCols: Seq[String]): Seq[String] = {
     def walk(p: Path, rel: Vector[String], depth: Int): Seq[String] =
@@ -1449,6 +1449,12 @@ object VersionedTable {
         .flatMap(s => walk(s.getPath, rel :+ s.getPath.getName, depth + 1))
     walk(base, Vector.empty, 0)
   }
+
+  /** A fresh generation's file index: per-file stats, per-file bloom
+    * refs, and per-dir row, file and byte counts. */
+  private type FreshIndex = (Map[String, Map[String, ColStat]],
+    Map[String, Map[String, (String, Long, Int)]],
+    Map[String, Long], Map[String, Long], Map[String, Long])
 
   /** Per-file min/max/null-count for `statsCols`, per-file Bloom filters
     * for `bloomCols` (payloads written to the version's `_bloomx`
@@ -1477,10 +1483,7 @@ object VersionedTable {
                                bloomCols: Seq[String] = Nil,
                                bloomBits: Long = 8192L,
                                colmap: Map[String, String] = Map.empty,
-                               schema: StructType = null)
-      : (Map[String, Map[String, ColStat]],
-         Map[String, Map[String, (String, Long, Int)]],
-         Map[String, Long], Map[String, Long], Map[String, Long]) = {
+                               schema: StructType = null): FreshIndex = {
     val genDir = genName(root, version)
     val footersOn =
       spark.conf.get("spark.graft.stats.footer", "true").toBoolean
@@ -1915,10 +1918,88 @@ object VersionedTable {
     if (bloomBits > 0) bloomBits
     else fileRows.fold(65536L)(r => math.max(8192L, r.toLong * 10))
 
-  /** [[collectFileStats]]'s result for a write that produced no dirs. */
-  private val noFreshIndex = (Map.empty[String, Map[String, ColStat]],
-    Map.empty[String, Map[String, (String, Long, Int)]],
-    Map.empty[String, Long], Map.empty[String, Long], Map.empty[String, Long])
+  /** Write `rows` as generation `genDir` of version `version` and index
+    * it — the one data-file write of every commit that rewrites
+    * partitions (merge/overwrite, DML rewrites, compaction, repartition).
+    * One writer per partition (see Merge.upsertParquetPruned note);
+    * within it rows cluster on the interleaved z-value of `zOrderCols`
+    * when given, else on `statsCols`, so each data file covers a TIGHT
+    * value range — that's what makes min/max file skipping bite
+    * (liquid-clustering-lite); `fileRows` splits hot partitions into
+    * several skippable files instead of one wide one. `schema` is the
+    * logical schema: renamed columns write their FROZEN physical names
+    * so every generation agrees on file layout. Returns the written leaf
+    * dirs and their fresh file index (empty when nothing was written —
+    * there is no file to infer a schema from). */
+  private def writeGeneration(fs: FileSystem, sparkW: SparkSession,
+                              root: String, version: Int, genDir: String,
+                              rows: DataFrame, partCols: Seq[String],
+                              schema: StructType, statsCols: Seq[String],
+                              bloomCols: Seq[String], bloomBits: Long,
+                              fileRows: Option[Int],
+                              zOrderCols: Seq[String] = Nil)
+      : (Seq[String], FreshIndex) = {
+    val base = rows.repartition(partCols.map(col): _*)
+    val clustered =
+      if (zOrderCols.nonEmpty)
+        ZOrder.withZValueN(base, zOrderCols, "__zval")
+          .sortWithinPartitions((partCols.map(col) :+ col("__zval")): _*)
+          .drop("__zval")
+      else if (statsCols.isEmpty) base
+      else base.sortWithinPartitions((partCols ++ statsCols).map(col): _*)
+    val writer = fileRows.foldLeft(
+      org.apache.spark.sql.graftbridge.SessionBridge.rebind(sparkW,
+        toPhysical(clustered, schema)).write)(
+      (w, n) => w.option("maxRecordsPerFile", n.toLong))
+    writer.partitionBy(partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
+    val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"),
+      partCols)
+    val fresh =
+      if (written.isEmpty)
+        (Map.empty, Map.empty, Map.empty, Map.empty, Map.empty): FreshIndex
+      else collectFileStats(sparkW, root, version, partCols, statsCols,
+        bloomCols, sizedBloomBits(bloomBits, fileRows),
+        colmap = renameMap(schema), schema = schema)
+    (written, fresh)
+  }
+
+  /** The manifest of a commit that rewrote some of `prior`'s dirs into
+    * `newMapping`: the written dirs' fresh index plus, for every dir the
+    * commit left alone, what `prior` recorded. A prior dir's counts and
+    * index ref survive iff its mapping entry is untouched (rewritten
+    * dirs get fresh counts); a prior file's DVs survive iff its
+    * (generation, partition dir) is still what the new mapping points at
+    * — replaced partitions drop their old files' DVs with them. Checks,
+    * derived registrations and properties carry verbatim; the caller
+    * decides the watermarks and each dir's content token. */
+  private def stageRewrite(prior: Option[Manifest], partCols: Seq[String],
+                           schema: StructType,
+                           newMapping: Map[String, String],
+                           fresh: FreshIndex, txns: Map[String, Long],
+                           dirVers: Map[String, String]): Staged = {
+    val (stats, blooms, freshRows, freshFiles, freshBytes) = fresh
+    val priorMapping = prior.fold(Map.empty[String, String])(_.mapping)
+    def carried[A](of: Manifest => Map[String, A]): Map[String, A] =
+      prior.fold(Map.empty[String, A])(of)
+    def untouchedDirs[A](of: Manifest => Map[String, A]): Map[String, A] =
+      carried(of).filter { case (rel, _) =>
+        priorMapping.contains(rel) &&
+          newMapping.get(rel) == priorMapping.get(rel) }
+    val liveDirPrefixes = newMapping.map { case (rel, gen) =>
+      s"$gen/$rel/" }.toSet
+    Staged(partCols, schema, newMapping, stats, blooms, txns,
+      // DVs key on "<gen>/<part dirs>/<file>"
+      dvRefs = carried(_.dvs).filter { case (fileRel, _) =>
+        val dirOf = fileRel.lastIndexOf('/')
+        dirOf > 0 && liveDirPrefixes.contains(fileRel.substring(0, dirOf + 1))
+      },
+      checks = carried(_.checks),
+      dirRows = untouchedDirs(_.dirRows) ++ freshRows,
+      dirFiles = untouchedDirs(_.dirFiles) ++ freshFiles,
+      dirBytes = untouchedDirs(_.dirBytes) ++ freshBytes,
+      derived = carried(_.derived), dirVers = dirVers,
+      idxRefs = untouchedDirs(_.idxRefs), props = carried(_.props))
+  }
 
   /** What a [[stageVersion]] `stage` callback hands back for the
     * manifest. */
@@ -1994,18 +2075,6 @@ object VersionedTable {
   /** The `_bloomx` sidecar holding version `v`'s fresh bloom payloads. */
   private def bloomSidecar(root: String, v: Int): String =
     s"_bloomx.${brNs(root)}$v"
-
-  /** Carry-forward filter for FLAT file-keyed maps (DV refs), mirroring
-    * the nested `carry` the stats/blooms use: an entry survives iff its
-    * file's (generation, partition dir) is still what the NEW mapping
-    * points at — replaced partitions drop their files' DVs with them
-    * (the rewrite materialized the deletes). */
-  private def carryFlatRefs[A](prev: Map[String, A],
-                               liveDirPrefixes: Set[String]): Map[String, A] =
-    prev.filter { case (fileRel, _) =>
-      val dirOf = fileRel.lastIndexOf('/')
-      dirOf > 0 && liveDirPrefixes.contains(fileRel.substring(0, dirOf + 1))
-    }
 
   /** Recorded data bytes of the given live dirs — the size hint the
     * static-vs-AQE gate reads for rewrites, served from the manifest. */
@@ -2146,8 +2215,14 @@ object VersionedTable {
       df.queryExecution.optimizedPlan.collectLeaves()
         .map(_.stats.sizeInBytes).sum).toOption
 
-  /** See [[commitSession]]: weak on the parent so short-lived sessions
-    * (newSession-per-thread patterns) don't pin their clones. */
+  /** See [[commitSession]]: one static clone per parent session, keyed
+    * weakly. The weak key releases nothing in practice: Spark itself
+    * keeps every session that has executed a query reachable (20
+    * `newSession()`s that each ran one query, plain or small, all
+    * stayed reachable after dropping them and five `System.gc()`s;
+    * only sessions that ran no query were collected). So each parent
+    * session that commits or runs a [[smallQuery]] keeps its clone for
+    * the life of the app. */
   private val commitClones =
     new java.util.WeakHashMap[SparkSession, SparkSession]
 
@@ -2604,72 +2679,26 @@ object VersionedTable {
           }
           gated.unionByName(survivors, allowMissingColumns = true)
         }
-      // one writer per partition (see Merge.upsertParquetPruned note);
-      // with statsCols, cluster within the partition on them so each data
-      // file covers a TIGHT value range — that's what makes min/max file
-      // skipping bite (liquid-clustering-lite); fileRows splits hot
-      // partitions into several skippable files instead of one wide one
-      val oneWriterPerPart = merged.repartition(partCols.map(col): _*)
-      val clustered =
-        if (statsCols.isEmpty) oneWriterPerPart
-        else oneWriterPerPart.sortWithinPartitions(
-          (partCols ++ statsCols).map(col): _*)
-      // renamed columns write their FROZEN physical names so every
-      // generation agrees on file layout; the manifest schema (with its
-      // rename metadata carried from the prior version — unionByName
-      // rebuilds fields without it) stays logical
+      // renamed columns write their FROZEN physical names; the manifest
+      // schema (with its rename metadata carried from the prior version
+      // — unionByName rebuilds fields without it) stays logical
       val outSchema = carryPhysical(merged.schema, prior)
-      val writer = fileRows.foldLeft(
-        org.apache.spark.sql.graftbridge.SessionBridge.rebind(sparkWrite,
-          toPhysical(clustered, outSchema)).write)(
-        (w, n) => w.option("maxRecordsPerFile", n.toLong))
-      writer.partitionBy(partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
-      val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"), partCols)
+      val (written, fresh) = writeGeneration(fs, sparkWrite, root, next,
+        genDir, merged, partCols, outSchema, statsCols, bloomCols,
+        bloomBits, fileRows)
       val newMapping =
         (if (replaceAll) Map.empty[String, String] else priorMapping) ++
           written.map(_ -> genDir)
-      // DV carry-forward: a prior file's DVs survive iff its (generation,
-      // partition dir) is still what the NEW mapping points at —
-      // replaced partitions drop their old files' DVs with them
-      val liveDirPrefixes = newMapping.toSeq
-        .map { case (rel, gen) => s"$gen/$rel/" }.toSet
-      val (freshStats, freshBlooms, freshDirRows, freshDirFiles,
-          freshDirBytes) =
-        if (written.isEmpty) noFreshIndex
-        else collectFileStats(sparkWrite, root, next, partCols, statsCols,
-          bloomCols, sizedBloomBits(bloomBits, fileRows),
-          colmap = renameMap(outSchema), schema = outSchema)
-      // dir-count carry: a prior dir's counts survive iff its mapping
-      // entry is untouched (rewritten dirs get fresh counts below)
-      def carryDir(prev: Map[String, Long]): Map[String, Long] =
-        prev.filter { case (rel, _) =>
-          priorMapping.contains(rel) &&
-            newMapping.get(rel) == priorMapping.get(rel) }
+      val writtenSet = written.toSet
       // the full per-stream watermark map carries into EVERY manifest (new
       // tag merged in), so a later maintenance commit + vacuum cannot
       // erase another stream's exactly-once state
-      Staged(partCols, outSchema, newMapping, freshStats, freshBlooms,
+      stageRewrite(prior, partCols, outSchema, newMapping, fresh,
         prior.map(_.txns).getOrElse(Map.empty) ++ txn ++ extraTxns,
-        dvRefs = carryFlatRefs(prior.map(_.dvs).getOrElse(Map.empty),
-          liveDirPrefixes),
-        checks = prior.map(_.checks).getOrElse(Map.empty),
-        dirRows = carryDir(prior.map(_.dirRows).getOrElse(Map.empty)) ++
-          freshDirRows,
-        dirFiles = carryDir(prior.map(_.dirFiles).getOrElse(Map.empty)) ++
-          freshDirFiles,
-        dirBytes = carryDir(prior.map(_.dirBytes).getOrElse(Map.empty)) ++
-          freshDirBytes,
-        derived = prior.map(_.derived).getOrElse(Map.empty),
         // a dir not written here is a prior dir: its token carries
-        dirVers = {
-          val writtenSet = written.toSet
-          newMapping.map { case (rel, _) =>
-            rel -> (if (writtenSet.contains(rel)) genDir
-              else prior.get.dirVers(rel)) }
-        },
-        idxRefs = prior.map(_.idxRefs).getOrElse(Map.empty).filter {
-          case (rel, _) => newMapping.get(rel) == priorMapping.get(rel) },
-        props = prior.map(_.props).getOrElse(Map.empty))
+        dirVers = newMapping.map { case (rel, _) =>
+          rel -> (if (writtenSet.contains(rel)) genDir
+            else prior.get.dirVers(rel)) })
     }
   }
 
@@ -3321,52 +3350,19 @@ object VersionedTable {
       // plan
       val sparkW = commitSession(spark,
         Some(dirsBytes(m, touched.keysIterator)))
-      val survivorsByGen = transform(scanDirs(spark, root, m, touched))
-      val base = survivorsByGen.repartition(m.partCols.map(col): _*)
-      val clustered =
-        if (zOrderCols.nonEmpty)
-          ZOrder.withZValueN(base, zOrderCols, "__zval")
-            .sortWithinPartitions((m.partCols.map(col) :+ col("__zval")): _*)
-            .drop("__zval")
-        else if (statsCols.isEmpty) base
-        else base.sortWithinPartitions((m.partCols ++ statsCols).map(col): _*)
-      val writer = fileRows.foldLeft(
-        org.apache.spark.sql.graftbridge.SessionBridge.rebind(sparkW,
-          toPhysical(clustered, m.schema)).write)(
-        (w, n) => w.option("maxRecordsPerFile", n.toLong))
-      writer.partitionBy(m.partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
-      val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"), m.partCols)
+      val (written, fresh) = writeGeneration(fs, sparkW, root, cur + 1,
+        genDir, transform(scanDirs(spark, root, m, touched)), m.partCols,
+        m.schema, statsCols, bloomCols, bloomBits, fileRows, zOrderCols)
       // untouched dirs keep their mapping; touched dirs remap to the new
       // gen if they still have rows, disappear otherwise
       val newMapping = (m.mapping -- touched.keys) ++
         written.map(_ -> genDir)
-      val liveDirPrefixes = newMapping.toSeq
-        .map { case (rel, gen) => s"$gen/$rel/" }.toSet
-      val (freshStats, freshBlooms, freshDirRows, freshDirFiles,
-          freshDirBytes) =
-        if (written.isEmpty) noFreshIndex
-        else collectFileStats(sparkW, root, cur + 1, m.partCols, statsCols,
-          bloomCols, sizedBloomBits(bloomBits, fileRows),
-          colmap = renameMap(m.schema), schema = m.schema)
-      def carryDir(prev: Map[String, Long]): Map[String, Long] =
-        prev.filter { case (rel, _) =>
-          m.mapping.contains(rel) &&
-            newMapping.get(rel) == m.mapping.get(rel) }
-      Staged(m.partCols, m.schema, newMapping, freshStats, freshBlooms,
-        m.txns, dvRefs = carryFlatRefs(m.dvs, liveDirPrefixes),
-        checks = m.checks,
-        dirRows = carryDir(m.dirRows) ++ freshDirRows,
-        dirFiles = carryDir(m.dirFiles) ++ freshDirFiles,
-        dirBytes = carryDir(m.dirBytes) ++ freshDirBytes,
-        derived = m.derived,
+      stageRewrite(Some(m), m.partCols, m.schema, newMapping, fresh, m.txns,
         // a dir new to the table (a MERGE insert into a fresh partition)
         // gets this version's token
         dirVers = newMapping.map { case (rel, _) =>
           rel -> (if (contentChanging && touched.contains(rel)) genDir
-            else m.dirVers.getOrElse(rel, genDir)) },
-        idxRefs = m.idxRefs.filter { case (rel, _) =>
-          newMapping.get(rel) == m.mapping.get(rel) },
-        props = m.props)
+            else m.dirVers.getOrElse(rel, genDir)) })
     }
     publish(spark, root, next)
     next
@@ -4446,29 +4442,14 @@ object VersionedTable {
     val next = stageVersion(fs, root, cur + 1, "compact", m.keys) { genDir =>
       val sparkW = commitSession(spark,
         Some(dirsBytes(m, m.mapping.keysIterator)))
-      val base = read(spark, root, Some(cur))
-        .repartition(m.partCols.map(col): _*)
-      val clustered =
-        if (zOrderCols.nonEmpty)
-          ZOrder.withZValueN(base, zOrderCols, "__zval")
-            .sortWithinPartitions((m.partCols.map(col) :+ col("__zval")): _*)
-            .drop("__zval")
-        else if (statsCols.isEmpty) base
-        else base.sortWithinPartitions((m.partCols ++ statsCols).map(col): _*)
-      val writer = fileRows.foldLeft(
-        org.apache.spark.sql.graftbridge.SessionBridge.rebind(sparkW,
-          clustered).write)(
-        (w, n) => w.option("maxRecordsPerFile", n.toLong))
-      writer.partitionBy(m.partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
-      val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"), m.partCols)
-      val (stats, blooms, dirRows, dirFiles, dirBytes) =
-        collectFileStats(sparkW, root, cur + 1, m.partCols, statsCols,
-          bloomCols, sizedBloomBits(bloomBits, fileRows),
-          // compact writes CURRENT logical names (renames materialize)
-          schema = stripPhysical(m.schema))
-      // the rewrite wrote CURRENT logical names — renames are now
-      // materialized, drop the column mapping
-      Staged(m.partCols, stripPhysical(m.schema),
+      // the rewrite writes CURRENT logical names — renames materialize,
+      // the column mapping drops
+      val schema = stripPhysical(m.schema)
+      val (written, (stats, blooms, dirRows, dirFiles, dirBytes)) =
+        writeGeneration(fs, sparkW, root, cur + 1, genDir,
+          read(spark, root, Some(cur)), m.partCols, schema, statsCols,
+          bloomCols, bloomBits, fileRows, zOrderCols)
+      Staged(m.partCols, schema,
         written.map(_ -> genDir).toMap, stats, blooms, m.txns,
         checks = m.checks, dirRows = dirRows, dirFiles = dirFiles,
         dirBytes = dirBytes, derived = m.derived,
@@ -4599,24 +4580,13 @@ object VersionedTable {
     val next = stageVersion(fs, root, cur + 1, "repartition", m.keys) { genDir =>
       val sparkW = commitSession(spark,
         Some(dirsBytes(m, m.mapping.keysIterator)))
-      val base = read(spark, root, Some(cur))
-        .repartition(partCols.map(col): _*)
-      val clustered =
-        if (statsCols.isEmpty) base
-        else base.sortWithinPartitions((partCols ++ statsCols).map(col): _*)
-      val writer = fileRows.foldLeft(
-        org.apache.spark.sql.graftbridge.SessionBridge.rebind(sparkW,
-          clustered).write)(
-        (w, n) => w.option("maxRecordsPerFile", n.toLong))
-      writer.partitionBy(partCols: _*).parquet(s"${tableRoot(root)}/$genDir")
-      val written = leafDirs(fs, new Path(s"${tableRoot(root)}/$genDir"), partCols)
-      val (stats, blooms, dirRows, dirFiles, dirBytes) =
-        if (written.isEmpty) noFreshIndex
-        else collectFileStats(sparkW, root, cur + 1, partCols, statsCols,
-          bloomCols, sizedBloomBits(bloomBits, fileRows),
-          schema = stripPhysical(m.schema))
       // full rewrite under logical names: renames materialize here too
-      Staged(partCols, stripPhysical(m.schema),
+      val schema = stripPhysical(m.schema)
+      val (written, (stats, blooms, dirRows, dirFiles, dirBytes)) =
+        writeGeneration(fs, sparkW, root, cur + 1, genDir,
+          read(spark, root, Some(cur)), partCols, schema, statsCols,
+          bloomCols, bloomBits, fileRows)
+      Staged(partCols, schema,
         written.map(_ -> genDir).toMap, stats, blooms, m.txns,
         checks = m.checks, dirRows = dirRows, dirFiles = dirFiles,
         dirBytes = dirBytes,

@@ -1502,6 +1502,15 @@ class OpsSpec extends SparkSpec {
       s"post-compact skipping did not bite: $kept/$total")
     assert(VersionedTable.readWhere(spark, root, "v", 0, 30)
       .count() == 31)
+    // a table DELETE emptied: compacting it (bloom index requested, so
+    // stats take the read-back path) writes no dirs and still commits
+    val emptied = VersionedTable.deleteWhere(spark, root, "v", 0, 199)
+    assert(VersionedTable.read(spark, root).count() == 0)
+    val compacted = VersionedTable.compact(spark, root,
+      statsCols = Seq("v"), bloomCols = Seq("v"))
+    assert(compacted == emptied + 1)
+    assert(VersionedTable.read(spark, root).count() == 0)
+    assert(VersionedTable.fastCount(spark, root) == Some(0L))
   }
 
   test("VersionedTable.changeFeed: insert/update/delete + schema evolution") {
