@@ -372,7 +372,7 @@ object Bench {
   }
 
   /** Streaming throughput: drain the sf events table through the two
-    * chained-stateful pipelines (windowed-agg join, session windows) under
+    * stateful pipelines (the 15m/1h joined metrics, session windows) under
     * Trigger.AvailableNow and record wall seconds, input rows/s, and mean
     * micro-batch duration. The input is staged once (untimed) as a
     * multi-file CSV raw zone; maxFilesPerTrigger forces several
@@ -407,12 +407,13 @@ object Bench {
       .sortWithinPartitions("timestamp")
       .write.option("header", "true").csv(rawDir)
 
-    // Stream-scoped state sizing (see StreamPipeline.scopedSession): the
-    // chained-stateful drain runs 5 state stores per micro-batch, so the
-    // batch-wide 32 shuffle partitions mean 160 store load/commit
-    // round-trips per trigger for a ~25k-row batch over 5 symbols — pure
-    // overhead. 8 matches the staged file parallelism and dwarfs the
-    // actual key cardinality. SPARK_GRAFT_STREAM_SHUF overrides for A/B.
+    // Stream-scoped state sizing (see StreamPipeline.scopedSession): each
+    // stateful drain loads and commits one state store per shuffle
+    // partition per micro-batch, so the batch-wide 32 shuffle partitions
+    // mean 32 store round-trips per trigger for a ~25k-row batch over 5
+    // symbols — pure overhead. 8 matches the staged file parallelism and
+    // dwarfs the actual key cardinality. SPARK_GRAFT_STREAM_SHUF overrides
+    // for A/B.
     val streamShuf = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUF", "8").toInt
     val ss = graft.streaming.StreamPipeline.scopedSession(spark, streamShuf)
     def ticks: DataFrame = graft.ops.Clean.castTicks(
@@ -466,7 +467,7 @@ object Bench {
 
     try {
       // Untimed warm drain, same discipline as the batch warmup (the
-      // untimed entry().count() above): run the SAME chained-stateful DAG
+      // untimed entry().count() above): run the SAME stateful DAGs
       // over a 1k-row staged subset so whole-stage codegen, the streaming
       // source/state machinery, and the sink path JIT before the clock
       // starts. The timed drains then measure the engine's steady

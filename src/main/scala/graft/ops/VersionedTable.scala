@@ -2121,30 +2121,21 @@ object VersionedTable {
     if (!scala.util.Try(sizeHint).toOption.flatten
           .exists(_ <= StaticMaxBytes)) spark
     else {
-      // ONE cached clone per parent session: every cloneSession
-      // registers an execution-listener bus on the shared SparkContext
-      // for the life of the app, so cloning per commit would leak a
-      // listener per lifecycle commit. The cached clone's conf RE-SYNCS
-      // from the parent on each use (compare-before-set — a stable
-      // parent conf makes this a read-only pass), so session-level
-      // settings like the parquet timestamp type keep tracking their
-      // current values; a key the parent UNSET since the last sync keeps
-      // its old value in the clone (acceptable: unset write-side conf
-      // mid-flight is already racy on the parent).
-      val clone = commitClones.synchronized {
-        Option(commitClones.get(spark)).getOrElse {
+      // cached clones, not one per commit: every cloneSession registers
+      // an execution-listener bus on the shared SparkContext for the
+      // life of the app. Keyed by the parent's CURRENT conf, so
+      // session-level settings like the parquet timestamp type (set,
+      // changed or unset) always reach the write, and a clone's conf
+      // never changes after creation.
+      val key = spark.conf.getAll -- StaticOverrides.keys
+      commitClones.synchronized {
+        Option(commitClones.get(key)).getOrElse {
           val c = org.apache.spark.sql.graftbridge.SessionBridge
             .cloneWithConf(spark, StaticOverrides)
-          commitClones.put(spark, c)
+          commitClones.put(key, c)
           c
         }
       }
-      spark.conf.getAll.foreach { case (k, v) =>
-        if (!StaticOverrides.contains(k) &&
-            !clone.conf.getOption(k).contains(v))
-          scala.util.Try(clone.conf.set(k, v)) // static confs refuse: skip
-      }
-      clone
     }
 
   /** Size-gated STATIC execution for engine-side small queries — the
@@ -2215,16 +2206,27 @@ object VersionedTable {
       df.queryExecution.optimizedPlan.collectLeaves()
         .map(_.stats.sizeInBytes).sum).toOption
 
-  /** See [[commitSession]]: one static clone per parent session, keyed
-    * weakly. The weak key releases nothing in practice: Spark itself
-    * keeps every session that has executed a query reachable (20
-    * `newSession()`s that each ran one query, plain or small, all
-    * stayed reachable after dropping them and five `System.gc()`s;
-    * only sessions that ran no query were collected). So each parent
-    * session that commits or runs a [[smallQuery]] keeps its clone for
-    * the life of the app. */
+  /** Static clones [[commitClones]] holds at most. */
+  private val CommitClonesMax = 8
+
+  /** See [[commitSession]]: the static clones, keyed by their parent's
+    * conf minus [[StaticOverrides]], least recently used first out.
+    * Sessions with equal conf — a stream restarted per round, a
+    * `newSession()` per request — share one clone. Not keyed by session:
+    * Spark keeps every session that has run a query reachable, so a
+    * per-session key would hold one clone per parent for the life of
+    * the app. */
   private val commitClones =
-    new java.util.WeakHashMap[SparkSession, SparkSession]
+    new java.util.LinkedHashMap[Map[String, String], SparkSession](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          Map[String, String], SparkSession]): Boolean =
+        size > CommitClonesMax
+    }
+
+  /** Number of cached static clones. */
+  private[graft] def commitCloneCount: Int =
+    commitClones.synchronized(commitClones.size)
 
   /** The claim → stage → manifest protocol shared by [[prepare]] and
     * [[compact]]: claim `_manifest.<next>` create-exclusive (the
@@ -2407,10 +2409,11 @@ object VersionedTable {
 
   /** Stage version `current+1`: claim its manifest (the concurrency
     * guard), write merged data for TOUCHED partitions into a fresh
-    * generation dir, then fill in the manifest — everything except the
-    * commit marker. Returns the staged version number. Split from
-    * [[publish]] so the crash-injection test can stop between the two
-    * steps; production callers use [[upsert]]. */
+    * generation dir (none for an empty delta that keeps the schema),
+    * then fill in the manifest — everything except the commit marker.
+    * Returns the staged version number. Split from [[publish]] so the
+    * crash-injection test can stop between the two steps; production
+    * callers use [[upsert]]. */
   private[graft] def prepare(spark: SparkSession, root: String,
                              updates: DataFrame, keys: Seq[String],
                              partCols: Seq[String],
@@ -2683,22 +2686,36 @@ object VersionedTable {
       // schema (with its rename metadata carried from the prior version
       // — unionByName rebuilds fields without it) stays logical
       val outSchema = carryPhysical(merged.schema, prior)
-      val (written, fresh) = writeGeneration(fs, sparkWrite, root, next,
-        genDir, merged, partCols, outSchema, statsCols, bloomCols,
-        bloomBits, fileRows)
-      val newMapping =
-        (if (replaceAll) Map.empty[String, String] else priorMapping) ++
-          written.map(_ -> genDir)
-      val writtenSet = written.toSet
       // the full per-stream watermark map carries into EVERY manifest (new
       // tag merged in), so a later maintenance commit + vacuum cannot
       // erase another stream's exactly-once state
-      stageRewrite(prior, partCols, outSchema, newMapping, fresh,
-        prior.map(_.txns).getOrElse(Map.empty) ++ txn ++ extraTxns,
-        // a dir not written here is a prior dir: its token carries
-        dirVers = newMapping.map { case (rel, _) =>
-          rel -> (if (writtenSet.contains(rel)) genDir
-            else prior.get.dirVers(rel)) })
+      val txns = prior.map(_.txns).getOrElse(Map.empty) ++ txn ++ extraTxns
+      // top-level nullability does not count as a schema change here:
+      // a merge's survivors union already flips it between commits, and
+      // with no row written the prior schema stays valid
+      def shape(st: StructType) =
+        st.map(f => (f.name, f.dataType, f.metadata))
+      prior.filter(pm => entries.isEmpty && !replaceAll &&
+          shape(pm.schema) == shape(outSchema)) match {
+        // an empty delta that keeps the schema changes nothing but the
+        // watermarks (a stream's data-less micro-batch): commit the prior
+        // manifest with them advanced — no generation dir, no write job,
+        // no footer stats
+        case Some(pm) => carryAll(pm).copy(txns = txns)
+        case None =>
+          val (written, fresh) = writeGeneration(fs, sparkWrite, root, next,
+            genDir, merged, partCols, outSchema, statsCols, bloomCols,
+            bloomBits, fileRows)
+          val newMapping =
+            (if (replaceAll) Map.empty[String, String] else priorMapping) ++
+              written.map(_ -> genDir)
+          val writtenSet = written.toSet
+          stageRewrite(prior, partCols, outSchema, newMapping, fresh, txns,
+            // a dir not written here is a prior dir: its token carries
+            dirVers = newMapping.map { case (rel, _) =>
+              rel -> (if (writtenSet.contains(rel)) genDir
+                else prior.get.dirVers(rel)) })
+      }
     }
   }
 

@@ -13,12 +13,13 @@ import graft.ops.{Clean, Ingest, TimeWindows}
  * parquet sink.
  *
  * Design note (SURVEY §7.5 / J2): the reference *declares* a stream-stream
- * join of two windowed aggregates, which Structured Streaming rejects
- * (chained stateful operators in append mode). The reference's operational
- * path runs a batch twin instead. We keep the streaming leg a single
- * watermarked windowed aggregate — the supported shape — and expose the
- * 15m/1h join as the batch operator (Combine.joinOnWindowStart), exactly
- * what the reference actually executes.
+ * join of two windowed aggregates, which Spark < 3.5 rejected (chained
+ * stateful operators in append mode), so its operational path runs a
+ * batch twin (Combine.joinOnWindowStart). [[joinedMetrics]] streams the
+ * declared result as ONE watermarked windowed aggregate — the join's
+ * rows, without the join: every stateful operator loads and commits one
+ * state store per state partition on every trigger, so the operator
+ * count sets a micro-batch's fixed cost.
  */
 object StreamPipeline {
 
@@ -30,12 +31,12 @@ object StreamPipeline {
     *
     * A stateful streaming query's shuffle-partition count is its STATE
     * partition count, pinned into the checkpoint at first start — and
-    * every stateful operator loads + commits one state store per
-    * partition per micro-batch. A chained-stateful pipeline (two windowed
-    * aggregates + a join = 5 state stores) under the batch-wide default
-    * therefore pays `5 × partitions` store load/commit round-trips per
-    * trigger regardless of data volume; for a micro-batch of thousands of
-    * rows over a handful of keys that overhead IS the batch. Size it to
+    * every stateful operator loads + commits its state stores (one per
+    * partition; a stream-stream join keeps four) every micro-batch. A
+    * pipeline of `k` such stores under the batch-wide default therefore
+    * pays `k × partitions` store load/commit round-trips per trigger
+    * regardless of data volume; for a micro-batch of thousands of rows
+    * over a handful of keys that overhead IS the batch. Size it to
     * the stream's actual key cardinality (symbols × windows-in-flight),
     * not to the batch engine's scan width: queries planned off the
     * returned session carry the scoped setting, the parent session and
@@ -128,34 +129,37 @@ object StreamPipeline {
       .start()
 
   /** J2, the reference's DECLARED stream-stream join of two windowed
-    * aggregates (stock_market_stream_dag.py:135). Spark < 3.5 rejected
-    * this shape (chained stateful operators in append mode) — which is why
-    * the reference's operational path fell back to a batch twin
-    * (spark_stream_batch_processor.py; ours is
-    * Combine.joinOnWindowStart, q_join_inner). Spark 3.5+/4.x propagate
-    * watermarks through chained stateful operators, so the declared DAG
-    * now RUNS AS DECLARED: both windowed aggregates and the join maintain
-    * state; a joined row emits once the watermark closes both windows.
+    * aggregates (stock_market_stream_dag.py:135): per symbol, the 15m
+    * metrics (5m slide) joined to the 1h metrics (10m slide) where the
+    * two windows START together — the batch twin is
+    * Combine.joinOnWindowStart (q_join_inner).
     *
-    * Both aggregates read ONE watermarked source; the join keys on
-    * (symbol, window.start), i.e. rows pair up where the 15m and 1h grids
-    * align — exactly the batch twin's semantics. */
+    * Run as ONE watermarked aggregate over the 1h grid rather than two
+    * aggregates plus a stream-stream join: every 1h window start is a
+    * multiple of 10 minutes, hence also a 15m window start, and that
+    * 15m window is exactly the 1h window's first 15 minutes. So the 1h
+    * metrics take the whole window, the 15m metrics take the rows with
+    * `timestamp < window.start + 15 minutes`, and a window whose first
+    * 15 minutes hold no tick — where the join found no 15m partner —
+    * emits nothing. Same rows as the join, and the same emission point
+    * (the watermark passing the 1h window end), from one stateful
+    * operator: one state store per state partition per trigger instead
+    * of six (two aggregates + the join's four). */
   def joinedMetrics(ticks: DataFrame, watermark: String = "5 minutes"):
       DataFrame = {
-    val src = ticks.withWatermark("timestamp", watermark)
-    val m15 = TimeWindows.metricWindow(src, key = "symbol",
-        ts = "timestamp", value = "price", volume = col("volume"),
-        width = "15 minutes", slide = Some("5 minutes"))
-      .select(col("symbol"), col("window"), col("ma").as("ma_15m"),
-        col("volatility").as("volatility_15m"), col("n_events").as("n_15m"))
-    val h1 = TimeWindows.metricWindow(src, key = "symbol",
-        ts = "timestamp", value = "price", volume = col("volume"),
-        width = "1 hour", slide = Some("10 minutes"))
-      .select(col("symbol").as("__sym2"), col("window").as("__win2"),
-        col("ma").as("ma_1h"), col("n_events").as("n_1h"))
-    m15.join(h1,
-        col("symbol") === col("__sym2") &&
-        col("window.start") === col("__win2.start"))
+    val first15m =
+      col("timestamp") < col("window.start") + expr("INTERVAL 15 MINUTES")
+    val price15m = when(first15m, col("price"))
+    ticks.withWatermark("timestamp", watermark)
+      .withColumn("window", window(col("timestamp"), "1 hour", "10 minutes"))
+      .groupBy(col("symbol"), col("window"))
+      .agg(
+        avg(price15m).as("ma_15m"),
+        Clean.nanToNull(stddev_samp(price15m)).as("volatility_15m"),
+        count(when(first15m, lit(1))).as("n_15m"),
+        avg(col("price")).as("ma_1h"),
+        count(lit(1)).as("n_1h"))
+      .filter(col("n_15m") > 0)
       .select(col("symbol"), col("window.start").as("window_start"),
         col("ma_15m"), col("volatility_15m"), col("n_15m"),
         col("ma_1h"), col("n_1h"))

@@ -3500,9 +3500,74 @@ class OpsSpec extends SparkSpec {
     // warm-up: the first small commit pays one-off planning/codegen
     VersionedTable.upsert(spark, root,
       Seq((1000, "g2", 5L)).toDF("id", "grp", "v"), keys, Seq("grp"))
-    // count only the measured commit's jobs (a thread-local job
-    // property), then wait for a marker job so the asynchronous listener
-    // bus has delivered every earlier job start
+    val (jobs, stages) = jobsAndStages(VersionedTable.upsert(spark, root,
+      Seq((1001, "g1", 6L), (3, "g3", 7L)).toDF("id", "grp", "v"),
+      keys, Seq("grp")))
+    assert(VersionedTable.read(spark, root).count() == 202)
+    // the static path: one delta-probe job, one write job; the stage
+    // count tells the probe apart from the entries-job fallback (7)
+    assert((jobs, stages) == (2, 3),
+      s"warm small upsert ran $jobs jobs, $stages stages")
+  }
+
+  test("VersionedTable: an empty delta commits its txn as metadata only") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vtmeta").toString
+    val root = s"$dir/table"
+    val keys = Seq("id", "grp")
+    def up(df: org.apache.spark.sql.DataFrame, bid: Long): Int =
+      VersionedTable.upsert(spark, root, df, keys, Seq("grp"),
+        statsCols = Seq("v"), bloomCols = Seq("v"), txn = Some(("s1", bid)))
+    up((0 until 40).map(i => (i, s"g${i % 4}", i)).toDF("id", "grp", "v"), 0)
+    up(Seq((1, "g1", 100)).toDF("id", "grp", "v"), 1)
+    // non-nullable ints, while the merge above recorded them nullable:
+    // nullability alone still counts as the same schema
+    val empty = Seq.empty[(Int, String, Int)].toDF("id", "grp", "v")
+    // the static path: the delta probe is the commit's only job
+    val (jobs, _) = jobsAndStages(up(empty, 2))
+    assert(jobs == 1, s"empty-delta commit ran $jobs jobs")
+    assert(VersionedTable.history(spark, root) == Seq(0, 1, 2))
+    assert(VersionedTable.lastTxn(spark, root, "s1").contains(2L))
+    assert(!new java.io.File(root, "gen2").exists, "wrote a generation dir")
+    // the prior manifest verbatim — mapping, per-dir counts, content
+    // tokens, index refs — with only the watermark advanced
+    val prior = VersionedTable.resolveManifest(spark, root, Some(1))
+    assert(VersionedTable.resolveManifest(spark, root, Some(2)) ==
+      prior.copy(txns = Map("s1" -> 2L)))
+    assert(VersionedTable.readWhereEq(spark, root, "v", 100).count() == 1)
+    // a replayed batch id commits nothing
+    up(empty, 2)
+    assert(VersionedTable.history(spark, root) == Seq(0, 1, 2))
+    // an empty delta that adds a column still evolves the schema
+    up(Seq.empty[(Int, String, Int, String)].toDF("id", "grp", "v", "note"), 3)
+    assert(VersionedTable.history(spark, root) == Seq(0, 1, 2, 3))
+    assert(VersionedTable.lastTxn(spark, root, "s1").contains(3L))
+    val evolved = VersionedTable.resolveManifest(spark, root, Some(3))
+    assert(evolved.schema.fieldNames.toSeq == Seq("id", "grp", "v", "note"))
+    assert(evolved.mapping == prior.mapping)
+    assert(VersionedTable.read(spark, root).count() == 40)
+  }
+
+  test("commit gate: parent sessions with equal conf share one static clone") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vtclones").toString
+    val root = s"$dir/table"
+    VersionedTable.upsert(spark, root, Seq((0, "g0")).toDF("id", "grp"),
+      Seq("id", "grp"), Seq("grp"))
+    val before = VersionedTable.commitCloneCount
+    (1 to 100).foreach { i =>
+      val s = spark.newSession()
+      VersionedTable.upsert(s, root, s.range(1).selectExpr(
+        s"CAST($i AS INT) AS id", "'g0' AS grp"), Seq("id", "grp"), Seq("grp"))
+    }
+    val after = VersionedTable.commitCloneCount
+    assert(after <= before + 1 && after <= 8,
+      s"100 new sessions left $after clones (was $before)")
+    assert(VersionedTable.read(spark, root).count() == 101)
+  }
+
+  /** Jobs and stages `body` runs: a thread-local job property tags its
+    * jobs, then a marker job waits out the asynchronous listener bus so
+    * every earlier job start is delivered. */
+  private def jobsAndStages(body: => Any): (Int, Int) = {
     val tag = "graft.test.commitJobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
@@ -3521,9 +3586,7 @@ class OpsSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(tag, "commit")
-      VersionedTable.upsert(spark, root,
-        Seq((1001, "g1", 6L), (3, "g3", 7L)).toDF("id", "grp", "v"),
-        keys, Seq("grp"))
+      body
       sc.setLocalProperty(tag, "marker")
       sc.parallelize(Seq(1), 1).count()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -3531,10 +3594,6 @@ class OpsSpec extends SparkSpec {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
-    assert(VersionedTable.read(spark, root).count() == 202)
-    // the static path: one delta-probe job, one write job; the stage
-    // count tells the probe apart from the entries-job fallback (7)
-    assert((jobs.get, stages.get) == (2, 3),
-      s"warm small upsert ran ${jobs.get} jobs, ${stages.get} stages")
+    (jobs.get, stages.get)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Scale probe for the chained-stateful streaming path (VERDICT r4 #5
+/** Scale probe for the stateful joined-metrics streaming path (VERDICT r4 #5
   * follow-through): does joined_metrics throughput HOLD when the stream is
   * `copies`× longer — 8× the rows through 8× the micro-batches — or is
   * there per-batch state growth that compounds?

@@ -1175,6 +1175,66 @@ class StreamingSpec extends SparkSpec {
       s"streamed-only: ${streamed -- twin}\ntwin-only: ${twin -- streamed}")
   }
 
+  test("joinedMetrics: one windowed aggregate, 15m metrics over the 1h " +
+      "window's first 15 minutes") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_stream_fused")
+    val raw = Files.createDirectory(base.resolve("raw"))
+    val out = base.resolve("out").toString
+    val ckpt = base.resolve("ckpt").toString
+    writeCsv(raw, "a.csv", Seq(
+      "AAA,10.0,0.0,,1,2024-01-01T00:00:00",
+      "AAA,12.0,0.0,,1,2024-01-01T00:05:00",
+      // exactly window_start + 15 min for the 00:00 window: in its 1h
+      // metrics, not in its 15m ones
+      "AAA,20.0,0.0,,1,2024-01-01T00:15:00",
+      // alone: the 1h windows starting 23:30-00:00 hold it past their
+      // first 15 minutes and emit nothing
+      "BBB,50.0,0.0,,1,2024-01-01T00:20:00"))
+    val ss = StreamPipeline.scopedSession(spark, 3)
+    def runOnce(): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
+      val q = StreamPipeline.joinedMetrics(
+          StreamPipeline.tickStream(ss, raw.toString))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.write.mode("append").parquet(out) }
+        .start()
+      assert(q.awaitTermination(90000))
+      q.recentProgress.toSeq
+    }
+    val progress = runOnce()
+    // the flush tick's watermark (02:55) closes every window above
+    writeCsv(raw, "b.csv", Seq("AAA,11.0,0.0,,1,2024-01-01T03:00:00"))
+    val all = progress ++ runOnce()
+
+    val got = spark.read.parquet(out)
+      .select($"symbol",
+        org.apache.spark.sql.functions.date_format($"window_start",
+          "yyyy-MM-dd HH:mm:ss"),
+        $"n_15m", $"n_1h", $"ma_15m", $"volatility_15m", $"ma_1h")
+      .as[(String, String, Long, Long, Double, Option[Double], Double)]
+      .collect().map { case (sym, ws, n15, n1h, ma15, vol, ma1h) =>
+        (sym, ws, n15, n1h, ma15, vol.map(v => math.rint(v * 1e9) / 1e9),
+          ma1h)
+      }.sortBy(r => (r._1, r._2)).toSeq
+    assert(got == Seq(
+      ("AAA", "2023-12-31 23:50:00", 1L, 3L, 10.0, None, 14.0),
+      ("AAA", "2024-01-01 00:00:00", 2L, 3L, 11.0,
+        Some(math.rint(math.sqrt(2.0) * 1e9) / 1e9), 14.0),
+      ("AAA", "2024-01-01 00:10:00", 1L, 1L, 20.0, None, 20.0),
+      ("BBB", "2024-01-01 00:10:00", 1L, 1L, 50.0, None, 50.0),
+      ("BBB", "2024-01-01 00:20:00", 1L, 1L, 50.0, None, 50.0)), got)
+    // ONE stateful operator, one state store per state partition
+    val stateful = all.filter(_.stateOperators.nonEmpty)
+    assert(stateful.nonEmpty)
+    stateful.foreach { p =>
+      assert(p.stateOperators.length == 1, p.json)
+      assert(p.stateOperators.head.numStateStoreInstances == 3, p.json)
+    }
+  }
+
   test("streaming curation: quality gate + hash split are stream-safe") {
     // the curation ops are pure narrow transforms, so the SAME code runs
     // unchanged on a stream — this pins that no op sneaks in a batch-only
