@@ -150,8 +150,8 @@ object VersionedTable {
   /** Lost the create-exclusive claim on `_manifest.<next>` to a concurrent
     * writer (or hit a crashed writer's leftover claim). Subtype of
     * IllegalStateException so callers that treated every staging failure
-    * as fatal still do; [[upsert]] catches it specifically to drive
-    * disjoint-partition optimistic retry. */
+    * as fatal still do; [[commitLoop]] alone catches it, and resolves it
+    * by the op's [[ClaimRace]]. */
   private[graft] class StagingRaceException(msg: String,
                                             cause: Throwable = null)
     extends IllegalStateException(msg, cause)
@@ -1472,7 +1472,8 @@ object VersionedTable {
     * for a requested orderable column (INT96 timestamps from a session
     * writing the legacy type — set
     * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`, as graft's
-    * own sessions do), or when `spark.graft.stats.footer=false`.
+    * own sessions do), or when a float/double chunk holds NaN or a
+    * signed-zero bound.
     *
     * `schema` is the LOGICAL schema the files were written under —
     * exactly what the read-back path would infer, so the recorded
@@ -1485,12 +1486,10 @@ object VersionedTable {
                                colmap: Map[String, String] = Map.empty,
                                schema: StructType = null): FreshIndex = {
     val genDir = genName(root, version)
-    val footersOn =
-      spark.conf.get("spark.graft.stats.footer", "true").toBoolean
     val bloomsWanted = schema != null &&
       bloomCols.exists(c => schema.fieldNames.contains(c))
     val viaFooters =
-      if (!footersOn || schema == null || bloomsWanted) None
+      if (schema == null || bloomsWanted) None
       else footerFileStats(spark, root, genDir, partCols, statsCols,
         colmap, schema)
     viaFooters match {
@@ -1537,12 +1536,14 @@ object VersionedTable {
     * Merge.readTouchedDirs. Columns absent from this generation's schema
     * or with no exact rendering get no entry (their files are never
     * skipped — conservative). */
-  private def collectFileStatsScan(spark: SparkSession, root: String,
-                               genDir: String, partCols: Seq[String],
-                               statsCols: Seq[String],
-                               bloomCols: Seq[String] = Nil,
-                               bloomBits: Long = 8192L,
-                               colmap: Map[String, String] = Map.empty)
+  private[graft] def collectFileStatsScan(spark: SparkSession, root: String,
+                                          genDir: String,
+                                          partCols: Seq[String],
+                                          statsCols: Seq[String],
+                                          bloomCols: Seq[String] = Nil,
+                                          bloomBits: Long = 8192L,
+                                          colmap: Map[String, String] =
+                                            Map.empty)
       : (Map[String, Map[String, ColStat]],
          Map[String, Map[String, Array[Byte]]],
          Map[String, Long], Map[String, Long], Map[String, Long]) = {
@@ -2395,6 +2396,119 @@ object VersionedTable {
     }
   }
 
+  /** One commit attempt's view of the table: the current version, read
+    * once when the attempt starts, and its manifest, read at most once
+    * and only if the op asks for it. [[commitLoop]] makes one per
+    * attempt; [[prepare]] makes one for its single stage. */
+  private final class Attempt(spark: SparkSession, val root: String) {
+    val fs: FileSystem = fsFor(spark, root)
+    /** The current version, if the table has one. */
+    val version: Option[Int] = currentVersion(spark, root)
+    /** The version a lost claim waits past (-1: none yet). */
+    def basedOn: Int = version.getOrElse(-1)
+    /** The version this attempt stages. */
+    def next: Int = basedOn + 1
+    /** The current manifest, if the table has one. */
+    lazy val prior: Option[Manifest] = version.map(readManifest(fs, root, _))
+    /** The current version of a table the op needs to exist. */
+    def cur: Int = version.getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+    /** The current manifest of a table the op needs to exist. */
+    def m: Manifest = { cur; prior.get }
+    /** Stage [[next]] through [[stageVersion]], without publishing. */
+    def stage(op: String, keys: Seq[String],
+              expectLog: => Map[String, Long] = Map.empty)
+        (body: String => Staged): Int =
+      stageVersion(fs, root, next, op, keys, expectLog)(body)
+    /** Publish staged version `v` and return it. */
+    def publish(v: Int): Int = { VersionedTable.publish(spark, root, v); v }
+    /** [[stage]], then [[publish]]: the commit of every op but
+      * [[prepare]]. */
+    def commit(op: String, keys: Seq[String],
+               expectLog: => Map[String, Long] = Map.empty)
+        (body: String => Staged): Int =
+      publish(stage(op, keys, expectLog)(body))
+  }
+
+  /** What a lost claim on `_manifest.<next>` means to the op that lost
+    * it. Every op that commits through [[commitLoop]] names one. */
+  private sealed trait ClaimRace
+
+  /** Declarative ops (DML, maintenance, DDL, restore, fast-forward)
+    * derive everything from the current version: wait for the winner's
+    * commit and re-run against it — the rerun IS the serialized
+    * result. */
+  private case object Rederive extends ClaimRace
+
+  /** Merges writing the partition dirs `dirs` yields. By-name: it is a
+    * Spark job over the delta, run only after a lost claim. A merge may
+    * retry on top of the winner only when every interleaved version
+    * touched none of those dirs — its survivors anti-join then ran
+    * against partitions nobody changed. */
+  private final class Disjoint(dirs: => Set[String]) extends ClaimRace {
+    def written: Set[String] = dirs
+  }
+
+  /** Ops whose footprint is the whole table (overwrite, TRUNCATE,
+    * REPLACE TABLE): any interleaved commit conflicts, so a lost claim
+    * is a loud [[ConcurrentWriteConflictException]]. `what` names the op
+    * in it ("TRUNCATE empties"). */
+  private final case class WholeTable(what: String) extends ClaimRace
+
+  /** Claim attempts one commit makes before a lost claim rethrows. */
+  private val MaxClaimAttempts = 5
+
+  /** The one commit routine: run `body` on a fresh [[Attempt]] until it
+    * returns, resolving each lost claim (a [[StagingRaceException]]) by
+    * `race`. The body validates, scans the current table if it must,
+    * then commits through [[Attempt.commit]] — or returns the current
+    * version for a provable no-op. A claim that never publishes (a
+    * crashed writer) rethrows after `graft.versioned.claimWaitMs`
+    * (default 30 s); vacuum clears it. */
+  private def commitLoop(spark: SparkSession, root: String, race: ClaimRace)
+                        (body: Attempt => Int): Int = {
+    var attempt = 1
+    while (true) {
+      val at = new Attempt(spark, root)
+      try return body(at)
+      catch {
+        case e: StagingRaceException =>
+          if (attempt >= MaxClaimAttempts) throw e
+          attempt += 1
+          race match {
+            case WholeTable(what) =>
+              throw new ConcurrentWriteConflictException(
+                s"concurrent write conflict at $root: $what the entire " +
+                  "table and cannot serialize around a concurrent commit " +
+                  "— re-run against the new current version")
+            case _ =>
+          }
+          // the loser can only restage once the winner's version is
+          // COMMITTED (next = max committed + 1 would re-collide with the
+          // same staged manifest otherwise)
+          val newCur = awaitCommitAfter(spark, root, at.basedOn)
+            .getOrElse(throw e) // staged but never published
+          race match {
+            case d: Disjoint =>
+              val mine = d.written
+              ((at.basedOn + 1) to newCur).foreach { v =>
+                touchedDirs(at.fs, root, v) match {
+                  case Some(dirs) if dirs.intersect(mine).isEmpty => ()
+                  case _ => throw new ConcurrentWriteConflictException(
+                    s"concurrent write conflict at $root: version $v " +
+                      "touched partitions this merge also writes (or its " +
+                      "footprint is unverifiable after vacuum/layout " +
+                      "change) — re-run the merge against the new current " +
+                      "version")
+                }
+              }
+            case _ =>
+          }
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** Row cap of [[prepare]]'s delta probe (Merge.deltaProbe): past it
     * the commit falls back to the separate entries job. */
   private val DeltaProbeMaxRows = 4096
@@ -2423,28 +2537,37 @@ object VersionedTable {
                              bloomBits: Long = 0L,
                              txn: Option[(String, Long)] = None,
                              replaceAll: Boolean = false,
-                             extraTxns: Seq[(String, Long)] = Nil): Int = {
+                             extraTxns: Seq[(String, Long)] = Nil): Int =
+    stageMerge(spark, new Attempt(spark, root), updates, keys, partCols,
+      statsCols, fileRows, bloomCols, bloomBits, txn, replaceAll, extraTxns)
+
+  /** [[prepare]] on the attempt `at`: stages `at.next` and returns it. */
+  private def stageMerge(spark: SparkSession, at: Attempt,
+                         updates: DataFrame, keys: Seq[String],
+                         partCols: Seq[String], statsCols: Seq[String],
+                         fileRows: Option[Int], bloomCols: Seq[String],
+                         bloomBits: Long, txn: Option[(String, Long)],
+                         replaceAll: Boolean,
+                         extraTxns: Seq[(String, Long)]): Int = {
     require(partCols.nonEmpty, "at least one partition column")
     partCols.foreach(c => require(keys.contains(c),
       s"partition column $c must be part of the merge key"))
     (statsCols ++ bloomCols).foreach(c => require(!partCols.contains(c),
       s"stats column $c is a partition column — partition pruning already " +
         "covers it exactly"))
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root)
+    val (root, fs) = (at.root, at.fs)
     // a branch must be FORKED, never implicitly created by a write: a
     // typo'd handle would otherwise silently swallow rows into an
     // anchorless chain no fastForward can ever publish
-    if (cur.isEmpty && brNs(root).nonEmpty)
+    if (at.version.isEmpty && brNs(root).nonEmpty)
       throw new java.io.FileNotFoundException(
         s"no branch at $root — createBranch first (writes never " +
           "implicitly create branches)")
-    val next = cur.map(_ + 1).getOrElse(0)
+    val next = at.next
     // the claim/cleanup protocol lives in stageVersion; a concurrent
     // writer staging the same version loses at the claim, before any
     // data moves, and a failed stage retracts claim + gen dir
-    stageVersion(fs, root, next,
-        if (replaceAll) "overwrite" else "merge", keys,
+    at.stage(if (replaceAll) "overwrite" else "merge", keys,
         // by-name: gateDelta runs inside the stage, so this reads the
         // gate's per-commit counts after it ran (empty when ungated)
         expectLog = Expectations.lastGateCounts) { genDir =>
@@ -2463,7 +2586,7 @@ object VersionedTable {
           throw new TxnAlreadyCommittedException(
             s"txn ($sid, $bid) is already committed at $root")
       }
-      val prior: Option[Manifest] = cur.map(readManifest(fs, root, _))
+      val prior = at.prior
       prior.foreach(m => require(m.partCols == partCols,
         s"partition columns ${partCols.mkString(",")} != committed ${m.partCols.mkString(",")}"))
       // an OVERWRITE has no surviving rows to keep an omitted column
@@ -2684,19 +2807,18 @@ object VersionedTable {
         }
       // renamed columns write their FROZEN physical names; the manifest
       // schema (with its rename metadata carried from the prior version
-      // — unionByName rebuilds fields without it) stays logical
-      val outSchema = carryPhysical(merged.schema, prior)
+      // — unionByName rebuilds fields without it) stays logical. Its
+      // top-level fields record nullable, as a parquet read returns them:
+      // the frame's own flags depend on whether survivors joined the
+      // write, and would flip between versions
+      val outSchema = StructType(carryPhysical(merged.schema, prior)
+        .map(_.copy(nullable = true)))
       // the full per-stream watermark map carries into EVERY manifest (new
       // tag merged in), so a later maintenance commit + vacuum cannot
       // erase another stream's exactly-once state
       val txns = prior.map(_.txns).getOrElse(Map.empty) ++ txn ++ extraTxns
-      // top-level nullability does not count as a schema change here:
-      // a merge's survivors union already flips it between commits, and
-      // with no row written the prior schema stays valid
-      def shape(st: StructType) =
-        st.map(f => (f.name, f.dataType, f.metadata))
       prior.filter(pm => entries.isEmpty && !replaceAll &&
-          shape(pm.schema) == shape(outSchema)) match {
+          pm.schema == outSchema) match {
         // an empty delta that keeps the schema changes nothing but the
         // watermarks (a stream's data-less micro-batch): commit the prior
         // manifest with them advanced — no generation dir, no write job,
@@ -2939,53 +3061,18 @@ object VersionedTable {
              bloomBits: Long = 0L,
              txn: Option[(String, Long)] = None,
              replaceAll: Boolean = false,
-             extraTxns: Seq[(String, Long)] = Nil): Int = {
-    val fs = fsFor(spark, root)
-    val maxAttempts = 5
-    var attempt = 1
-    var committed = -1
-    while (committed < 0) {
-      val basedOn = currentVersion(spark, root).getOrElse(-1)
-      try {
-        val v = prepare(spark, root, updates, keys, partCols, statsCols,
-          fileRows, bloomCols, bloomBits, txn, replaceAll, extraTxns)
-        publish(spark, root, v)
-        committed = v
-      } catch {
-        case _: TxnAlreadyCommittedException => // no-op replay
-          committed = currentVersion(spark, root).getOrElse(basedOn max 0)
-        case e: StagingRaceException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          // an OVERWRITE's footprint is the whole table: any interleaved
-          // commit conflicts by definition — the disjoint-partition
-          // retry below would silently clobber the winner's dirs
-          if (replaceAll) throw new ConcurrentWriteConflictException(
-            s"concurrent write conflict at $root: INSERT OVERWRITE " +
-              "replaces the entire table and cannot serialize around a " +
-              "concurrent commit — re-run against the new current version")
-          // the loser can only restage once the winner's version is
-          // COMMITTED (next = max committed + 1 would re-collide with the
-          // same staged manifest otherwise)
-          val newCur = awaitCommitAfter(spark, root, basedOn)
-            .getOrElse(throw e) // staged but never published
-          val myDirs = Merge.partitionDirEntries(spark, updates, partCols)
-            .map(_._2).toSet
-          ((basedOn + 1) to newCur).foreach { v =>
-            touchedDirs(fs, root, v) match {
-              case Some(dirs) if dirs.intersect(myDirs).isEmpty => ()
-              case _ => throw new ConcurrentWriteConflictException(
-                s"concurrent write conflict at $root: version $v touched " +
-                  "partitions this merge also writes (or its footprint is " +
-                  "unverifiable after vacuum/layout change) — re-run the " +
-                  "merge against the new current version")
-            }
-          }
-        // disjoint: loop retries prepare on the new current version
+             extraTxns: Seq[(String, Long)] = Nil): Int =
+    commitLoop(spark, root,
+      if (replaceAll) WholeTable("INSERT OVERWRITE replaces")
+      else new Disjoint(Merge.partitionDirEntries(spark, updates, partCols)
+        .map(_._2).toSet)) { at =>
+      try at.publish(stageMerge(spark, at, updates, keys, partCols,
+        statsCols, fileRows, bloomCols, bloomBits, txn, replaceAll,
+        extraTxns))
+      catch { case _: TxnAlreadyCommittedException => // no-op replay
+        currentVersion(spark, root).getOrElse(at.basedOn max 0)
       }
     }
-    committed
-  }
 
   /** A claim-race loser's wait: poll until some version NEWER than
     * `basedOn` is COMMITTED (the winner published) or
@@ -3003,31 +3090,6 @@ object VersionedTable {
       newCur = currentVersion(spark, root).getOrElse(-1)
     }
     if (newCur <= basedOn) None else Some(newCur)
-  }
-
-  /** Claim-loss retry for DECLARATIVE ops (deleteWhere, compact,
-    * repartitionTable, restore, DDL): unlike a merge, these derive
-    * everything from the CURRENT version, so losing the claim race needs
-    * no conflict check — wait for the winner's commit marker and simply
-    * re-run the body against the new current state; the rerun IS the
-    * serialized semantics. A claim that never publishes (crashed writer)
-    * rethrows with the vacuum hint after the bounded wait, exactly like
-    * [[upsert]]. */
-  private def withClaimRetry[A](spark: SparkSession, root: String,
-                                maxAttempts: Int = 5)(body: => A): A = {
-    var attempt = 1
-    while (true) {
-      val basedOn = currentVersion(spark, root).getOrElse(-1)
-      try return body
-      catch {
-        case e: StagingRaceException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          if (awaitCommitAfter(spark, root, basedOn).isEmpty)
-            throw e // staged but never published
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Partition dirs version `v` changed relative to `v-1`: dirs its
@@ -3297,12 +3359,10 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, root: String, column: String,
                   lower: Any, upper: Any,
                   fileRows: Option[Int] = None,
-                  bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
+                  bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.lit
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val (fs, m) = (at.fs, at.m)
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
@@ -3324,8 +3384,8 @@ object VersionedTable {
         usableStat(fs, root, m, f, column, dtJson).isDefined)
       if (!anyUsable) true else dirFiles.exists(mayMatch)
     }
-    if (touched.isEmpty) return cur // index proves nothing can match
-    rewriteTouched(spark, root, m, touched, cur, fileRows,
+    if (touched.isEmpty) at.cur // index proves nothing can match
+    else rewriteTouched(spark, at, touched, fileRows,
         bloomBits, op = "delete") { df =>
       df.filter(!(col(column) >= lit(lower) && col(column) <= lit(upper)) ||
         col(column).isNull)
@@ -3344,15 +3404,15 @@ object VersionedTable {
     * preserves every dir's logical rows (compaction, DV
     * materialization), so content tokens carry and a change feed
     * spanning the commit skips the rewritten dirs entirely. */
-  private def rewriteTouched(spark: SparkSession, root: String, m: Manifest,
-                             touched: Map[String, String], cur: Int,
+  private def rewriteTouched(spark: SparkSession, at: Attempt,
+                             touched: Map[String, String],
                              fileRows: Option[Int], bloomBits: Long,
                              zOrderCols: Seq[String] = Nil,
                              contentChanging: Boolean = true,
                              op: String = "rewrite",
                              expectLog: Map[String, Long] = Map.empty)
                             (transform: DataFrame => DataFrame): Int = {
-    val fs = fsFor(spark, root)
+    val (root, fs, m) = (at.root, at.fs, at.m)
     // the touched dirs' coverage reads off the #diridx col lists — no
     // sidecar I/O just to learn which columns to re-collect
     val tRefs = touched.keysIterator.flatMap(m.idxRefs.get).toSeq
@@ -3360,14 +3420,13 @@ object VersionedTable {
       .distinct.filterNot(m.partCols.contains)
     val bloomCols = tRefs.flatMap(_.bloomCols)
       .distinct.filterNot(m.partCols.contains)
-    val next = stageVersion(fs, root, cur + 1, op, m.keys,
-        expectLog = expectLog) { genDir =>
+    at.commit(op, m.keys, expectLog) { genDir =>
       // the rewrite's input is exactly the touched dirs — their recorded
       // byte totals are a FREE size hint for the small-commit AQE-off
       // plan
       val sparkW = commitSession(spark,
         Some(dirsBytes(m, touched.keysIterator)))
-      val (written, fresh) = writeGeneration(fs, sparkW, root, cur + 1,
+      val (written, fresh) = writeGeneration(fs, sparkW, root, at.next,
         genDir, transform(scanDirs(spark, root, m, touched)), m.partCols,
         m.schema, statsCols, bloomCols, bloomBits, fileRows, zOrderCols)
       // untouched dirs keep their mapping; touched dirs remap to the new
@@ -3381,8 +3440,6 @@ object VersionedTable {
           rel -> (if (contentChanging && touched.contains(rel)) genDir
             else m.dirVers.getOrElse(rel, genDir)) })
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Index-targeted UPDATE by range predicate — completes the lake's DML
@@ -3407,12 +3464,10 @@ object VersionedTable {
                   lower: Any, upper: Any,
                   set: Map[String, org.apache.spark.sql.Column],
                   fileRows: Option[Int] = None,
-                  bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
+                  bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.{lit, when}
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val (fs, m) = (at.fs, at.m)
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(set.nonEmpty, "UPDATE needs at least one SET column")
@@ -3444,8 +3499,8 @@ object VersionedTable {
           if (!anyUsable) true else dirFiles.exists(mayMatch)
         }
       }
-    if (touched.isEmpty) return cur // index proves nothing can match
-    updateCore(spark, root, m, cur, touched,
+    if (touched.isEmpty) at.cur // index proves nothing can match
+    else updateCore(spark, at, touched,
       col(column) >= lit(lower) && col(column) <= lit(upper),
       set, fileRows, bloomBits)
   }
@@ -3460,20 +3515,19 @@ object VersionedTable {
                     values: Seq[Any],
                     set: Map[String, org.apache.spark.sql.Column],
                     fileRows: Option[Int] = None,
-                    bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+                    bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val (fs, m) = (at.fs, at.m)
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
       s"$column is a partition column — use updateWhere's exact dir pruning")
     val vs = values.filter(_ != null)
-    if (vs.isEmpty) return cur
-    val touched = touchedDirs(root, inSelection(fs, root, m, column, vs))
-    if (touched.isEmpty) return cur // index proves nothing can match
-    updateCore(spark, root, m, cur, touched, col(column).isin(vs: _*),
+    val touched =
+      if (vs.isEmpty) Map.empty[String, String]
+      else touchedDirs(root, inSelection(fs, root, m, column, vs))
+    if (touched.isEmpty) at.cur // index proves nothing can match
+    else updateCore(spark, at, touched, col(column).isin(vs: _*),
       set, fileRows, bloomBits)
   }
 
@@ -3494,12 +3548,13 @@ object VersionedTable {
     * sides against the OLD row, results cast back to declared types —
     * gate the updated rows on the CHECK constraints, then rewrite the
     * touched dirs. */
-  private def updateCore(spark: SparkSession, root: String, m: Manifest,
-                         cur: Int, touched: Map[String, String],
+  private def updateCore(spark: SparkSession, at: Attempt,
+                         touched: Map[String, String],
                          cond: org.apache.spark.sql.Column,
                          set: Map[String, org.apache.spark.sql.Column],
                          fileRows: Option[Int], bloomBits: Long): Int = {
     import org.apache.spark.sql.functions.when
+    val (root, m) = (at.root, at.m)
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     set.keys.foreach { c =>
       require(m.schema.fieldNames.contains(c),
@@ -3524,7 +3579,7 @@ object VersionedTable {
     if (gates.nonEmpty)
       enforceChecks(applySet(scanDirs(spark, root, m, touched).filter(cond)),
         gates, "UPDATE result")
-    rewriteTouched(spark, root, m, touched, cur, fileRows,
+    rewriteTouched(spark, at, touched, fileRows,
         bloomBits, op = "update")(applySet)
   }
 
@@ -3554,12 +3609,9 @@ object VersionedTable {
   def deleteWhereDV(spark: SparkSession, root: String, column: String,
                     lower: Any, upper: Any,
                     maxDeleteRows: Long = 16L * 1024 * 1024): Int =
-      withClaimRetry(spark, root) {
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.lit
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val (fs, m) = (at.fs, at.m)
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
@@ -3569,7 +3621,7 @@ object VersionedTable {
     // residual predicate below decides the exact positions
     val sel = rangeSelection(fs, root, m, column, Seq((lower, upper)))
       .getOrElse(selectAllDirs(root, m))
-    dvDelete(spark, root, m, cur, sel,
+    dvDelete(spark, at, sel,
       col(column) >= lit(lower) && col(column) <= lit(upper), maxDeleteRows)
   }
 
@@ -3577,12 +3629,11 @@ object VersionedTable {
     * scan the selection with `_metadata`, collect the predicate's
     * matching (file, position) pairs, union with existing vectors, and
     * commit a data-file-untouched version. */
-  private def dvDelete(spark: SparkSession, root: String, m: Manifest,
-                       cur: Int, sel: ScanSelection,
+  private def dvDelete(spark: SparkSession, at: Attempt, sel: ScanSelection,
                        predicate: org.apache.spark.sql.Column,
                        maxDeleteRows: Long): Int = {
     import org.apache.spark.sql.functions.{broadcast, collect_list, lit, sort_array, count => cnt}
-    val fs = fsFor(spark, root)
+    val (root, fs, m, cur) = (at.root, at.fs, at.m, at.cur)
     val paths = sel.wholeDirs ++ sel.files
     if (paths.isEmpty) return cur // index proves nothing can match
     val depth = m.partCols.length + 2
@@ -3646,8 +3697,7 @@ object VersionedTable {
       }
       f -> serializeDv(all)
     }.toMap
-    val next = stageVersion(fs, root, cur + 1, "delete-dv",
-        m.keys) { genDir =>
+    at.commit("delete-dv", m.keys) { genDir =>
       carryAll(m).copy(dvBytes = freshBytes, dvRefs = m.dvs -- freshBytes.keys,
         dirVers = {
           // new DV positions HIDE rows: that dir's content changed even
@@ -3658,8 +3708,6 @@ object VersionedTable {
             rel -> (if (dvDirs.contains(rel)) genDir else tok) }
         })
     }
-    publish(spark, root, next)
-    next
   }
 
   /** File selection for an IN-list: a file survives when ANY candidate
@@ -3742,19 +3790,16 @@ object VersionedTable {
   def deleteWhereInDV(spark: SparkSession, root: String, column: String,
                       values: Seq[Any],
                       maxDeleteRows: Long = 16L * 1024 * 1024): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+      commitLoop(spark, root, Rederive) { at =>
+    val (fs, m) = (at.fs, at.m)
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
       s"$column is a partition column — drop partitions by re-upserting " +
         "or filtering read(), no delete needed")
     val vs = values.filter(_ != null)
-    if (vs.isEmpty) return cur
-    dvDelete(spark, root, m, cur, inSelection(fs, root, m, column, vs),
+    if (vs.isEmpty) at.cur
+    else dvDelete(spark, at, inSelection(fs, root, m, column, vs),
       col(column).isin(vs: _*), maxDeleteRows)
   }
 
@@ -3767,22 +3812,21 @@ object VersionedTable {
   def deleteWhereIn(spark: SparkSession, root: String, column: String,
                     values: Seq[Any],
                     fileRows: Option[Int] = None,
-                    bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+                    bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val (fs, m) = (at.fs, at.m)
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
       s"$column is a partition column — drop partitions by re-upserting " +
         "or filtering read(), no rewrite needed")
     val vs = values.filter(_ != null)
-    if (vs.isEmpty) return cur
     // dirs holding any surviving candidate file (or unindexed wholeDirs)
-    val touched = touchedDirs(root, inSelection(fs, root, m, column, vs))
-    if (touched.isEmpty) return cur // index proves nothing can match
-    rewriteTouched(spark, root, m, touched, cur, fileRows,
+    val touched =
+      if (vs.isEmpty) Map.empty[String, String]
+      else touchedDirs(root, inSelection(fs, root, m, column, vs))
+    if (touched.isEmpty) at.cur // index proves nothing can match
+    else rewriteTouched(spark, at, touched, fileRows,
         bloomBits, op = "delete") { df =>
       df.filter(!col(column).isin(vs: _*) || col(column).isNull)
     }
@@ -3878,15 +3922,13 @@ object VersionedTable {
   def deleteMatching(spark: SparkSession, root: String,
                      predicate: org.apache.spark.sql.Column,
                      fileRows: Option[Int] = None,
-                     bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
+                     bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
-    val (touched, _) = matchingSelection(spark, root, m, predicate, "DELETE")
-    if (touched.isEmpty) return cur // index proves nothing can match
-    rewriteTouched(spark, root, m, touched, cur, fileRows,
+    val (touched, _) = matchingSelection(spark, root, at.m, predicate,
+      "DELETE")
+    if (touched.isEmpty) at.cur // index proves nothing can match
+    else rewriteTouched(spark, at, touched, fileRows,
         bloomBits, op = "delete") { df =>
       df.filter(not(coalesce(predicate, lit(false))))
     }
@@ -3899,13 +3941,9 @@ object VersionedTable {
   def deleteMatchingDV(spark: SparkSession, root: String,
                        predicate: org.apache.spark.sql.Column,
                        maxDeleteRows: Long = 16L * 1024 * 1024): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
-    val (_, sel) = matchingSelection(spark, root, m, predicate, "DELETE")
-    dvDelete(spark, root, m, cur, sel, predicate, maxDeleteRows)
+      commitLoop(spark, root, Rederive) { at =>
+    val (_, sel) = matchingSelection(spark, root, at.m, predicate, "DELETE")
+    dvDelete(spark, at, sel, predicate, maxDeleteRows)
   }
 
   /** UPDATE by ARBITRARY predicate — [[deleteMatching]]'s sibling,
@@ -3918,15 +3956,12 @@ object VersionedTable {
                      predicate: org.apache.spark.sql.Column,
                      set: Map[String, org.apache.spark.sql.Column],
                      fileRows: Option[Int] = None,
-                     bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
-    val (touched, _) = matchingSelection(spark, root, m, predicate, "UPDATE")
-    if (touched.isEmpty) return cur // index proves nothing can match
-    updateCore(spark, root, m, cur, touched, predicate, set, fileRows,
-      bloomBits)
+                     bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val (touched, _) = matchingSelection(spark, root, at.m, predicate,
+      "UPDATE")
+    if (touched.isEmpty) at.cur // index proves nothing can match
+    else updateCore(spark, at, touched, predicate, set, fileRows, bloomBits)
   }
 
   /** Per-file deletion-vector footprint of the current (or as-of)
@@ -3982,36 +4017,28 @@ object VersionedTable {
     * itself is a metadata-only commit carried through every later
     * version like the txn watermarks. */
   def addConstraint(spark: SparkSession, root: String, name: String,
-                    sql: String): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+                    sql: String): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(!m.checks.contains(name), s"constraint $name already exists")
     // the expression must at least resolve against the schema
     spark.sessionState.sqlParser.parseExpression(sql)
     enforceChecks(readM(spark, root, m), Map(name -> sql),
       s"existing data at $root")
-    val next = stageVersion(fs, root, cur + 1, "add-constraint", m.keys) { _ =>
+    at.commit("add-constraint", m.keys) { _ =>
       carryAll(m).copy(checks = m.checks + (name -> sql))
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Deregister a CHECK constraint — metadata-only commit. */
   def dropConstraint(spark: SparkSession, root: String,
-                     name: String): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+                     name: String): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(m.checks.contains(name), s"constraint $name does not exist")
-    val next = stageVersion(fs, root, cur + 1, "drop-constraint", m.keys) { _ =>
+    at.commit("drop-constraint", m.keys) { _ =>
       carryAll(m).copy(checks = m.checks - name)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** The registered CHECK constraints of the current (or as-of)
@@ -4026,7 +4053,7 @@ object VersionedTable {
     * ([[maintain]]'s vacuum window). */
   def setProperties(spark: SparkSession, root: String,
                     kvs: Map[String, String]): Int =
-      withClaimRetry(spark, root) {
+      commitLoop(spark, root, Rederive) { at =>
     require(kvs.nonEmpty, "no properties given")
     // reserved keys the engine acts on validate AT SET TIME: a bad
     // value crashing every later maintenance run (after its compaction
@@ -4039,31 +4066,22 @@ object VersionedTable {
     // would otherwise crash every later ingest's gate
     if (kvs.keys.exists(_.startsWith("graft.expect.")))
       Expectations.fromProps(kvs)
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
-    val next = stageVersion(fs, root, cur + 1, "set-properties", m.keys) { _ =>
+    val m = at.m
+    at.commit("set-properties", m.keys) { _ =>
       carryAll(m).copy(props = m.props ++ kvs)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Remove table properties — metadata-only commit; absent keys are a
     * no-op removal (idempotent). */
   def unsetProperties(spark: SparkSession, root: String,
-                      ks: Seq[String]): Int = withClaimRetry(spark, root) {
+                      ks: Seq[String]): Int =
+      commitLoop(spark, root, Rederive) { at =>
     require(ks.nonEmpty, "no property keys given")
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
-    val next = stageVersion(fs, root, cur + 1, "unset-properties", m.keys) { _ =>
+    val m = at.m
+    at.commit("unset-properties", m.keys) { _ =>
       carryAll(m).copy(props = m.props -- ks)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** The table properties of the current (or as-of) version. */
@@ -4128,12 +4146,10 @@ object VersionedTable {
     * hashes NULL to a bucket, so null facets do not map there). */
   def addDerivedPartition(spark: SparkSession, root: String,
                           partCol: String, transform: String,
-                          srcCol: String): Int = withClaimRetry(spark, root) {
+                          srcCol: String): Int =
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.types.{DateType, IntegerType, TimestampType}
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val m = at.m
     require(m.partCols.contains(partCol),
       s"$partCol is not a partition column (layout: ${m.partCols.mkString(",")})")
     require(m.schema.fieldNames.contains(srcCol),
@@ -4163,30 +4179,23 @@ object VersionedTable {
     enforceChecks(readM(spark, root, m),
       Map(s"derived $partCol" -> derivedSqlExpr(transform, partCol, srcCol)),
       s"existing data at $root")
-    val next = stageVersion(fs, root, cur + 1, "add-derived-partition", m.keys) { _ =>
+    at.commit("add-derived-partition", m.keys) { _ =>
       carryAll(m).copy(
         derived = m.derived + (partCol -> ((transform, srcCol))))
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Deregister a derived partition — metadata-only commit; the column
     * keeps its values, queries just stop mapping src predicates. */
   def dropDerivedPartition(spark: SparkSession, root: String,
                            partCol: String): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(m.derived.contains(partCol),
       s"$partCol has no derived-partition registration")
-    val next = stageVersion(fs, root, cur + 1, "drop-derived-partition", m.keys) { _ =>
+    at.commit("drop-derived-partition", m.keys) { _ =>
       carryAll(m).copy(derived = m.derived - partCol)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** The registrations of the current (or as-of) version:
@@ -4448,22 +4457,20 @@ object VersionedTable {
               fileRows: Option[Int] = None,
               bloomCols: Seq[String] = Nil,
               bloomBits: Long = 0L,
-              zOrderCols: Seq[String] = Nil): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+              zOrderCols: Seq[String] = Nil): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val (fs, cur, m) = (at.fs, at.cur, at.m)
     (statsCols ++ bloomCols ++ zOrderCols).foreach(c =>
       require(!m.partCols.contains(c),
         s"stats column $c is a partition column"))
-    val next = stageVersion(fs, root, cur + 1, "compact", m.keys) { genDir =>
+    at.commit("compact", m.keys) { genDir =>
       val sparkW = commitSession(spark,
         Some(dirsBytes(m, m.mapping.keysIterator)))
       // the rewrite writes CURRENT logical names — renames materialize,
       // the column mapping drops
       val schema = stripPhysical(m.schema)
       val (written, (stats, blooms, dirRows, dirFiles, dirBytes)) =
-        writeGeneration(fs, sparkW, root, cur + 1, genDir,
+        writeGeneration(fs, sparkW, root, at.next, genDir,
           read(spark, root, Some(cur)), m.partCols, schema, statsCols,
           bloomCols, bloomBits, fileRows, zOrderCols)
       Staged(m.partCols, schema,
@@ -4475,8 +4482,6 @@ object VersionedTable {
         dirVers = written.map(rel => rel -> m.dirVers(rel)).toMap,
         idxRefs = Map.empty, props = m.props)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Incremental OPTIMIZE: rewrite ONLY partitions that accumulated
@@ -4495,16 +4500,13 @@ object VersionedTable {
                         fileRows: Option[Int] = None,
                         bloomBits: Long = 0L,
                         zOrderCols: Seq[String] = Nil): Int =
-      withClaimRetry(spark, root) {
+      commitLoop(spark, root, Rederive) { at =>
     require(minFilesPerDir >= 2, s"minFilesPerDir must be >= 2")
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val m = at.m
     val touched = m.mapping.filter { case (rel, _) =>
       m.dirFiles(rel) >= minFilesPerDir }
-    if (touched.isEmpty) return cur
-    rewriteTouched(spark, root, m, touched, cur, fileRows, bloomBits,
+    if (touched.isEmpty) at.cur
+    else rewriteTouched(spark, at, touched, fileRows, bloomBits,
       zOrderCols, contentChanging = false, op = "compact-files")(identity)
   }
 
@@ -4516,20 +4518,18 @@ object VersionedTable {
   def materializeDvs(spark: SparkSession, root: String,
                      minFraction: Double = 0.1,
                      fileRows: Option[Int] = None,
-                     bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
+                     bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
     require(minFraction > 0 && minFraction <= 1,
       s"minFraction must be in (0, 1]: $minFraction")
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val m = at.m
     val dvByDir = dvCountsByDir(m)
     val touched = m.mapping.filter { case (rel, _) =>
       dvByDir.getOrElse(rel, 0L) > 0L && m.dirRows(rel) > 0 &&
         dvByDir(rel).toDouble / m.dirRows(rel) >= minFraction
     }
-    if (touched.isEmpty) return cur
-    rewriteTouched(spark, root, m, touched, cur, fileRows,
+    if (touched.isEmpty) at.cur
+    else rewriteTouched(spark, at, touched, fileRows,
       bloomBits, contentChanging = false, op = "materialize-dv")(identity)
   }
 
@@ -4584,23 +4584,21 @@ object VersionedTable {
                        statsCols: Seq[String] = Nil,
                        fileRows: Option[Int] = None,
                        bloomCols: Seq[String] = Nil,
-                       bloomBits: Long = 0L): Int = withClaimRetry(spark, root) {
+                       bloomBits: Long = 0L): Int =
+      commitLoop(spark, root, Rederive) { at =>
     require(partCols.nonEmpty, "at least one partition column")
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val (fs, cur, m) = (at.fs, at.cur, at.m)
     partCols.foreach(c => require(m.schema.fieldNames.contains(c),
       s"partition column $c is not in the table schema"))
     (statsCols ++ bloomCols).foreach(c => require(!partCols.contains(c),
       s"stats column $c is a partition column"))
-    val next = stageVersion(fs, root, cur + 1, "repartition", m.keys) { genDir =>
+    at.commit("repartition", m.keys) { genDir =>
       val sparkW = commitSession(spark,
         Some(dirsBytes(m, m.mapping.keysIterator)))
       // full rewrite under logical names: renames materialize here too
       val schema = stripPhysical(m.schema)
       val (written, (stats, blooms, dirRows, dirFiles, dirBytes)) =
-        writeGeneration(fs, sparkW, root, cur + 1, genDir,
+        writeGeneration(fs, sparkW, root, at.next, genDir,
           read(spark, root, Some(cur)), partCols, schema, statsCols,
           bloomCols, bloomBits, fileRows)
       Staged(partCols, schema,
@@ -4615,8 +4613,6 @@ object VersionedTable {
         dirVers = written.map(_ -> genDir).toMap,
         idxRefs = Map.empty, props = m.props)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Time-travel ROLLBACK as a ZERO-COPY commit (Delta RESTORE): commit
@@ -4634,14 +4630,11 @@ object VersionedTable {
     * committed afterwards or the stream would double-apply. `toVersion`
     * must still be retained (not vacuumed). */
   def restore(spark: SparkSession, root: String, toVersion: Int): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
+      commitLoop(spark, root, Rederive) { at =>
+    val curM = at.m
     require(history(spark, root).contains(toVersion),
       s"version $toVersion is not committed (or was vacuumed) at $root")
-    val target = readManifest(fs, root, toVersion)
-    val curM = readManifest(fs, root, cur)
+    val target = readManifest(at.fs, root, toVersion)
     val curTxns = curM.txns
     // constraints are table GOVERNANCE, not data: a rollback keeps the
     // current rules (like the txn watermarks) — which means the RESTORED
@@ -4654,12 +4647,10 @@ object VersionedTable {
       enforceChecks(readM(spark, root, target),
         curM.checks ++ derivedChecks(curM),
         s"restore target v$toVersion at $root")
-    val next = stageVersion(fs, root, cur + 1, s"restore:v$toVersion", curM.keys) { _ =>
+    at.commit(s"restore:v$toVersion", curM.keys) { _ =>
       carryAll(target).copy(txns = curTxns, checks = curM.checks,
         derived = curM.derived, props = curM.props)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Metadata-only COUNT(*): the table's exact row count from the
@@ -5014,11 +5005,8 @@ object VersionedTable {
     * ADD); DROP clears BOTH, reverting pre-add rows to NULL. */
   def setColumnDefault(spark: SparkSession, root: String, name: String,
                        default: Option[String]): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(m.schema.fieldNames.contains(name),
       s"column $name does not exist at $root")
     val f = m.schema(name)
@@ -5035,21 +5023,16 @@ object VersionedTable {
       if (x.name == name) nf else x))
     val op = default.fold(s"drop-default:$name")(_ =>
       s"set-default:$name")
-    val next = stageVersion(fs, root, cur + 1, op, m.keys) { _ =>
+    at.commit(op, m.keys) { _ =>
       carryAll(m).copy(schema = newSchema)
     }
-    publish(spark, root, next)
-    next
   }
 
   def addColumn(spark: SparkSession, root: String, name: String,
                 dataType: DataType,
                 default: Option[String] = None): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(!m.schema.fieldNames.contains(name),
       s"column $name already exists at $root")
     m.schema.foreach(f => require(physicalName(f) != name,
@@ -5072,11 +5055,9 @@ object VersionedTable {
             .putString(DefaultInitKey, frozen)
             .putString(DefaultPreKey, renderPreMap(pre)).build())
     }
-    val next = stageVersion(fs, root, cur + 1, s"add-column:$name", m.keys) { _ =>
+    at.commit(s"add-column:$name", m.keys) { _ =>
       carryAll(m).copy(schema = StructType(m.schema.fields :+ field))
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Metadata-only DROP COLUMN: commit the current version with `name`
@@ -5086,11 +5067,8 @@ object VersionedTable {
     * the next compact/rewrite of each partition). Partition columns
     * cannot be dropped. */
   def dropColumn(spark: SparkSession, root: String, name: String): Int =
-      withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(m.schema.fieldNames.contains(name),
       s"column $name does not exist at $root")
     require(!m.partCols.contains(name),
@@ -5110,8 +5088,8 @@ object VersionedTable {
     // the dropped column's index entries die with it — MATERIALIZE the
     // block-held index, strip the column, and re-emit everything fresh
     // (carrying block refs verbatim would resurrect its stats on read)
-    val (allStats, allBlooms) = m.materializeIdx(fs, root)
-    val next = stageVersion(fs, root, cur + 1, s"drop-column:$name", m.keys) { _ =>
+    val (allStats, allBlooms) = m.materializeIdx(at.fs, root)
+    at.commit(s"drop-column:$name", m.keys) { _ =>
       carryAll(m).copy(schema = StructType(m.schema.filterNot(_.name == name)),
         stats = withoutCols(allStats, _ == name),
         blooms = withoutCols(allBlooms, _ == name),
@@ -5120,8 +5098,6 @@ object VersionedTable {
           src != name && p != name },
         idxRefs = Map.empty)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** One clause of a general MERGE: `cond` (None = unconditional) and
@@ -5166,17 +5142,14 @@ object VersionedTable {
                    insertWhen: Option[Option[org.apache.spark.sql.Column]],
                    bySource: Seq[MergeClause] = Nil,
                    fileRows: Option[Int] = None): Int =
-      withClaimRetry(spark, root) {
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.{lit, when}
     require(matched.nonEmpty || insertWhen.isDefined || bySource.nonEmpty,
       "MERGE needs at least one clause")
     bySource.foreach(c => require(c.set.forall(_.nonEmpty),
       "WHEN NOT MATCHED BY SOURCE supports DELETE or UPDATE SET col = " +
         "expr (there is no source row for SET *)"))
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val m = at.m
     require(m.partCols.forall(keys.contains),
       s"MERGE ON keys (${keys.mkString(", ")}) must include every " +
         s"partition column (${m.partCols.mkString(", ")}) — a match can " +
@@ -5307,12 +5280,12 @@ object VersionedTable {
       // namespace applyClauses resolves it in), so filter the PREFIXED
       // frame — filtering the raw source would leave it unresolved.
       insertWhen match {
-        case None => Expectations.clearGateCounts(); cur
+        case None => Expectations.clearGateCounts(); at.cur
         case Some(cond) =>
           val rows = cond.fold(srcPrefixed)(srcPrefixed.filter)
             .select(tableCols.map(c =>
               srcCol(c).cast(m.schema(c).dataType).as(c)): _*)
-          if (rows.isEmpty) { Expectations.clearGateCounts(); cur }
+          if (rows.isEmpty) { Expectations.clearGateCounts(); at.cur }
           // the upsert's own gate sets the counts for the insert leg
           else upsert(spark, root, rows, keys, m.partCols,
             statsCols = coveredIndexCols(m)._1,
@@ -5336,7 +5309,7 @@ object VersionedTable {
         // no gate ran: clear the thread's counts so a PREVIOUS gated
         // write's violations are never attributed to this merge
         Expectations.clearGateCounts()
-        rewriteTouched(spark, root, m, touched, cur, fileRows,
+        rewriteTouched(spark, at, touched, fileRows,
           0L, contentChanging = true, op = "merge")(applyClauses)
       }
       else {
@@ -5348,7 +5321,7 @@ object VersionedTable {
           checkGates, "MERGE result")
         val gated = Expectations.gateMergeResult(spark, posted,
           tableCols, m)
-        rewriteTouched(spark, root, m, touched, cur, fileRows,
+        rewriteTouched(spark, at, touched, fileRows,
           0L, contentChanging = true, op = "merge",
           // gateMergeResult ran eagerly above: these are ITS counts
           expectLog = Expectations.lastGateCounts)(_ => gated)
@@ -5387,29 +5360,17 @@ object VersionedTable {
     * the current version — a lost claim race is a LOUD conflict:
     * silently serializing a whole-table emptying AFTER a concurrent
     * commit would vanish that writer's acknowledged rows. */
-  def truncate(spark: SparkSession, root: String): Int = {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
-    if (m.mapping.isEmpty) return cur // already empty: commit nothing
-    try {
-      val next = stageVersion(fs, root, cur + 1, "truncate", m.keys) { _ =>
+  def truncate(spark: SparkSession, root: String): Int =
+    commitLoop(spark, root, WholeTable("TRUNCATE empties")) { at =>
+      val m = at.m
+      if (m.mapping.isEmpty) at.cur // already empty: commit nothing
+      else at.commit("truncate", m.keys) { _ =>
         Staged(m.partCols, m.schema, Map.empty, txns = m.txns,
           checks = m.checks, dirRows = Map.empty, dirFiles = Map.empty,
           dirBytes = Map.empty, derived = m.derived, dirVers = Map.empty,
           idxRefs = Map.empty, props = m.props)
       }
-      publish(spark, root, next)
-      next
-    } catch {
-      case _: StagingRaceException =>
-        throw new ConcurrentWriteConflictException(
-          s"concurrent write conflict at $root: TRUNCATE empties the " +
-            "entire table and cannot serialize around a concurrent " +
-            "commit — re-run against the new current version")
     }
-  }
 
   /** REPLACE TABLE: one commit REDEFINING the table — new schema,
     * partitioning, and merge keys with EMPTY content. CHECK constraints,
@@ -5427,23 +5388,13 @@ object VersionedTable {
     (partCols ++ keys).foreach(c => require(
       schema.fieldNames.contains(c),
       s"declared partition/key column $c not in the schema"))
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    try {
-      val next = stageVersion(fs, root, cur + 1, "replace", keys) { _ =>
+    commitLoop(spark, root, WholeTable("REPLACE TABLE redefines")) { at =>
+      at.cur // only an existing table can be replaced
+      at.commit("replace", keys) { _ =>
         Staged(partCols, schema, Map.empty, dirRows = Map.empty,
           dirFiles = Map.empty, dirBytes = Map.empty, derived = Map.empty,
           dirVers = Map.empty, idxRefs = Map.empty, props = Map.empty)
       }
-      publish(spark, root, next)
-      next
-    } catch {
-      case _: StagingRaceException =>
-        throw new ConcurrentWriteConflictException(
-          s"concurrent write conflict at $root: REPLACE TABLE redefines " +
-            "the entire table and cannot serialize around a concurrent " +
-            "commit — re-run against the new current version")
     }
   }
 
@@ -5467,11 +5418,9 @@ object VersionedTable {
     * watching this table by the old measure/group names needs
     * re-creation — the spec records names, not ids. */
   def renameColumn(spark: SparkSession, root: String, from: String,
-                   to: String): Int = withClaimRetry(spark, root) {
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+                   to: String): Int =
+      commitLoop(spark, root, Rederive) { at =>
+    val m = at.m
     require(m.schema.fieldNames.contains(from),
       s"column $from does not exist at $root")
     require(from != to, s"RENAME COLUMN $from TO $from is a no-op")
@@ -5518,19 +5467,16 @@ object VersionedTable {
     // index continuity: MATERIALIZE the block-held index and re-key the
     // renamed column's entries (carrying block refs verbatim would keep
     // serving them under the dead name)
-    val (allStats, allBlooms) = m.materializeIdx(fs, root)
+    val (allStats, allBlooms) = m.materializeIdx(at.fs, root)
     def rekey[A](mm: Map[String, Map[String, A]])
         : Map[String, Map[String, A]] =
       mm.map { case (f, cols) => f -> cols.map { case (c, v) =>
         (if (c == from) to else c) -> v } }
-    val next = stageVersion(fs, root, cur + 1,
-        s"rename-column:$from>$to", newKeys) { _ =>
+    at.commit(s"rename-column:$from>$to", newKeys) { _ =>
       carryAll(m).copy(schema = newSchema, stats = rekey(allStats),
         blooms = rekey(allBlooms), checks = newChecks, derived = newDerived,
         idxRefs = Map.empty)
     }
-    publish(spark, root, next)
-    next
   }
 
   /** Metadata-only TYPE WIDENING (Delta's type-widening semantics): one
@@ -5564,16 +5510,13 @@ object VersionedTable {
     * widenings half-applied in the history. */
   def widenColumns(spark: SparkSession, root: String,
                    cols: Seq[(String, DataType)]): Int =
-      withClaimRetry(spark, root) {
+      commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType,
       IntegerType, LongType, ShortType}
     require(cols.nonEmpty, "no columns to widen")
     require(cols.map(_._1).distinct.length == cols.length,
       s"duplicate column in widening list: ${cols.map(_._1).mkString(", ")}")
-    val fs = fsFor(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version at $root"))
-    val m = readManifest(fs, root, cur)
+    val m = at.m
     val rank = Map[DataType, Int](ByteType -> 0, ShortType -> 1,
       IntegerType -> 2, LongType -> 3)
     // ALL validation first: the commit below is all-or-nothing
@@ -5612,7 +5555,7 @@ object VersionedTable {
       .toMap
     val newSchema = StructType(m.schema.map(f =>
       toOf.get(f.name).fold(f)(t => f.copy(dataType = t))))
-    val (allStats, allBlooms) = m.materializeIdx(fs, root)
+    val (allStats, allBlooms) = m.materializeIdx(at.fs, root)
     val retagged = allStats.map { case (f, cs) => f -> cs.map {
       case (c, st) if toOf.contains(c) && st.dtJson.contains(fromJson(c)) =>
         c -> st.copy(dtJson = Some(toOf(c).json))
@@ -5620,12 +5563,10 @@ object VersionedTable {
     val widened = toOf.keySet
     val op = cols.map { case (n, t) => s"$n:${t.simpleString}" }
       .mkString("widen-column:", ",", "")
-    val next = stageVersion(fs, root, cur + 1, op, m.keys) { _ =>
+    at.commit(op, m.keys) { _ =>
       carryAll(m).copy(schema = newSchema, stats = retagged,
         blooms = withoutCols(allBlooms, widened), idxRefs = Map.empty)
     }
-    publish(spark, root, next)
-    next
   }
 
   // ----- branches (zero-copy refs) -----------------------------------
@@ -5791,11 +5732,8 @@ object VersionedTable {
     val (forkSrc, forkV) = brM.fork.getOrElse(throw new IllegalStateException(
       s"branch $name at $root carries no fork anchor"))
     val target = if (forkSrc.isEmpty) b else s"$b@$forkSrc"
-    withClaimRetry(spark, target) {
-      val cur = currentVersion(spark, target).getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"no committed version at $target"))
-      val curM = readManifest(fs, target, cur)
+    commitLoop(spark, target, Rederive) { at =>
+      val curM = at.m
       // the merge anchor is the BRANCH's v0 manifest — a byte copy of the
       // fork state that branch vacuum always retains — so the target's
       // own retention window never constrains a fast-forward
@@ -5895,7 +5833,7 @@ object VersionedTable {
           (withoutCols(fileScoped(ts, bs), c => !cols(c)),
             withoutCols(fileScoped(tr, br), c => !cols(c)))
         }
-      val next = stageVersion(fs, target, cur + 1, s"fast-forward:$name",
+      at.commit(s"fast-forward:$name",
           pick3(forkM.keys, curM.keys, brM.keys, "merge keys")) { _ =>
         Staged(curM.partCols, schema, mapping,
           stats = mergedStats, blooms = mergedBlooms, txns = txns,
@@ -5914,8 +5852,6 @@ object VersionedTable {
             else perDir(curM.idxRefs, brM.idxRefs),
           props = props)
       }
-      publish(spark, target, next)
-      next
     }
   }
 

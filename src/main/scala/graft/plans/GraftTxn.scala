@@ -154,10 +154,11 @@ object GraftTxn {
     val versions =
       try MultiSync.upsertAtomic(spark, st.writes.map(_._2).toSeq, marker)
       catch {
-        case e: graft.ops.VersionedTable.ConcurrentWriteConflictException =>
-          throw e // retryable: transaction stays open for a COMMIT retry
-        case e: graft.ops.VersionedTable.StagingRaceException =>
-          throw e // retryable: a plain writer won a claim; retry restages
+        // retryable: a concurrent commit conflicted or a plain writer won
+        // a claim — the transaction stays open, a COMMIT retry restages
+        case e @ (_: graft.ops.VersionedTable.ConcurrentWriteConflictException |
+                  _: graft.ops.VersionedTable.StagingRaceException) =>
+          throw e
         case t: Throwable =>
           state.get.remove(spark) // aborted: a replay would fail the same
           throw t

@@ -9,9 +9,9 @@ import graft.ops.VersionedTable
   * value-identical with the read-back aggregation they replace: same
   * per-file min/max/null-count renderings across every supported column
   * type, same per-dir row/file counts, and pruning must keep biting on
-  * footer-collected manifests. The scan path stays reachable via
-  * `spark.graft.stats.footer=false` and via the INT96 fallback — both
-  * are pinned here against the footer output. */
+  * footer-collected manifests. The scan path is the reference: it runs
+  * over the footer commit's own generation, and the INT96, NaN and
+  * signed-zero fallbacks that take it are pinned here too. */
 class FooterStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -105,26 +105,29 @@ class FooterStatsSpec extends SparkSpec {
   }
 
   test("footer stats == scan stats across every supported type") {
-    val df = wideFrame()
-    val rootF = fresh("on")
-    val rootS = fresh("off")
-    VersionedTable.upsert(spark, rootF, df, Seq("id", "grp"), Seq("grp"),
-      statsCols = statCols)
-    spark.conf.set("spark.graft.stats.footer", "false")
-    try VersionedTable.upsert(spark, rootS, df, Seq("id", "grp"),
+    val root = fresh("parity")
+    VersionedTable.upsert(spark, root, wideFrame(), Seq("id", "grp"),
       Seq("grp"), statsCols = statCols)
-    finally spark.conf.unset("spark.graft.stats.footer")
-    val f = statsByDir(rootF)
-    val s = statsByDir(rootS)
-    assertParity(f, s)
+    val m = VersionedTable.resolveManifest(spark, root, None)
+    val fs = VersionedTable.fsFor(spark, root)
+    val (footer, _) = m.materializeIdx(fs, root)
+    // the read-back aggregation over the same generation's files
+    val (scan, _, scanRows, scanFiles, scanBytes) =
+      VersionedTable.collectFileStatsScan(spark, root, "gen0", Seq("grp"),
+        statCols)
+    assert(footer.nonEmpty)
+    assert(footer.keySet == scan.keySet)
+    footer.keys.foreach(f => assert(footer(f) == scan(f),
+      s"stat mismatch in $f:\nfooter: ${footer(f)}\nscan:   ${scan(f)}"))
     // the all-null partition records a PROVABLY only-null entry
     // (min=max=None with nulls>0 — range pruning may skip it)
-    val g1 = f("grp=g1").head("i_allnull")
+    val g1 = statsByDir(root)("grp=g1").head("i_allnull")
     assert(g1._1.isEmpty && g1._2.isEmpty && g1._3 > 0L)
-    // per-dir row counts identical too (footer path derives them from
-    // block row counts, scan from count(1))
-    assert(VersionedTable.read(spark, rootF).count() ==
-      VersionedTable.read(spark, rootS).count())
+    // per-dir counts identical too (footer path derives rows from block
+    // row counts, scan from count(1))
+    assert(m.dirRows == scanRows)
+    assert(m.dirFiles == scanFiles)
+    assert(m.dirBytes == scanBytes)
   }
 
   test("footer-collected manifests still prune reads and upserts") {

@@ -3241,7 +3241,56 @@ class OpsSpec extends SparkSpec {
         .select($"v").as[Long].collect().toSet
       assert(vs == (11L to 40L).toSet)
       assert(VersionedTable.history(spark, root) == Seq(0, 1, 2))
+      // a metadata-only op re-derives too: setProperties waits out the
+      // winner's claim and commits on top of it, carrying its rows
+      val staged2 = VersionedTable.prepare(spark, root,
+        Seq((101, "d1", 8L)).toDF("id", "day", "v"), keys, Seq("day"),
+        statsCols = Seq("v"))
+      val setter = Future {
+        VersionedTable.setProperties(spark, root, Map("owner" -> "ops"))
+      }
+      Thread.sleep(300)
+      VersionedTable.publish(spark, root, staged2)
+      assert(Await.result(setter, 60.seconds) == 4)
+      assert(VersionedTable.history(spark, root) == Seq(0, 1, 2, 3, 4))
+      assert(VersionedTable.propertiesOf(spark, root) == Map("owner" -> "ops"))
+      assert(VersionedTable.read(spark, root).filter($"id" === 101)
+        .count() == 1)
     } finally sys.props("graft.versioned.claimWaitMs") = saved
+  }
+
+  test("VersionedTable: whole-table ops conflict loudly on a lost claim") {
+    val root = java.nio.file.Files.createTempDirectory("graft_wholetable")
+      .toString + "/table"
+    val keys = Seq("id", "day")
+    VersionedTable.upsert(spark, root,
+      Seq((1, "d0", 1L), (2, "d1", 2L)).toDF("id", "day", "v"), keys,
+      Seq("day"))
+    // each op races a writer whose claim is held: an overwrite, TRUNCATE
+    // and REPLACE TABLE replace the whole table, so they never wait for
+    // the winner or retry on top of it
+    val ops: Seq[(String, () => Int)] = Seq(
+      "truncate" -> (() => VersionedTable.truncate(spark, root)),
+      "redefine" -> (() => VersionedTable.redefine(spark, root,
+        Seq((0, "d", 0L)).toDF("id", "day", "v").schema, Seq("day"),
+        keys)),
+      "overwrite" -> (() => VersionedTable.overwrite(spark, root,
+        Seq((9, "d9", 9L)).toDF("id", "day", "v"), keys, Seq("day"))))
+    ops.zipWithIndex.foreach { case ((name, op), i) =>
+      val winner = 10 + i
+      val staged = VersionedTable.prepare(spark, root,
+        Seq((winner, "d0", winner.toLong)).toDF("id", "day", "v"), keys,
+        Seq("day"))
+      val err = intercept[VersionedTable.ConcurrentWriteConflictException](
+        op())
+      assert(err.getMessage.contains("concurrent write conflict") &&
+        err.getMessage.contains("cannot serialize around"), s"$name: $err")
+      VersionedTable.publish(spark, root, staged)
+      // history gained the winner's version only
+      assert(VersionedTable.history(spark, root) == (0 to i + 1), name)
+    }
+    assert(VersionedTable.read(spark, root).select($"id").as[Int]
+      .collect().toSet == Set(1, 2, 10, 11, 12))
   }
 
   test("VersionedTable.compactSmallFiles: only hot dirs rewrite, no-op burns nothing") {
@@ -3545,6 +3594,33 @@ class OpsSpec extends SparkSpec {
     assert(evolved.schema.fieldNames.toSeq == Seq("id", "grp", "v", "note"))
     assert(evolved.mapping == prior.mapping)
     assert(VersionedTable.read(spark, root).count() == 40)
+  }
+
+  test("VersionedTable: merges record one #schema whatever they rewrote") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vtnull").toString
+    val root = s"$dir/table"
+    val keys = Seq("id", "grp")
+    def up(df: org.apache.spark.sql.DataFrame, bid: Long): Int =
+      VersionedTable.upsert(spark, root, df, keys, Seq("grp"),
+        txn = Some(("s1", bid)))
+    // primitive ints come in non-nullable; the merge over g0 reads its
+    // survivors back from parquet (nullable); the empty delta carries
+    up((0 until 4).map(i => (i, s"g${i % 2}", i)).toDF("id", "grp", "n"), 0)
+    up(Seq((0, "g0", 10)).toDF("id", "grp", "n"), 1)
+    up(Seq.empty[(Int, String, Int)].toDF("id", "grp", "n"), 2)
+    up(Seq((5, "g5", 5)).toDF("id", "grp", "n"), 3)
+    def schemaLine(v: Int): String = {
+      val src = scala.io.Source.fromFile(s"$root/_manifest.$v", "UTF-8")
+      try src.getLines().find(_.startsWith("#schema\t")).get
+      finally src.close()
+    }
+    assert(VersionedTable.history(spark, root) == Seq(0, 1, 2, 3))
+    assert((0 to 3).map(schemaLine).distinct.size == 1,
+      (0 to 3).map(schemaLine).mkString("\n"))
+    assert(VersionedTable.resolveManifest(spark, root, None).schema
+      .forall(_.nullable))
+    // the empty delta still wrote no generation
+    assert(!new java.io.File(root, "gen2").exists)
   }
 
   test("commit gate: parent sessions with equal conf share one static clone") {
