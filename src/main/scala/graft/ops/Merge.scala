@@ -126,9 +126,9 @@ object Merge {
     * keys + stray directories). Cost: ONE aggregation over `values`
     * collecting |touched partitions| rows — replacing the previous
     * scratch-write probe (three evaluations of the update plan, a serial
-    * one-task partitioned write, 2·|touched| driver listings). Residual
-    * rendering drift cannot corrupt silently: [[readTouchedDirs]] fails
-    * loudly when a scanned file's path does not map back, and the write
+    * one-task partitioned write, 2·|touched| driver listings). The read
+    * side attaches each value to its listed dir ([[readTouchedDirs]]),
+    * so no file path is ever parsed back into a value, and the write
     * side renders through the real writer anyway. */
   private[graft] def partitionDirEntries(spark: SparkSession, values: DataFrame,
                                          partCols: Seq[String])
@@ -270,127 +270,29 @@ object Merge {
       "")
   }
 
-  /** Touched-dir count up to which [[readTouchedDirs]] inlines its
-    * rel→values lookup as a CASE/WHEN projection instead of a join. */
-  private val InlineLookupMax = 64
-
-  /** ONE multi-path scan over touched partition directories with the
-    * update side's EXACT values reattached. The naive shape — one
-    * `spark.read.parquet(dir)` relation per touched directory, unioned —
-    * pays per-relation fixed cost (a listing + footer-read driver job and
-    * an analysis leg each) |touched| times: ~80 touched leaves cost ~10 s
-    * of pure planning at sf0.1, and a daily increment over a 100 TB lake
-    * touches thousands. Here every directory lands in a single relation
-    * (one listing, one schema, one plan leg); each row recovers its
-    * partition values by mapping the trailing `partCols.length` path
-    * segments of `_metadata.file_path` through a broadcast (rel-dir →
-    * exact values) lookup — the values never round-trip through partition-
-    * type inference. Distinct typed value combinations render to distinct
-    * Hive directory names, so the mapping is injective; the metadata
-    * path's URI percent-encoding is decoded back to the raw on-disk name
-    * before the join (probed: space→%20, Hive-escaped %→%25, '+' raw),
-    * and a row whose path still fails to map fails LOUDLY via
-    * assert_true instead of silently corrupting the downstream anti-join. */
+  /** ONE scan over touched partition directories with the update side's
+    * EXACT values as their partition values (VersionedTable.scanLeaves:
+    * one file-source relation, no partition discovery). The naive shape —
+    * one `spark.read.parquet(dir)` relation per touched directory,
+    * unioned — pays per-relation fixed cost (a listing + footer-read
+    * driver job and an analysis leg each) |touched| times: ~80 touched
+    * leaves cost ~10 s of pure planning at sf0.1, and a daily increment
+    * over a 100 TB lake touches thousands. The values never round-trip
+    * through partition-type inference or a path, so '01' stays '01'.
+    * `dataSchema` is the files' schema; None infers it from the files. */
   private[graft] def readTouchedDirs(spark: SparkSession, basePath: String,
                                    live: Seq[(Seq[Any], String)],
                                    partCols: Seq[String],
                                    pTypes: Seq[org.apache.spark.sql.types.DataType],
-                                   dataSchema: Option[org.apache.spark.sql.types.StructType],
-                                   dv: Seq[(String, Long)] = Nil)
-      : DataFrame = {
-    import org.apache.spark.sql.functions._
-    import scala.jdk.CollectionConverters._
-    val n = partCols.length
-    val lookupSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__graft_rel",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-        partCols.indices.map(i => org.apache.spark.sql.types.StructField(
-          s"__graft_v$i", pTypes(i), nullable = true)) :+
-        org.apache.spark.sql.types.StructField("__graft_hit",
-          org.apache.spark.sql.types.BooleanType, nullable = false))
-    // Few touched dirs (the lifecycle/daily-increment norm): inline the
-    // rel→values mapping as a CASE/WHEN projection instead of a broadcast
-    // join — a BroadcastExchange materializes as its OWN Spark job even
-    // for a LocalRelation build side, and the small-commit wall is
-    // job-count-priced (CommitCostProbe). `lit(v).cast(pType)` round-trips
-    // the collected external value through the same Catalyst converters
-    // the createDataFrame path uses; any value lit() cannot represent
-    // (Try) falls back to the join, as does a live set past
-    // InlineLookupMax — a thousand-branch CASE is where codegen, not
-    // correctness, degrades.
-    val inlineLits: Option[Seq[(String, Seq[org.apache.spark.sql.Column])]] =
-      if (live.isEmpty || live.size > InlineLookupMax) None
-      else scala.util.Try(live.map { case (vals, rel) =>
-        rel -> vals.zipWithIndex.map { case (v, i) =>
-          (if (v == null) lit(null) else lit(v)).cast(pTypes(i)) }
-      }).toOption
-    lazy val lookup = spark.createDataFrame(
+                                   dataSchema: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame =
+    VersionedTable.scanLeaves(spark,
       live.map { case (vals, rel) =>
-        org.apache.spark.sql.Row.fromSeq((rel +: vals) :+ true) }.asJava,
-      lookupSchema)
-    val reader = dataSchema.fold(spark.read)(spark.read.schema)
-    // _metadata.file_path renders the on-disk name URI-percent-encoded
-    // (probed on Spark 4: 'day=page view' → 'day=page%20view', the
-    // Hive-escaped 'day=x%3Ay' → 'day=x%253Ay') while the lookup keys are
-    // the RAW fs.listStatus names — percent-decode before joining. A
-    // literal '+' stays raw in the path (NOT plus-for-space), but
-    // url_decode is URLDecoder-semantics and would turn it into a space,
-    // so pre-encode '+' as %2B; every other byte round-trips.
-    val scanned0 = reader
-      .parquet(live.map { case (_, rel) => s"$basePath/$rel" }: _*)
-      .withColumn("__graft_rel", url_decode(replace(substring_index(
-        substring_index(col("_metadata.file_path"), "/", -(n + 1)), "/", n),
-        lit("+"), lit("%2B"))))
-    // deletion vectors of the touched files (manifest "gen/rel/file"
-    // keys — the last n+2 path components, same derivation as the
-    // stats): WITHOUT this anti-join the merge's survivor side would
-    // RESURRECT merge-on-read-deleted rows into the next version
-    val scanned =
-      if (dv.isEmpty) scanned0
-      else {
-        import spark.implicits._
-        scanned0
-          .withColumn("__dv_file", url_decode(replace(
-            substring_index(col("_metadata.file_path"), "/", -(n + 2)),
-            lit("+"), lit("%2B"))))
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .join(broadcast(dv.toDF("__dv_file", "__dv_pos")),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-          .drop("__dv_file", "__dv_pos")
-      }
-    inlineLits match {
-      case Some(entries) =>
-        // every scanned file sits under a listed directory, so the rel
-        // must be one of the live keys; anything else means the path
-        // string drifted — fail loudly (same contract as the join's
-        // __graft_hit sentinel below).
-        val relCol = col("__graft_rel")
-        val checked = scanned.filter(assert_true(
-          relCol.isin(entries.map(_._1): _*),
-          lit("pruned-merge read: file path did not map back to a touched " +
-            "partition directory")).isNull)
-        partCols.indices.foldLeft(checked) { (df, i) =>
-          val c = entries.tail.foldLeft(
-            when(relCol === lit(entries.head._1), entries.head._2(i))) {
-            case (acc, (rel, cols)) => acc.when(relCol === lit(rel), cols(i))
-          }
-          df.withColumn(partCols(i), c)
-        }.drop("__graft_rel")
-      case None =>
-        val joined = scanned.join(broadcast(lookup), Seq("__graft_rel"), "left")
-          // every scanned file sits under a listed directory, so the map must
-          // hit; anything else means the path string drifted — fail loudly.
-          // The sentinel is the dedicated always-true marker, NOT a value
-          // column: a legitimately NULL partition value must not false-trip.
-          .filter(assert_true(col("__graft_hit").isNotNull,
-            lit("pruned-merge read: file path did not map back to a touched " +
-              "partition directory")).isNull)
-        partCols.indices.foldLeft(joined) { (df, i) =>
-          df.withColumn(partCols(i), col(s"__graft_v$i"))
-        }.drop("__graft_rel", "__graft_hit")
-          .drop(partCols.indices.map(i => s"__graft_v$i"): _*)
-    }
-  }
+        VersionedTable.ScanLeaf("", s"$basePath/$rel",
+          VersionedTable.catalystValues(vals, pTypes)) },
+      org.apache.spark.sql.types.StructType(partCols.zip(pTypes).map {
+        case (c, t) => org.apache.spark.sql.types.StructField(c, t) }),
+      dataSchema)
 
   /** Partition-pruned MERGE into a Hive-partitioned parquet table
     * (nested directories `c1=v1/c2=v2/...` for `partCols`): only
@@ -403,11 +305,11 @@ object Merge {
     * same way).
     *
     * Read side: each touched directory is resolved by its canonical path
-    * ([[partitionDirEntries]]) and scanned DIRECTLY — no partition
-    * discovery — with the update side's EXACT values reattached in ONE
-    * multi-path scan ([[readTouchedDirs]]): plan cost is O(1) in
-    * |touched partitions|. Reconstructing values by partition-type
-    * inference instead is
+    * ([[partitionDirEntries]]) and scanned DIRECTLY in ONE relation whose
+    * partition spec carries the update side's EXACT values
+    * ([[readTouchedDirs]]): no partition discovery, plan cost O(1) in
+    * |touched partitions|, the file schema inferred from the listed
+    * files. Reconstructing values by partition-type inference instead is
     * silently lossy for non-canonical strings ('01' → int 1 → "1"): the
     * anti-join then misses the old rows (duplicate logical keys in the
     * output) and dynamic overwrite writes a stray `c=1` directory

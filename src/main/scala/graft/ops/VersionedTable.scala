@@ -789,26 +789,6 @@ object VersionedTable {
       .filter(k => files.contains(k) || dirPrefixes.exists(k.startsWith))
       .flatMap(k => m.dvFor(fs, root, k).get.map(k -> _)).toSeq
 
-  /** Drop DV-deleted rows from a union of per-generation scans whose
-    * members each carry `__dv_file`/`__dv_pos` (added pre-union — the
-    * `_metadata` columns resolve only on the file-source relation). A
-    * BROADCAST anti-join on (file, position): build side = the deleted
-    * pairs, whole-stage-codegen'd, zero cost when `dv` is empty (the
-    * caller skips the metadata columns entirely). */
-  private def antiJoinDv(spark: SparkSession, df: DataFrame,
-                         dv: Seq[(String, Long)]): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    import spark.implicits._
-    df.join(broadcast(dv.toDF("__dv_file", "__dv_pos")),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-      .drop("__dv_file", "__dv_pos")
-  }
-
-  /** Materialize a selection WITHOUT a residual filter: per-generation
-    * multi-path scans under the manifest schema, deletion vectors
-    * applied. Callers add their own predicate ([[scanFrom]]) or leave
-    * the original Filter node in place (the PruneVersionedScan optimizer
-    * rule). */
   // ----- column mapping (RENAME COLUMN support) ----------------------
   //
   // A renamed column keeps its PHYSICAL (as-written) name forever — the
@@ -902,57 +882,128 @@ object VersionedTable {
         new org.apache.spark.sql.types.MetadataBuilder()
           .withMetadata(f.metadata).remove(PhysicalKey).build())))
 
-  private[graft] def scanUnion(spark: SparkSession, root: String,
-                               m: Manifest, sel: ScanSelection): DataFrame = {
-    val paths = sel.wholeDirs ++ sel.files
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    else {
-      val dv = dvPairsFor(fsFor(spark, root), root, m,
-        sel.wholeDirs.map(_._2.stripPrefix(tableRoot(root) + "/") + "/"),
-        sel.files.map(_._2.stripPrefix(tableRoot(root) + "/")).toSet)
-      val depth = m.partCols.length + 2
-      val u = paths.groupBy(_._1).map { case (gen, ps) =>
-        val scan = spark.read.schema(physSchema(m.schema))
-          .option("basePath", s"${tableRoot(root)}/$gen")
-          .parquet(ps.map(_._2).distinct: _*)
-        applyInitialDefaults(toLogical(
-          if (dv.isEmpty) scan
+  /** One leaf dir of a table read: dir `dir` of generation `gen` ("" for
+    * a plain parquet table) with its exact partition values (Catalyst
+    * internal form, partition-column order), read whole or, when
+    * `files` is non-empty, only those files. */
+  private[graft] case class ScanLeaf(gen: String, dir: String,
+                                     values: Seq[Any],
+                                     files: Seq[String] = Nil)
+
+  /** External partition values (as collected) in Catalyst internal form
+    * under their column types. */
+  private[graft] def catalystValues(vals: Seq[Any],
+                                    types: Seq[DataType]): Seq[Any] =
+    vals.zip(types).map { case (v, dt) =>
+      org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(dt)(v) }
+
+  /** THE read of a table's data files: every versioned read
+    * ([[scanUnion]], [[scanDirs]], [[dvDelete]], a merge's survivors)
+    * and Merge.readTouchedDirs build their frame here. All leaves land
+    * in ONE parquet file-source relation whose index takes the leaves'
+    * values as its partition spec (ScanBridge): no glob, no exists
+    * check, no partition inference, and no value parsed back from a
+    * path. Leaves split into separate relations, unioned, only where
+    * their generations need different initial defaults. `schema` is the
+    * logical table schema (renamed columns read their physical names
+    * and alias back; its partition columns come from `partSchema`, not
+    * the files); None infers the file schema. Rows in `dv` (manifest
+    * file key, row index) are dropped by a broadcast anti-join, keyed
+    * per row by [[fileKeyCol]] on the one relation; `keepDvCols` keeps
+    * `__dv_file`/`__dv_pos` in the output for the caller. */
+  private[graft] def scanLeaves(spark: SparkSession, leaves: Seq[ScanLeaf],
+                                partSchema: StructType,
+                                schema: Option[StructType],
+                                dv: Seq[(String, Long)] = Nil,
+                                keepDvCols: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    import spark.implicits._
+    val logical = schema.getOrElse(new StructType())
+    val dataSchema = schema.map(s => StructType(physSchema(s)
+      .filterNot(f => partSchema.fieldNames.contains(f.name))))
+    val dvCols = keepDvCols || dv.nonEmpty
+    val depth = partSchema.length + 2 // gen / <part dirs...> / <file>
+    val u = leaves.groupBy(l => defaultsDue(logical, l.gen)).toSeq
+      .sortBy(_._2.head.gen).map { case (due, ls) =>
+        val scan = org.apache.spark.sql.graftbridge.ScanBridge.parquet(spark,
+          ls.flatMap(l => if (l.files.isEmpty) Seq(l.dir) else l.files),
+          ls.map(l => l.dir -> org.apache.spark.sql.catalyst.InternalRow
+            .fromSeq(l.values)), partSchema, dataSchema)
+        // `_metadata` resolves only on the relation itself: derive the
+        // DV key before any projection
+        val tagged =
+          if (!dvCols) scan
           else scan.withColumn("__dv_file", fileKeyCol(depth))
-            .withColumn("__dv_pos", col("_metadata.row_index")),
-          m.schema), m.schema, gen)
+            .withColumn("__dv_pos", col("_metadata.row_index"))
+        due.foldLeft(toLogical(tagged, logical)) { case (d, (f, sql)) =>
+          d.withColumn(f.name,
+            org.apache.spark.sql.functions.expr(sql).cast(f.dataType))
+        }
       }.reduce(_.unionByName(_))
-      (if (dv.isEmpty) u else antiJoinDv(spark, u, dv))
-        .select(m.schema.fieldNames.map(col).toSeq: _*)
+    if (dv.isEmpty) u
+    else {
+      val live = u.join(broadcast(dv.toDF("__dv_file", "__dv_pos")),
+        Seq("__dv_file", "__dv_pos"), "left_anti")
+      if (keepDvCols) live else live.drop("__dv_file", "__dv_pos")
     }
   }
 
-  /** Union scan of the given (rel dir -> gen) entries under the manifest
+  /** [[scanLeaves]] over a manifest selection: each dir's values parse
+    * from its manifest name in the session time zone (the zone the
+    * writer rendered it in), and the selection's deletion vectors
+    * apply. */
+  private def selectionScan(spark: SparkSession, root: String, m: Manifest,
+                            sel: ScanSelection,
+                            keepDvCols: Boolean = false): DataFrame = {
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val base = tableRoot(root)
+    def leaf(gen: String, dir: String, files: Seq[String]): ScanLeaf = {
+      val rel = dir.stripPrefix(s"$base/$gen/")
+      ScanLeaf(gen, dir, m.partCols.map(c =>
+        partitionDatum(m, rel, c, tz).getOrElse(
+          throw new IllegalStateException(s"partition dir '$rel' of " +
+            s"$root does not parse as its declared $c type"))), files)
+    }
+    val leaves =
+      sel.wholeDirs.distinct.map { case (gen, d) => leaf(gen, d, Nil) } ++
+        sel.files.distinct
+          .groupBy { case (gen, f) => (gen, f.substring(0, f.lastIndexOf('/'))) }
+          .toSeq.sortBy(_._1).map { case ((gen, d), fs) =>
+            leaf(gen, d, fs.map(_._2)) }
+    val dv = dvPairsFor(fsFor(spark, root), root, m,
+      leaves.filter(_.files.isEmpty).map(_.dir.stripPrefix(base + "/") + "/"),
+      leaves.flatMap(_.files).map(_.stripPrefix(base + "/")).toSet)
+    scanLeaves(spark, leaves,
+      StructType(m.partCols.map(c => m.schema(c).copy(nullable = true))),
+      Some(m.schema), dv, keepDvCols)
+  }
+
+  /** Materialize a selection WITHOUT a residual filter: one scan under
+    * the manifest schema ([[selectionScan]]), deletion vectors applied,
+    * columns in schema order. Callers add their own predicate
+    * ([[scanFrom]]) or leave the original Filter node in place (the
+    * PruneVersionedScan optimizer rule). */
+  private[graft] def scanUnion(spark: SparkSession, root: String,
+                               m: Manifest, sel: ScanSelection): DataFrame =
+    if (sel.wholeDirs.isEmpty && sel.files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+    else selectionScan(spark, root, m, sel)
+      .select(m.schema.fieldNames.map(col).toSeq: _*)
+
+  /** Scan of the given (rel dir -> gen) entries under the manifest
     * schema with deletion vectors applied — the DIRECT dir-scan path the
     * maintenance ops ([[deleteWhere]] rewrites, [[compactSmallFiles]])
     * read through; without DV application here a rewrite would
     * RESURRECT merge-on-read-deleted rows. */
   private def scanDirs(spark: SparkSession, root: String, m: Manifest,
-                       dirs: Map[String, String]): DataFrame = {
-    val dv = dvPairsFor(fsFor(spark, root), root, m,
-      dirs.toSeq.map { case (rel, gen) => s"$gen/$rel/" })
-    val depth = m.partCols.length + 2
-    val u = dirs.toSeq.groupBy(_._2).map { case (gen, ds) =>
-      val scan = spark.read.schema(physSchema(m.schema))
-        .option("basePath", s"${tableRoot(root)}/$gen")
-        .parquet(ds.map { case (rel, _) => s"${tableRoot(root)}/$gen/$rel" }: _*)
-      applyInitialDefaults(toLogical(
-        if (dv.isEmpty) scan
-        else scan.withColumn("__dv_file", fileKeyCol(depth))
-          .withColumn("__dv_pos", col("_metadata.row_index")),
-        m.schema), m.schema, gen)
-    }.reduce(_.unionByName(_))
-    if (dv.isEmpty) u else antiJoinDv(spark, u, dv)
-  }
+                       dirs: Map[String, String]): DataFrame =
+    selectionScan(spark, root, m, ScanSelection(dirs.toSeq.map {
+      case (rel, gen) => gen -> s"${tableRoot(root)}/$gen/$rel" }, Nil, 0, 0))
 
-  /** Materialize a selection: per-generation multi-path scans under the
-    * manifest schema, residual `predicate` always applied. */
+  /** Materialize a selection ([[scanUnion]]), residual `predicate`
+    * always applied. */
   private def scanFrom(spark: SparkSession, root: String, m: Manifest,
                        sel: ScanSelection,
                        predicate: org.apache.spark.sql.Column): DataFrame =
@@ -1040,7 +1091,8 @@ object VersionedTable {
     val m =
       if (partCs.isEmpty) m0
       else {
-        val keeps = partCs.map(dirKeep(m0, _))
+        val tz = spark.sessionState.conf.sessionLocalTimeZone
+        val keeps = partCs.map(dirKeep(m0, _, tz))
         m0.withMapping(m0.mapping.filter { case (rel, _) =>
           keeps.forall(_(rel)) })
       }
@@ -1167,14 +1219,15 @@ object VersionedTable {
 
   private val hiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
-  /** The typed value of partition column `column` encoded in mapping key
-    * `rel`: Right(Some(v)) = concrete value, Right(None) = the null
-    * partition, Left(()) = unparseable under the declared type — callers
-    * must keep the dir (conservative). Parsing mirrors what the read path
-    * does via Spark's schema'd partition discovery: unescape the path
-    * segment, TRY-cast the string under the declared type. */
-  private def partitionValue(m: Manifest, rel: String, column: String)
-      : Either[Unit, Option[Any]] = {
+  /** The value of partition column `column` encoded in mapping key
+    * `rel`, in Catalyst internal form: Right(v) = concrete value,
+    * Right(null) = the null partition, Left(()) = unparseable under the
+    * declared type. Parsing mirrors Spark's schema'd partition
+    * discovery: unescape the path segment, TRY-cast the string to the
+    * declared type in `tz` — the session zone, which the writer
+    * rendered timestamps in. */
+  private def partitionDatum(m: Manifest, rel: String, column: String,
+                             tz: String): Either[Unit, Any] = {
     val idx = m.partCols.indexOf(column)
     val segs = rel.split("/")
     if (idx < 0 || segs.length != m.partCols.length) return Left(())
@@ -1182,26 +1235,33 @@ object VersionedTable {
     if (!seg.startsWith(column + "=")) return Left(())
     val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(seg.substring(column.length + 1))
-    if (raw == hiveDefaultPartition) return Right(None)
-    val dt = m.schema(column).dataType
+    if (raw == hiveDefaultPartition) return Right(null)
     try {
       import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal => CLit}
       val internal = Cast(
         CLit(org.apache.spark.unsafe.types.UTF8String.fromString(raw),
           org.apache.spark.sql.types.StringType),
-        dt, Some(java.util.TimeZone.getDefault.getID), EvalMode.TRY).eval(null)
-      if (internal == null) Left(())
-      else Right(Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(dt)(internal)))
+        m.schema(column).dataType, Some(tz), EvalMode.TRY).eval(null)
+      if (internal == null) Left(()) else Right(internal)
     } catch { case scala.util.control.NonFatal(_) => Left(()) }
   }
+
+  /** [[partitionDatum]] as an external Scala value: Right(Some(v)) =
+    * concrete value, Right(None) = the null partition, Left(()) =
+    * unparseable — callers must keep the dir (conservative). */
+  private def partitionValue(m: Manifest, rel: String, column: String,
+                             tz: String): Either[Unit, Option[Any]] =
+    partitionDatum(m, rel, column, tz).map(v => Option(v).map(
+      org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(m.schema(column).dataType)))
 
   /** Exact keep decision for a partition DIRECTORY under a partition-
     * column constraint (the dir name is the value, so unlike file stats
     * this is equality/range on the value itself, not an overlap test).
     * Unparseable or unrenderable values keep; the null partition survives
     * only an isNull-compatible constraint. */
-  private def dirKeep(m: Manifest, c: ColConstraint): String => Boolean = {
+  private def dirKeep(m: Manifest, c: ColConstraint,
+                      tz: String): String => Boolean = {
     val dt = m.schema(c.column).dataType
     val cmp = statOrdering(dt)
     val loR = c.lower.flatMap(renderStat)
@@ -1215,7 +1275,7 @@ object VersionedTable {
     }
     // per-value: an unrenderable =!= value just can't exclude its dir
     val neR: Seq[String] = c.notEq.flatMap(renderStat)
-    rel => partitionValue(m, rel, c.column) match {
+    rel => partitionValue(m, rel, c.column, tz) match {
       case Left(_) => true
       case Right(None) => !c.nonNullFacet
       case Right(Some(v)) =>
@@ -1533,7 +1593,7 @@ object VersionedTable {
     * O(|delta|), amortized noise next to the write itself). File keys
     * render relative to root ("genN/<part dirs>/<file>"),
     * percent-decoded to the raw on-disk names with the same '+' guard as
-    * Merge.readTouchedDirs. Columns absent from this generation's schema
+    * [[fileKeyCol]]. Columns absent from this generation's schema
     * or with no exact rendering get no entry (their files are never
     * skipped — conservative). */
   private[graft] def collectFileStatsScan(spark: SparkSession, root: String,
@@ -1927,27 +1987,38 @@ object VersionedTable {
     * when given, else on `statsCols`, so each data file covers a TIGHT
     * value range — that's what makes min/max file skipping bite
     * (liquid-clustering-lite); `fileRows` splits hot partitions into
-    * several skippable files instead of one wide one. `schema` is the
-    * logical schema: renamed columns write their FROZEN physical names
-    * so every generation agrees on file layout. Returns the written leaf
-    * dirs and their fresh file index (empty when nothing was written —
-    * there is no file to infer a schema from). */
+    * several skippable files instead of one wide one. Ties break on the
+    * table's merge `keys` (every orderable column when it records none),
+    * so one input writes its rows in the same order on every run, not
+    * in shuffle-fetch order. `schema` is the logical schema: renamed
+    * columns write their FROZEN physical names so every generation
+    * agrees on file layout. Returns the written leaf dirs and their
+    * fresh file index (empty when nothing was written — there is no
+    * file to infer a schema from). */
   private def writeGeneration(fs: FileSystem, sparkW: SparkSession,
                               root: String, version: Int, genDir: String,
                               rows: DataFrame, partCols: Seq[String],
+                              keys: Seq[String],
                               schema: StructType, statsCols: Seq[String],
                               bloomCols: Seq[String], bloomBits: Long,
                               fileRows: Option[Int],
                               zOrderCols: Seq[String] = Nil)
       : (Seq[String], FreshIndex) = {
     val base = rows.repartition(partCols.map(col): _*)
+    val ties = {
+      val k = keys.filter(rows.columns.contains)
+      if (k.nonEmpty) k
+      else rows.schema.collect { case f if org.apache.spark.sql.catalyst
+          .expressions.RowOrdering.isOrderable(f.dataType) => f.name }
+    }.filterNot(partCols.contains)
     val clustered =
       if (zOrderCols.nonEmpty)
         ZOrder.withZValueN(base, zOrderCols, "__zval")
-          .sortWithinPartitions((partCols.map(col) :+ col("__zval")): _*)
+          .sortWithinPartitions(
+            (partCols.map(col) ++ (col("__zval") +: ties.map(col))): _*)
           .drop("__zval")
-      else if (statsCols.isEmpty) base
-      else base.sortWithinPartitions((partCols ++ statsCols).map(col): _*)
+      else base.sortWithinPartitions(
+        (partCols ++ statsCols ++ ties).distinct.map(col): _*)
     val writer = fileRows.foldLeft(
       org.apache.spark.sql.graftbridge.SessionBridge.rebind(sparkW,
         toPhysical(clustered, schema)).write)(
@@ -2685,29 +2756,24 @@ object VersionedTable {
       val merged =
         if (touchedLive.isEmpty) gated
         else {
-          // read the touched dirs DIRECTLY (no partition discovery) under
-          // the prior version's schema, reattaching the update side's
-          // exact values -- see Merge.readTouchedDirs for why inference-
-          // reconstructed values corrupt the anti-join and why this is
-          // ONE scan, not |touched| relations. Dirs group by generation
-          // (one scan per generation: paths under different basePaths)
+          // read the touched dirs of every generation as ONE scan under
+          // the prior version's data schema, the update side's exact
+          // values as their partition values: inference-reconstructed
+          // values would corrupt the anti-join (see
+          // Merge.partitionDirEntries). Renames and initial defaults
+          // apply as on every read — a rewrite of a pre-add dir must
+          // materialize the default, not re-write NULLs over it
           val dataSchema = StructType(prior.get.schema
             .filterNot(f => partCols.contains(f.name)))
-          val touchedDv = dvPairsFor(fs, root, prior.get,
-            touchedLive.toSeq.map { case (rel, gen) => s"$gen/$rel/" })
-          // the files store PHYSICAL names: read them, alias back to the
-          // logical schema (partition value columns pass through).
-          // Initial defaults apply PER GENERATION here exactly as in
-          // scanUnion — a rewrite of a pre-add dir must materialize the
-          // default, not re-write NULLs over it
-          val old =
-            touchedLive.toSeq.groupBy(_._2).map { case (gen, parts) =>
-              applyInitialDefaults(toLogical(
-                Merge.readTouchedDirs(spark, s"${tableRoot(root)}/$gen",
-                  parts.map { case (p, _) => valueOf(p) -> p },
-                  partCols, pTypes, Some(physSchema(dataSchema)),
-                  touchedDv), dataSchema), dataSchema, gen)
-            }.reduce(_.unionByName(_))
+          val old = scanLeaves(spark,
+            touchedLive.toSeq.map { case (rel, gen) =>
+              ScanLeaf(gen, s"${tableRoot(root)}/$gen/$rel",
+                catalystValues(valueOf(rel), pTypes)) },
+            StructType(partCols.zip(pTypes).map { case (c, t) =>
+              org.apache.spark.sql.types.StructField(c, t) }),
+            Some(dataSchema),
+            dvPairsFor(fs, root, prior.get,
+              touchedLive.toSeq.map { case (rel, gen) => s"$gen/$rel/" }))
           // schema evolution at write: a column the updates add null-fills
           // for surviving old rows; a column the updates drop survives,
           // null for update rows. The key match is NULL-SAFE: the keys
@@ -2826,7 +2892,7 @@ object VersionedTable {
         case Some(pm) => carryAll(pm).copy(txns = txns)
         case None =>
           val (written, fresh) = writeGeneration(fs, sparkWrite, root, next,
-            genDir, merged, partCols, outSchema, statsCols, bloomCols,
+            genDir, merged, partCols, keys, outSchema, statsCols, bloomCols,
             bloomBits, fileRows)
           val newMapping =
             (if (replaceAll) Map.empty[String, String] else priorMapping) ++
@@ -3428,7 +3494,7 @@ object VersionedTable {
         Some(dirsBytes(m, touched.keysIterator)))
       val (written, fresh) = writeGeneration(fs, sparkW, root, at.next,
         genDir, transform(scanDirs(spark, root, m, touched)), m.partCols,
-        m.schema, statsCols, bloomCols, bloomBits, fileRows, zOrderCols)
+        m.keys, m.schema, statsCols, bloomCols, bloomBits, fileRows, zOrderCols)
       // untouched dirs keep their mapping; touched dirs remap to the new
       // gen if they still have rows, disappear otherwise
       val newMapping = (m.mapping -- touched.keys) ++
@@ -3482,7 +3548,7 @@ object VersionedTable {
       if (m.partCols.contains(column)) {
         // the dir name IS the predicate value: exact directory pruning
         val keep = dirKeep(m, ColConstraint(column, Some(lower), Some(upper),
-          None))
+          None), spark.sessionState.conf.sessionLocalTimeZone)
         m.mapping.filter { case (rel, _) => keep(rel) }
       } else {
         val dtJson = m.schema(column).dataType.json
@@ -3632,36 +3698,18 @@ object VersionedTable {
   private def dvDelete(spark: SparkSession, at: Attempt, sel: ScanSelection,
                        predicate: org.apache.spark.sql.Column,
                        maxDeleteRows: Long): Int = {
-    import org.apache.spark.sql.functions.{broadcast, collect_list, lit, sort_array, count => cnt}
+    import org.apache.spark.sql.functions.{collect_list, lit, sort_array, count => cnt}
     val (root, fs, m, cur) = (at.root, at.fs, at.m, at.cur)
-    val paths = sel.wholeDirs ++ sel.files
-    if (paths.isEmpty) return cur // index proves nothing can match
-    val depth = m.partCols.length + 2
-    val existing = dvPairsFor(fs, root, m,
-      sel.wholeDirs.map(_._2.stripPrefix(tableRoot(root) + "/") + "/"),
-      sel.files.map(_._2.stripPrefix(tableRoot(root) + "/")).toSet)
-    val raw = paths.groupBy(_._1).map { case (gen, ps) =>
-      // initial defaults apply per generation here exactly as in
-      // scanUnion: the DV predicate must see the SAME values a read
-      // serves, or a delete on a defaulted column silently misses
-      // (or wrongly hits NULL-looking) pre-add rows
-      applyInitialDefaults(toLogical(
-        spark.read.schema(physSchema(m.schema))
-          .option("basePath", s"${tableRoot(root)}/$gen")
-          .parquet(ps.map(_._2).distinct: _*)
-          .withColumn("__dv_file", fileKeyCol(depth))
-          .withColumn("__dv_pos", col("_metadata.row_index")),
-        m.schema), m.schema, gen)
-        .filter(predicate)
-        .select(col("__dv_file"), col("__dv_pos"))
-    }.reduce(_.unionByName(_))
-    // positions already in a DV never re-match: keeps the no-op check
-    // and the size guard about LIVE rows only
-    val fresh0 = if (existing.isEmpty) raw else {
-      import spark.implicits._
-      raw.join(broadcast(existing.toDF("__dv_file", "__dv_pos")),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    }
+    if (sel.wholeDirs.isEmpty && sel.files.isEmpty)
+      return cur // index proves nothing can match
+    // the predicate sees the SAME values a read serves (initial defaults
+    // included — else a delete on a defaulted column silently misses, or
+    // wrongly hits NULL-looking, pre-add rows); positions already in a
+    // DV never re-match, which keeps the no-op check and the size guard
+    // about LIVE rows only
+    val fresh0 = selectionScan(spark, root, m, sel, keepDvCols = true)
+      .filter(predicate)
+      .select(col("__dv_file"), col("__dv_pos"))
     // ONE candidate scan: the matched pairs persist (spill-safe) for the
     // count guard AND the per-file aggregation; the guard still runs
     // BEFORE any positions reach the driver
@@ -4471,8 +4519,8 @@ object VersionedTable {
       val schema = stripPhysical(m.schema)
       val (written, (stats, blooms, dirRows, dirFiles, dirBytes)) =
         writeGeneration(fs, sparkW, root, at.next, genDir,
-          read(spark, root, Some(cur)), m.partCols, schema, statsCols,
-          bloomCols, bloomBits, fileRows, zOrderCols)
+          read(spark, root, Some(cur)), m.partCols, m.keys, schema,
+          statsCols, bloomCols, bloomBits, fileRows, zOrderCols)
       Staged(m.partCols, schema,
         written.map(_ -> genDir).toMap, stats, blooms, m.txns,
         checks = m.checks, dirRows = dirRows, dirFiles = dirFiles,
@@ -4599,8 +4647,8 @@ object VersionedTable {
       val schema = stripPhysical(m.schema)
       val (written, (stats, blooms, dirRows, dirFiles, dirBytes)) =
         writeGeneration(fs, sparkW, root, at.next, genDir,
-          read(spark, root, Some(cur)), partCols, schema, statsCols,
-          bloomCols, bloomBits, fileRows)
+          read(spark, root, Some(cur)), partCols, m.keys, schema,
+          statsCols, bloomCols, bloomBits, fileRows)
       Staged(partCols, schema,
         written.map(_ -> genDir).toMap, stats, blooms, m.txns,
         checks = m.checks, dirRows = dirRows, dirFiles = dirFiles,
@@ -4807,13 +4855,13 @@ object VersionedTable {
   /** Every live dir's mapping key, exact partition values (in partCols
     * order, null for the null partition), and LIVE row count (DV
     * deletes subtracted) — the base fact the partition-filtered folds
-    * evaluate predicates against. None when any partition value fails
-    * its exact typed parse. */
-  private[graft] def manifestDirLiveRows(m: Manifest)
+    * evaluate predicates against, parsed in session zone `tz`. None
+    * when any partition value fails its exact typed parse. */
+  private[graft] def manifestDirLiveRows(m: Manifest, tz: String)
       : Option[Seq[(String, Seq[Any], Long)]] = {
     val dvByDir = dvCountsByDir(m)
     Some(m.mapping.keys.toSeq.map { rel =>
-      val vals = m.partCols.map(c => partitionValue(m, rel, c) match {
+      val vals = m.partCols.map(c => partitionValue(m, rel, c, tz) match {
         case Right(v) => v.orNull
         case Left(_) => return None
       })
@@ -4823,16 +4871,17 @@ object VersionedTable {
 
   /** Metadata-only GROUP BY partition-column COUNT(*): per distinct
     * partition-value tuple (over `cols` ⊆ partCols), the summed live dir
-    * row counts — external Scala values, null for the default (null)
-    * partition. None when any partition value fails its exact typed
-    * parse (conservative: the scan runs). Exact because the dir name IS
-    * the value for every row in the dir. */
-  private[graft] def manifestGroupCounts(m: Manifest, cols: Seq[String])
+    * row counts — external Scala values (parsed in session zone `tz`),
+    * null for the default (null) partition. None when any partition
+    * value fails its exact typed parse (conservative: the scan runs).
+    * Exact because the dir name IS the value for every row in the dir. */
+  private[graft] def manifestGroupCounts(m: Manifest, cols: Seq[String],
+                                         tz: String)
       : Option[Seq[(Seq[Any], Long)]] = {
     if (cols.isEmpty || !cols.forall(m.partCols.contains)) return None
     val dvByDir = dvCountsByDir(m)
     val parsed = m.mapping.keys.toSeq.map { rel =>
-      val vals = cols.map(c => partitionValue(m, rel, c))
+      val vals = cols.map(c => partitionValue(m, rel, c, tz))
       if (vals.exists(_.isLeft)) return None
       (cols.indices.map(i => vals(i).toOption.get.orNull),
         m.dirRows(rel) - dvByDir.getOrElse(rel, 0L))
@@ -4928,27 +4977,18 @@ object VersionedTable {
           parsePreMap(f.metadata.getString(DefaultPreKey)))
     }
 
-  /** Surface initial defaults on one GENERATION's logical frame: a
-    * generation whose (ref, version) the pre-map covers was written
-    * before the column existed, so its null-filled column IS the
-    * default. Applied per generation inside [[scanUnion]]/[[scanDirs]] —
-    * post-add generations (absent ref, higher version, unparseable
-    * name) pass through untouched. */
-  private def applyInitialDefaults(df: DataFrame, schema: StructType,
-                                   gen: String): DataFrame = {
-    val defs = initialDefaults(schema)
-    if (defs.isEmpty) df
-    else genRefVer(gen) match {
-      case None => df
-      case Some((ref, v)) =>
-        defs.foldLeft(df) { case (d, (f, sql, pre)) =>
-          if (pre.get(ref).exists(v <= _))
-            d.withColumn(f.name,
-              org.apache.spark.sql.functions.expr(sql).cast(f.dataType))
-          else d
-        }
+  /** The initial defaults generation `gen` must surface: a generation
+    * whose (ref, version) a field's pre-map covers was written before
+    * the column existed, so its null-filled column IS the default.
+    * Post-add generations (absent ref, higher version, unparseable
+    * name) get none. [[scanLeaves]] groups leaves by this set. */
+  private def defaultsDue(schema: StructType, gen: String)
+      : Seq[(org.apache.spark.sql.types.StructField, String)] =
+    genRefVer(gen) match {
+      case None => Nil
+      case Some((ref, v)) => initialDefaults(schema).collect {
+        case (f, sql, pre) if pre.get(ref).exists(v <= _) => (f, sql) }
     }
-  }
 
   /** Validate a DEFAULT expression: parses, references no columns, and
     * evaluates (ANSI errors surface here, not at first read) as the

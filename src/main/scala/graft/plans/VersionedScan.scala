@@ -27,7 +27,8 @@ import graft.ops.VersionedTable
  * [[Rule]] ([[PruneVersionedScan]]) that sees the filters Catalyst has
  * pushed down next to the leaf, extracts the sound per-column facts
  * (bounds, equalities, IN-lists, string prefixes, nullness), and
- * substitutes the pruned multi-path scan — so a user writes
+ * substitutes the pruned scan (one file-source relation over the
+ * surviving dirs and files) — so a user writes
  *
  * {{{ VersionedScan.table(spark, root).filter($"v".between(40, 59)) }}}
  *
@@ -261,7 +262,9 @@ object PruneVersionedScan extends Rule[LogicalPlan] with PredicateHelper {
     val partAttrs: Seq[Attribute] = m.partCols.map(c =>
       rel.output.find(_.name == c).getOrElse(return None))
     if (!cond.references.subsetOf(AttributeSet(partAttrs))) return None
-    val dirs = VersionedTable.manifestDirLiveRows(m).getOrElse(return None)
+    val dirs = VersionedTable.manifestDirLiveRows(m,
+      rel.session.sessionState.conf.sessionLocalTimeZone)
+      .getOrElse(return None)
     val bound = BindReferences.bindReference(cond, partAttrs,
       allowFailures = true)
     if (bound.exists(!_.resolved)) return None
@@ -346,7 +349,8 @@ object PruneVersionedScan extends Rule[LogicalPlan] with PredicateHelper {
       case _ => return None
     }
     val groups =
-      VersionedTable.manifestGroupCounts(rel.manifest, groupCols)
+      VersionedTable.manifestGroupCounts(rel.manifest, groupCols,
+        rel.session.sessionState.conf.sessionLocalTimeZone)
         .getOrElse(return None)
     val mkRow: Seq[(Seq[Any], Long)] => Option[Seq[InternalRow]] = gs =>
       Some(gs.map { case (vals, n) =>
@@ -473,7 +477,8 @@ object PruneVersionedScan extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Build the concrete scan (no I/O beyond listing the SELECTED files —
+  /** Build the concrete scan (no I/O beyond listing the selected dirs
+    * and files for the one relation VersionedTable.scanLeaves builds —
     * the manifest was pinned at relation-build time) and re-bind it to
     * the relation's original attribute ids so everything referencing the
     * leaf keeps resolving. */

@@ -78,6 +78,57 @@ object PlanBridge {
     df.queryExecution.analyzed
 }
 
+/** A parquet read as ONE file-source relation built from facts the
+  * caller already holds: the dirs and files to list, and each leaf
+  * dir's partition values (Catalyst internal form). `spark.read.parquet`
+  * would glob and exists-check every path, then infer partitions from
+  * the dir names; here the index only lists the roots (files stay
+  * visible through `_metadata`), and the partition spec is taken as
+  * given. `dataSchema = None` infers the file schema from the listed
+  * files, as a schema-less `spark.read.parquet` does; either way every
+  * data column reads nullable, as DataSource makes it. */
+object ScanBridge {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+    InMemoryFileIndex, LogicalRelation, PartitionPath, PartitionSpec}
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.sql.types.StructType
+
+  def parquet(spark: org.apache.spark.sql.SparkSession, roots: Seq[String],
+              partitions: Seq[(String, InternalRow)],
+              partitionSchema: StructType,
+              dataSchema: Option[StructType])
+      : org.apache.spark.sql.DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = s.sessionState.newHadoopConf()
+    val fs = new Path(roots.head).getFileSystem(conf) // one table, one fs
+    def qualified(p: String): Path = fs.makeQualified(new Path(p))
+    val rootPaths = roots.distinct.map(qualified)
+    val spec = PartitionSpec(partitionSchema,
+      if (partitionSchema.isEmpty) Nil
+      else partitions.map { case (d, v) => PartitionPath(v, qualified(d)) })
+    val index = new InMemoryFileIndex(s, rootPaths, Map.empty, None,
+      userSpecifiedPartitionSpec = Some(spec))
+    // a root that listed nothing: the index logs a missing root and
+    // moves on, where a read must fail
+    val files = index.allFiles()
+    val listed = files.flatMap(f => Seq(f.getPath, f.getPath.getParent)).toSet
+    rootPaths.filterNot(listed.contains)
+      .find(p => !fs.exists(p))
+      .foreach(p => throw new java.io.FileNotFoundException(
+        s"table data path $p does not exist"))
+    val format = new ParquetFileFormat
+    val data = dataSchema.getOrElse(
+      format.inferSchema(s, Map.empty, files).getOrElse(
+        throw new IllegalStateException(
+          s"no parquet file to infer a schema from under ${roots.head}")))
+    org.apache.spark.sql.classic.Dataset.ofRows(s, LogicalRelation(
+      HadoopFsRelation(index, partitionSchema, data.asNullable, None,
+        format, Map.empty)(s)))
+  }
+}
+
 /** Bridge into Spark's file-source execution internals so a DSv2
   * [[org.apache.spark.sql.connector.read.streaming.MicroBatchStream]]
   * (graft-cdc) can serve staged parquet through Spark's OWN partition

@@ -3643,6 +3643,140 @@ class OpsSpec extends SparkSpec {
   /** Jobs and stages `body` runs: a thread-local job property tags its
     * jobs, then a marker job waits out the asynchronous listener bus so
     * every earlier job start is delivered. */
+  /** (file-source scans, unions) in a frame's physical plan. */
+  private def scanShape(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val p = df.queryExecution.sparkPlan
+    (p.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      .size,
+     p.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.size)
+  }
+
+  test("versioned read: ONE file-source scan across generations, exact " +
+      "values, DVs and renames") {
+    import graft.plans.VersionedScan
+    import org.apache.spark.sql.types.StringType
+    val root = java.nio.file.Files.createTempDirectory("graft_onerel")
+      .toString + "/table"
+    val keys = Seq("id", "day")
+    def up(rows: Seq[(Int, String, Int, String)]): Unit =
+      VersionedTable.upsert(spark, root,
+        rows.toDF("id", "day", "v", "val"), keys, Seq("day"))
+    // gen0: '01'-style strings, the null partition, a space, '%' and '+'
+    up(Seq((1, "01", 10, "a"), (2, "01", 11, "b"), (3, "02", 20, "c"),
+      (4, "02", 21, "d"), (5, null, 30, "e"), (6, "page view", 40, "f"),
+      (7, "100%", 50, "g"), (8, "a+b", 60, "h"), (9, "a+b", 61, "i")))
+    up(Seq((3, "02", 22, "C"), (8, "a+b", 62, "H")))            // gen1
+    up(Seq((5, null, 31, "E"), (10, "page view", 41, "j")))     // gen2
+    // DVs on a gen0 file (id 2) and a gen1 file (id 4)
+    VersionedTable.deleteWhereDV(spark, root, "v", 11, 21)
+    VersionedTable.renameColumn(spark, root, "val", "label")
+    val m = VersionedTable.resolveManifest(spark, root, None)
+    assert(m.mapping.values.toSet == Set("gen0", "gen1", "gen2"))
+    assert(m.dvs.keys.map(_.takeWhile(_ != '/')).toSet == Set("gen0", "gen1"))
+    val expected = Set((1, "01", 10, "a"), (3, "02", 22, "C"),
+      (5, null, 31, "E"), (6, "page view", 40, "f"), (7, "100%", 50, "g"),
+      (8, "a+b", 62, "H"), (9, "a+b", 61, "i"), (10, "page view", 41, "j"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", $"day", $"v", $"label")
+        .as[(Int, String, Int, String)].collect().toSet
+    val viaApi = VersionedScan.table(spark, root).filter($"id" > 0)
+    val viaSql = spark.sql(
+      s"SELECT * FROM graft_table('$root') WHERE v >= 0")
+    for (df <- Seq(viaApi, viaSql)) {
+      assert(scanShape(df) == (1, 0), df.queryExecution.sparkPlan.toString)
+      assert(rows(df) == expected)
+    }
+    // partition pruning and the null partition through the same scan
+    assert(rows(VersionedScan.table(spark, root).filter($"day" === "01"))
+      == Set((1, "01", 10, "a")))
+    assert(rows(spark.sql(
+      s"SELECT * FROM graft_table('$root') WHERE day IS NULL AND id > 0"))
+      == Set((5, null, 31, "E")))
+    // a column added with an initial default after gen0, then a merge
+    // that rewrites dir 01 post-add: pre-add generations surface the
+    // default, the post-add one its own values — two default sets, so
+    // exactly two scans, unioned
+    VersionedTable.addColumn(spark, root, "src", StringType, Some("'legacy'"))
+    VersionedTable.upsert(spark, root,
+      Seq((11, "01", 70, "k", "new")).toDF("id", "day", "v", "label", "src"),
+      keys, Seq("day"))
+    val withSrc = VersionedScan.table(spark, root).filter($"id" > 0)
+    assert(scanShape(withSrc) == (2, 1))
+    assert(withSrc.select($"id", $"src").as[(Int, String)].collect().toSet ==
+      (expected.map(r => (r._1, "legacy")) + ((11, "new"))))
+  }
+
+  test("partition values parse in the session time zone") {
+    import graft.plans.VersionedScan
+    // a zone whose offset differs from the JVM default's at the instant
+    val jvm = java.util.TimeZone.getDefault
+    val zone = Seq("America/New_York", "Asia/Tokyo").find { z =>
+      java.util.TimeZone.getTimeZone(z).getOffset(1704103200000L) !=
+        jvm.getOffset(1704103200000L) }.get
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", zone)
+    val root = java.nio.file.Files.createTempDirectory("graft_tzpart")
+      .toString + "/table"
+    VersionedTable.upsert(s, root,
+      s.sql("SELECT id, TIMESTAMP '2024-01-01 10:00:00' AS ts " +
+        "FROM VALUES (1), (2) AS t(id)"), Seq("id", "ts"), Seq("ts"))
+    val at = "TIMESTAMP '2024-01-01 10:00:00'"
+    val want = s.sql(s"SELECT $at").head().getTimestamp(0)
+    // a plain read renders the dir's value back unchanged
+    assert(s.sql(s"SELECT CAST(ts AS STRING) FROM graft_table('$root')")
+      .collect().map(_.getString(0)).toSeq ==
+      Seq("2024-01-01 10:00:00", "2024-01-01 10:00:00"))
+    // dir pruning keeps the dir
+    assert(s.sql(s"SELECT id FROM graft_table('$root') WHERE ts = $at")
+      .collect().map(_.getInt(0)).toSet == Set(1, 2))
+    assert(VersionedScan.table(s, root)
+      .filter(org.apache.spark.sql.functions.col("ts") === want).count() == 2)
+    // the filtered and the grouped count folds count it
+    assert(s.sql(s"SELECT count(*) FROM graft_table('$root') WHERE ts = $at")
+      .head().getLong(0) == 2)
+    assert(s.sql(s"SELECT ts, count(*) FROM graft_table('$root') GROUP BY ts")
+      .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toSeq ==
+      Seq((want, 2L)))
+  }
+
+  test("writeGeneration: identical commits write identical data files") {
+    val base = java.nio.file.Files.createTempDirectory("graft_detwrite")
+      .toString
+    // no stats columns (the tick-stream sink's shape) and input spread
+    // over many tasks, so only the tie-break fixes the in-file order.
+    // Bytes compare within one JVM: parquet-mr orders a column chunk's
+    // footer encodings list differently between processes
+    def commits(root: String): Unit = {
+      val rows = spark.range(0, 6000, 1, 8).select(
+        ($"id" % 3).cast("string").as("day"), $"id",
+        ($"id" * 7919 % 1000).as("v"))
+      VersionedTable.upsert(spark, root, rows, Seq("id", "day"), Seq("day"))
+      VersionedTable.upsert(spark, root, rows.filter($"id" % 5 === 0)
+        .withColumn("v", $"v" + 1), Seq("id", "day"), Seq("day"))
+    }
+    def digests(root: String): Map[String, Seq[String]] = {
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        java.net.URI.create(root), spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
+      val out = Seq.newBuilder[(String, String)]
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (p.getName.endsWith(".parquet")) {
+          val in = fs.open(p)
+          val md5 = try org.apache.commons.codec.digest.DigestUtils.md5Hex(in)
+            finally in.close()
+          out += p.getParent.toString.stripPrefix(
+            fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString) -> md5
+        }
+      }
+      out.result().groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).sorted }
+    }
+    commits(s"$base/a"); commits(s"$base/b")
+    val (a, b) = (digests(s"$base/a"), digests(s"$base/b"))
+    assert(a.keySet.size == 6, a.keySet) // 3 dirs in each of 2 generations
+    assert(a == b)
+  }
+
   private def jobsAndStages(body: => Any): (Int, Int) = {
     val tag = "graft.test.commitJobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
