@@ -1068,9 +1068,14 @@ object VersionedTable {
   }
 
   /** The (partition-pruned manifest, file selection) a constraint set
-    * resolves to — factored from [[readConstrainedM]] so predicate-
-    * expression DML ([[deleteMatching]]/[[deleteMatchingDV]]) can reuse
-    * the exact pruning the optimizer rule's scans get. */
+    * resolves to — the ONE place index facts become a [[ScanSelection]].
+    * The optimizer rule's scans ([[readConstrainedM]]), the shape reads
+    * and skip probes ([[readWhere]], [[readWhereEq]], [[skipStats]]) and
+    * every DML call ([[deleteWhere]], [[deleteWhereIn]], [[updateWhere]],
+    * [[deleteMatching]], ...) pass their predicate as [[ColConstraint]]s
+    * here, so partition, derived-partition, stats and bloom pruning reach
+    * each of them alike. A selection names its dirs, so a caller may scan
+    * or rewrite it against the unpruned manifest. */
   private[graft] def constrainedSelection(spark: SparkSession, root: String,
                                           m0: Manifest,
                                           constraints: Seq[ColConstraint])
@@ -1130,22 +1135,8 @@ object VersionedTable {
           bloomKeep(fs, root, m, c.column, xxh64Of(v, dt))
         case _ => _ => true
       }
-      // IN-list: a file survives when ANY candidate value survives BOTH
-      // its point-range probe and its bloom probe — a disjunction of
-      // point lookups (an unrenderable value keeps every file; an empty
-      // list keeps none — `IN ()` matches no row)
       val iKeep: String => Boolean = c.inSet match {
-        case Some(vs) =>
-          val probes = vs.map { v =>
-            val rp: String => Boolean = (cmp, renderStat(v)) match {
-              case (Some(o), Some(r)) =>
-                rangeKeep(fs, root, m, c.column, dtJson, o, Seq((r, r)))
-              case _ => _ => true
-            }
-            val bp = bloomKeep(fs, root, m, c.column, xxh64Of(v, dt))
-            (f: String) => rp(f) && bp(f)
-          }
-          f => probes.exists(_(f))
+        case Some(vs) => inKeep(fs, root, m, c.column, dt, vs)
         case None => _ => true
       }
       val pKeep: String => Boolean = c.prefix match {
@@ -1213,6 +1204,69 @@ object VersionedTable {
           cmpBytes(mx.getBytes(StandardCharsets.UTF_8), pb) >= 0 &&
             cmpBytes(mnT, pb) <= 0
         case _ => false
+      }
+    }
+  }
+
+  /** IN-list keep: a file survives when ANY candidate value survives BOTH
+    * its point-range probe and its bloom probe — a disjunction of point
+    * lookups (an empty list keeps none — `IN ()` matches no row; NULL
+    * candidates are dropped upstream, they match no row either).
+    * GDPR-batch-sized: candidates sort once by the stat order and each
+    * file binary-searches its [min,max] candidate subrange — O(log V +
+    * in-range) per file, not O(V) — and the file's bloom deserializes
+    * ONCE for all its probes. */
+  private def inKeep(fs: FileSystem, root: String, m: Manifest,
+                     column: String, dt: DataType,
+                     values: Seq[Any]): String => Boolean = {
+    val dtJson = dt.json
+    val cmpOpt = statOrdering(dt)
+    val all = values.map(v => (renderStat(v), xxh64Of(v, dt)))
+    val sorted: Array[(String, Option[Long])] = cmpOpt match {
+      case Some(c) => all.collect { case (Some(r), h) => (r, h) }
+        .sortWith((a, b) => c(a._1, b._1) < 0).toArray
+      case None => Array.empty
+    }
+    // candidates the range index cannot place (no rendering, or no stat
+    // ordering for the type): only blooms can rule them out
+    val unplaced: Seq[Option[Long]] = cmpOpt match {
+      case Some(_) => all.collect { case (None, h) => h }
+      case None => all.map(_._2)
+    }
+    def bound(x: String, c: (String, String) => Int,
+              strict: Boolean): Int = {
+      var lo = 0; var hi = sorted.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        val d = c(sorted(mid)._1, x)
+        if (d < 0 || (strict && d == 0)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    f => {
+      lazy val bloom = m.bloomFor(fs, root, f, column).map(bytes =>
+        org.apache.spark.util.sketch.BloomFilter
+          .readFrom(new java.io.ByteArrayInputStream(bytes)))
+      def may(h: Option[Long]): Boolean =
+        bloom.forall(b => h.forall(b.mightContainLong))
+      usableStat(fs, root, m, f, column, dtJson) match {
+        case Some(s) => (s.min, s.max, cmpOpt) match {
+          case (Some(mn), Some(mx), Some(c)) =>
+            val lo = bound(mn, c, strict = false) // first candidate >= min
+            val hi = bound(mx, c, strict = true)  // first candidate >  max
+            (lo until hi).exists(i => may(sorted(i)._2)) ||
+              unplaced.exists(may)
+          // all-null: equality matches none. Sound ONLY when the type is
+          // orderable/renderable (Some(_)): for types renderStat cannot
+          // render (Boolean, Binary, complex), min/max record None for
+          // EVERY file regardless of contents — those fall through to
+          // the blooms-only case below, never to a skip.
+          case (None, None, Some(_)) => false
+          case _ => // stats present but unusable for ranging: blooms only
+            sorted.exists(e => may(e._2)) || unplaced.exists(may)
+        }
+        case None =>
+          sorted.exists(e => may(e._2)) || unplaced.exists(may)
       }
     }
   }
@@ -1316,25 +1370,8 @@ object VersionedTable {
     count(df.queryExecution.executedPlan)
   }
 
-  /** Range-keep decision for [[readWhereIn]]/[[skipStats]]: a file
-    * survives when it has no usable stat (conservative) or its recorded
-    * min/max overlaps ANY query range; all-null files are skipped (a
-    * range predicate never matches NULL). */
-  private def rangeKeep(fs: FileSystem, root: String, m: Manifest,
-                        column: String, dtJson: String,
-                        cmp: (String, String) => Int,
-                        rendered: Seq[(String, String)])
-      : String => Boolean = f =>
-    usableStat(fs, root, m, f, column, dtJson) match {
-      case None => true
-      case Some(s) => (s.min, s.max) match {
-        case (Some(mn), Some(mx)) => rendered.exists { case (lo, hi) =>
-          cmp(mn, hi) <= 0 && cmp(mx, lo) >= 0 }
-        case _ => false
-      }
-    }
-
-  /** Bloom-keep decision for [[readWhereEq]]/[[skipStatsEq]]. */
+  /** Bloom-keep decision for an equality facet of [[constrainedSelection]]
+    * (an IN-list probes its blooms through [[inKeep]]). */
   private def bloomKeep(fs: FileSystem, root: String, m: Manifest,
                         column: String, hash: Option[Long])
       : String => Boolean = f =>
@@ -1343,26 +1380,6 @@ object VersionedTable {
         .readFrom(new java.io.ByteArrayInputStream(bytes))
         .mightContainLong(h))
     }
-
-  /** Resolve the pieces a range read/probe needs; Left(reason) when stats
-    * cannot prune for this column (unsupported type / unrenderable
-    * bounds) and the caller must fall back to scan-everything. */
-  private def rangeSelection(fs: FileSystem, root: String, m: Manifest,
-                             column: String, ranges: Seq[(Any, Any)])
-      : Option[ScanSelection] = {
-    val dtJson = m.schema(column).dataType.json
-    val cmp = statOrdering(m.schema(column).dataType)
-    val rendered = ranges.map { case (lo, hi) =>
-      (renderStat(lo), renderStat(hi)) }
-    if (cmp.isEmpty || rendered.exists(r => r._1.isEmpty || r._2.isEmpty))
-      None
-    else {
-      val flat = rendered.map { case (lo, hi) => (lo.get, hi.get) }
-      Some(selectScan(fs, root, m,
-        indexed = f => usableStat(fs, root, m, f, column, dtJson).isDefined,
-        keep = rangeKeep(fs, root, m, column, dtJson, cmp.get, flat)))
-    }
-  }
 
   /** Range read with manifest-level FILE SKIPPING: rows of the table where
     * `column` lies in [lower, upper] (inclusive, typed like the column),
@@ -1401,10 +1418,15 @@ object VersionedTable {
       s"column $column is not in the table schema")
     val predicate = ranges.map { case (lo, hi) =>
       col(column) >= lit(lo) && col(column) <= lit(hi) }.reduce(_ || _)
-    rangeSelection(fsFor(spark, root), root, m, column, ranges) match {
-      case None => read(spark, root, asOfVersion).filter(predicate)
-      case Some(sel) => scanFrom(spark, root, m, sel, predicate)
-    }
+    // the OR scans the union of the per-range selections (no probe reads
+    // its counts); a dir scans whole or by files alike under every range
+    // — index coverage depends on the column, not the bounds — so no
+    // file scans twice
+    val sels = ranges.map { case (lo, hi) =>
+      constrainedSelection(spark, root, m,
+        Seq(ColConstraint(column, Some(lo), Some(hi), None)))._2 }
+    scanFrom(spark, root, m, ScanSelection(sels.flatMap(_.wholeDirs).distinct,
+      sels.flatMap(_.files).distinct, 0, 0), predicate)
   }
 
   /** Driver-side twin of the xxhash64(col) the bloom was built over: the
@@ -1418,27 +1440,6 @@ object VersionedTable {
       Some(new XxHash64(Seq(Literal.create(value, dt)))
         .eval(null).asInstanceOf[Long])
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Selection for a point lookup: min/max range [v,v] AND bloom
-    * membership compose; a file is indexed when EITHER index kind covers
-    * the column. */
-  private def eqSelection(fs: FileSystem, root: String, m: Manifest,
-                          column: String, value: Any): ScanSelection = {
-    val dt = m.schema(column).dataType
-    val dtJson = dt.json
-    val cmp = statOrdering(dt)
-    val vR = renderStat(value)
-    val hash = xxh64Of(value, dt)
-    val rKeep: String => Boolean = (cmp, vR) match {
-      case (Some(c), Some(v)) => rangeKeep(fs, root, m, column, dtJson, c, Seq((v, v)))
-      case _ => _ => true
-    }
-    val bKeep = bloomKeep(fs, root, m, column, hash)
-    selectScan(fs, root, m,
-      indexed = f => usableStat(fs, root, m, f, column, dtJson).isDefined ||
-        m.bloomColsOf(fs, root, f).contains(column),
-      keep = f => rKeep(f) && bKeep(f))
-  }
 
   /** Point-lookup read with manifest-level file skipping on BOTH index
     * kinds: rows where `column` = `value`, scanning only files whose
@@ -1462,8 +1463,8 @@ object VersionedTable {
     if (value == null)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    scanFrom(spark, root, m,
-      eqSelection(fsFor(spark, root), root, m, column, value),
+    scanFrom(spark, root, m, constrainedSelection(spark, root, m,
+      Seq(ColConstraint(column, None, None, Some(value))))._2,
       col(column) === lit(value))
   }
 
@@ -1473,28 +1474,24 @@ object VersionedTable {
   private[graft] def skipStatsEq(spark: SparkSession, root: String,
                                  column: String, value: Any,
                                  asOfVersion: Option[Int] = None): (Int, Int) = {
-    val m = resolveManifest(spark, root, asOfVersion)
-    val sel = eqSelection(fsFor(spark, root), root, m, column, value)
+    val (_, sel) = constrainedSelection(spark, root,
+      resolveManifest(spark, root, asOfVersion),
+      Seq(ColConstraint(column, None, None, Some(value))))
     (sel.kept, sel.indexedTotal)
   }
 
   /** [[readWhere]]'s skip observability, derived from the SAME selection
     * the read scans — the observable for tests and ops dashboards ("did
-    * skipping bite?"). When stats cannot prune for the column, reports
-    * (total, total). */
+    * skipping bite?"): (indexed files kept, indexed files total). A
+    * column no file indexes (a partition column, or one without stats)
+    * reports (0, 0). */
   private[graft] def skipStats(spark: SparkSession, root: String,
                                column: String, lower: Any, upper: Any,
                                asOfVersion: Option[Int] = None): (Int, Int) = {
-    val m = resolveManifest(spark, root, asOfVersion)
-    val fs = fsFor(spark, root)
-    rangeSelection(fs, root, m, column, Seq((lower, upper))) match {
-      case None =>
-        // no pruning possible: report (n, n) from the per-dir file
-        // counts — zero index I/O for a pure observability answer
-        val total = m.mapping.keysIterator.map(m.dirFiles).sum.toInt
-        (total, total)
-      case Some(sel) => (sel.kept, sel.indexedTotal)
-    }
+    val (_, sel) = constrainedSelection(spark, root,
+      resolveManifest(spark, root, asOfVersion),
+      Seq(ColConstraint(column, Some(lower), Some(upper), None)))
+    (sel.kept, sel.indexedTotal)
   }
 
   /** Walk the nested `c1=v1/c2=v2/...` leaf dirs a partitioned write
@@ -3428,28 +3425,16 @@ object VersionedTable {
                   bloomBits: Long = 0L): Int =
       commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.lit
-    val (fs, m) = (at.fs, at.m)
+    val m = at.m
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
       s"$column is a partition column — drop partitions by re-upserting " +
         "or filtering read(), no file rewrite needed")
-    // same keep decision as readWhere (type-tagged stats, conservative
-    // fallbacks): a dir is touched when any of its files could hold a
-    // matching row
-    val dtJson = m.schema(column).dataType.json
-    val mayMatch = rangeSelection(fs, root, m, column, Seq((lower, upper)))
-      .map { _ => rangeKeep(fs, root, m, column, dtJson,
-        statOrdering(m.schema(column).dataType).get,
-        Seq((renderStat(lower).get, renderStat(upper).get))) }
-      .getOrElse((_: String) => true)
-    val touched = m.mapping.filter { case (rel, gen) =>
-      val prefix = s"$gen/$rel/"
-      val dirFiles = m.idxFilesUnder(fs, root, rel, prefix)
-      val anyUsable = dirFiles.exists(f =>
-        usableStat(fs, root, m, f, column, dtJson).isDefined)
-      if (!anyUsable) true else dirFiles.exists(mayMatch)
-    }
+    // readWhere's selection: a dir is touched when any of its files could
+    // hold a matching row
+    val touched = selectedDirs(root, constrainedSelection(spark, root, m,
+      Seq(ColConstraint(column, Some(lower), Some(upper), None)))._2)
     if (touched.isEmpty) at.cur // index proves nothing can match
     else rewriteTouched(spark, at, touched, fileRows,
         bloomBits, op = "delete") { df =>
@@ -3532,39 +3517,15 @@ object VersionedTable {
                   fileRows: Option[Int] = None,
                   bloomBits: Long = 0L): Int =
       commitLoop(spark, root, Rederive) { at =>
-    import org.apache.spark.sql.functions.{lit, when}
-    val (fs, m) = (at.fs, at.m)
+    import org.apache.spark.sql.functions.lit
+    val m = at.m
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
-    require(set.nonEmpty, "UPDATE needs at least one SET column")
-    set.keys.foreach { c =>
-      require(m.schema.fieldNames.contains(c),
-        s"SET column $c is not in the table schema")
-      require(!m.partCols.contains(c),
-        s"SET column $c is a partition column — updating it moves rows " +
-          "between partition dirs; re-upsert the affected rows instead")
-    }
-    val touched: Map[String, String] =
-      if (m.partCols.contains(column)) {
-        // the dir name IS the predicate value: exact directory pruning
-        val keep = dirKeep(m, ColConstraint(column, Some(lower), Some(upper),
-          None), spark.sessionState.conf.sessionLocalTimeZone)
-        m.mapping.filter { case (rel, _) => keep(rel) }
-      } else {
-        val dtJson = m.schema(column).dataType.json
-        val mayMatch = rangeSelection(fs, root, m, column, Seq((lower, upper)))
-          .map { _ => rangeKeep(fs, root, m, column, dtJson,
-            statOrdering(m.schema(column).dataType).get,
-            Seq((renderStat(lower).get, renderStat(upper).get))) }
-          .getOrElse((_: String) => true)
-        m.mapping.filter { case (rel, gen) =>
-          val prefix = s"$gen/$rel/"
-          val dirFiles = m.idxFilesUnder(fs, root, rel, prefix)
-          val anyUsable = dirFiles.exists(f =>
-            usableStat(fs, root, m, f, column, dtJson).isDefined)
-          if (!anyUsable) true else dirFiles.exists(mayMatch)
-        }
-      }
+    requireSet(m, set)
+    // a partition-column range prunes dirs by their encoded value, a
+    // data-column range by the index — both in the one selection
+    val touched = selectedDirs(root, constrainedSelection(spark, root, m,
+      Seq(ColConstraint(column, Some(lower), Some(upper), None)))._2)
     if (touched.isEmpty) at.cur // index proves nothing can match
     else updateCore(spark, at, touched,
       col(column) >= lit(lower) && col(column) <= lit(upper),
@@ -3583,44 +3544,26 @@ object VersionedTable {
                     fileRows: Option[Int] = None,
                     bloomBits: Long = 0L): Int =
       commitLoop(spark, root, Rederive) { at =>
-    val (fs, m) = (at.fs, at.m)
+    val m = at.m
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
       s"$column is a partition column — use updateWhere's exact dir pruning")
+    requireSet(m, set)
     val vs = values.filter(_ != null)
     val touched =
       if (vs.isEmpty) Map.empty[String, String]
-      else touchedDirs(root, inSelection(fs, root, m, column, vs))
+      else selectedDirs(root, constrainedSelection(spark, root, m,
+        Seq(ColConstraint(column, None, None, None, inSet = Some(vs))))._2)
     if (touched.isEmpty) at.cur // index proves nothing can match
     else updateCore(spark, at, touched, col(column).isin(vs: _*),
       set, fileRows, bloomBits)
   }
 
-  /** Dirs holding anything the selection will scan — rel dir -> gen: the
-    * candidate set a rewrite-flavor DML call touches (the one derivation,
-    * shared by every caller so path parsing cannot diverge). */
-  private def touchedDirs(root: String, sel: ScanSelection)
-      : Map[String, String] =
-    (sel.wholeDirs.map { case (gen, p) =>
-      p.stripPrefix(s"${tableRoot(root)}/$gen/") -> gen
-    } ++ sel.files.map { case (gen, p) =>
-      val f = p.stripPrefix(tableRoot(root) + "/")
-      f.substring(f.indexOf('/') + 1, f.lastIndexOf('/')) -> gen
-    }).toMap
-
-  /** Shared UPDATE core: validate the SET map, project every schema
-    * column through `when(cond, expr).otherwise(old)` — ALL right-hand
-    * sides against the OLD row, results cast back to declared types —
-    * gate the updated rows on the CHECK constraints, then rewrite the
-    * touched dirs. */
-  private def updateCore(spark: SparkSession, at: Attempt,
-                         touched: Map[String, String],
-                         cond: org.apache.spark.sql.Column,
-                         set: Map[String, org.apache.spark.sql.Column],
-                         fileRows: Option[Int], bloomBits: Long): Int = {
-    import org.apache.spark.sql.functions.when
-    val (root, m) = (at.root, at.m)
+  /** UPDATE's SET map against the current schema — checked before any
+    * file selection, so a bad map fails even when nothing can match. */
+  private def requireSet(m: Manifest,
+                         set: Map[String, org.apache.spark.sql.Column]): Unit = {
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     set.keys.foreach { c =>
       require(m.schema.fieldNames.contains(c),
@@ -3629,6 +3572,32 @@ object VersionedTable {
         s"SET column $c is a partition column — updating it moves rows " +
           "between partition dirs; re-upsert the affected rows instead")
     }
+  }
+
+  /** Dirs holding anything the selection will scan — rel dir -> gen: the
+    * candidate set a rewrite-flavor DML call touches (the one derivation,
+    * shared by every caller so path parsing cannot diverge). */
+  private def selectedDirs(root: String, sel: ScanSelection)
+      : Map[String, String] =
+    (sel.wholeDirs.map { case (gen, p) =>
+      p.stripPrefix(s"${tableRoot(root)}/$gen/") -> gen
+    } ++ sel.files.map { case (gen, p) =>
+      val f = p.stripPrefix(tableRoot(root) + "/")
+      f.substring(f.indexOf('/') + 1, f.lastIndexOf('/')) -> gen
+    }).toMap
+
+  /** Shared UPDATE core (its callers checked the SET map with
+    * [[requireSet]]): project every schema column through
+    * `when(cond, expr).otherwise(old)` — ALL right-hand sides against
+    * the OLD row, results cast back to declared types — gate the updated
+    * rows on the CHECK constraints, then rewrite the touched dirs. */
+  private def updateCore(spark: SparkSession, at: Attempt,
+                         touched: Map[String, String],
+                         cond: org.apache.spark.sql.Column,
+                         set: Map[String, org.apache.spark.sql.Column],
+                         fileRows: Option[Int], bloomBits: Long): Int = {
+    import org.apache.spark.sql.functions.when
+    val (root, m) = (at.root, at.m)
     def applySet(df: DataFrame): DataFrame =
       df.select(m.schema.fieldNames.toSeq.map { f =>
         set.get(f)
@@ -3677,17 +3646,16 @@ object VersionedTable {
                     maxDeleteRows: Long = 16L * 1024 * 1024): Int =
       commitLoop(spark, root, Rederive) { at =>
     import org.apache.spark.sql.functions.lit
-    val (fs, m) = (at.fs, at.m)
+    val m = at.m
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
       s"$column is a partition column — drop partitions by re-upserting " +
         "or filtering read(), no delete needed")
-    // candidate files via the SAME index pruning a readWhere uses; the
+    // candidate files via the SAME selection a readWhere scans; the
     // residual predicate below decides the exact positions
-    val sel = rangeSelection(fs, root, m, column, Seq((lower, upper)))
-      .getOrElse(selectAllDirs(root, m))
-    dvDelete(spark, at, sel,
+    dvDelete(spark, at, constrainedSelection(spark, root, m,
+        Seq(ColConstraint(column, Some(lower), Some(upper), None)))._2,
       col(column) >= lit(lower) && col(column) <= lit(upper), maxDeleteRows)
   }
 
@@ -3758,73 +3726,6 @@ object VersionedTable {
     }
   }
 
-  /** File selection for an IN-list: a file survives when ANY candidate
-    * value survives BOTH its point-range probe and its bloom probe —
-    * the same disjunction-of-point-lookups the optimizer rule's IN
-    * extraction uses. NULL candidates are dropped by the callers (they
-    * match no row). GDPR-batch-sized: candidates sort once by the stat
-    * order and each file binary-searches its [min,max] candidate
-    * subrange — O(log V + in-range) per file, not O(V) — and the file's
-    * bloom deserializes ONCE for all its probes. */
-  private def inSelection(fs: FileSystem, root: String, m: Manifest,
-                          column: String, values: Seq[Any]): ScanSelection = {
-    val dt = m.schema(column).dataType
-    val dtJson = dt.json
-    val cmpOpt = statOrdering(dt)
-    val all = values.map(v => (renderStat(v), xxh64Of(v, dt)))
-    val sorted: Array[(String, Option[Long])] = cmpOpt match {
-      case Some(c) => all.collect { case (Some(r), h) => (r, h) }
-        .sortWith((a, b) => c(a._1, b._1) < 0).toArray
-      case None => Array.empty
-    }
-    // candidates the range index cannot place (no rendering, or no stat
-    // ordering for the type): only blooms can rule them out
-    val unplaced: Seq[Option[Long]] = cmpOpt match {
-      case Some(_) => all.collect { case (None, h) => h }
-      case None => all.map(_._2)
-    }
-    def bound(x: String, c: (String, String) => Int,
-              strict: Boolean): Int = {
-      var lo = 0; var hi = sorted.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        val d = c(sorted(mid)._1, x)
-        if (d < 0 || (strict && d == 0)) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    def keep(f: String): Boolean = {
-      lazy val bloom = m.bloomFor(fs, root, f, column).map(bytes =>
-        org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes)))
-      def may(h: Option[Long]): Boolean =
-        bloom.forall(b => h.forall(b.mightContainLong))
-      usableStat(fs, root, m, f, column, dtJson) match {
-        case Some(s) => (s.min, s.max, cmpOpt) match {
-          case (Some(mn), Some(mx), Some(c)) =>
-            val lo = bound(mn, c, strict = false) // first candidate >= min
-            val hi = bound(mx, c, strict = true)  // first candidate >  max
-            (lo until hi).exists(i => may(sorted(i)._2)) ||
-              unplaced.exists(may)
-          // all-null: equality matches none. Sound ONLY when the type is
-          // orderable/renderable (Some(_)): for types renderStat cannot
-          // render (Boolean, Binary, complex), min/max record None for
-          // EVERY file regardless of contents — those fall through to
-          // the blooms-only case below, never to a skip.
-          case (None, None, Some(_)) => false
-          case _ => // stats present but unusable for ranging: blooms only
-            sorted.exists(e => may(e._2)) || unplaced.exists(may)
-        }
-        case None =>
-          sorted.exists(e => may(e._2)) || unplaced.exists(may)
-      }
-    }
-    selectScan(fs, root, m,
-      indexed = f => usableStat(fs, root, m, f, column, dtJson).isDefined ||
-        m.bloomColsOf(fs, root, f).contains(column),
-      keep = keep)
-  }
-
   /** GDPR erasure by KEY LIST, merge-on-read: rows whose `column` equals
     * any of `values` are recorded as deletion vectors — the erasure
     * request's natural shape (a batch of subject ids, not a range). The
@@ -3839,7 +3740,7 @@ object VersionedTable {
                       values: Seq[Any],
                       maxDeleteRows: Long = 16L * 1024 * 1024): Int =
       commitLoop(spark, root, Rederive) { at =>
-    val (fs, m) = (at.fs, at.m)
+    val m = at.m
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
@@ -3847,7 +3748,8 @@ object VersionedTable {
         "or filtering read(), no delete needed")
     val vs = values.filter(_ != null)
     if (vs.isEmpty) at.cur
-    else dvDelete(spark, at, inSelection(fs, root, m, column, vs),
+    else dvDelete(spark, at, constrainedSelection(spark, root, m,
+        Seq(ColConstraint(column, None, None, None, inSet = Some(vs))))._2,
       col(column).isin(vs: _*), maxDeleteRows)
   }
 
@@ -3862,7 +3764,7 @@ object VersionedTable {
                     fileRows: Option[Int] = None,
                     bloomBits: Long = 0L): Int =
       commitLoop(spark, root, Rederive) { at =>
-    val (fs, m) = (at.fs, at.m)
+    val m = at.m
     require(m.schema.fieldNames.contains(column),
       s"column $column is not in the table schema")
     require(!m.partCols.contains(column),
@@ -3872,7 +3774,8 @@ object VersionedTable {
     // dirs holding any surviving candidate file (or unindexed wholeDirs)
     val touched =
       if (vs.isEmpty) Map.empty[String, String]
-      else touchedDirs(root, inSelection(fs, root, m, column, vs))
+      else selectedDirs(root, constrainedSelection(spark, root, m,
+        Seq(ColConstraint(column, None, None, None, inSet = Some(vs))))._2)
     if (touched.isEmpty) at.cur // index proves nothing can match
     else rewriteTouched(spark, at, touched, fileRows,
         bloomBits, op = "delete") { df =>
@@ -3951,7 +3854,7 @@ object VersionedTable {
       s"$op predicate must not contain a subquery: $predicate")
     val cs = graft.plans.PruneVersionedScan.extractConstraints(resolved)
     val (_, sel) = constrainedSelection(spark, root, m, cs)
-    (touchedDirs(root, sel), sel)
+    (selectedDirs(root, sel), sel)
   }
 
   /** DELETE by ARBITRARY predicate, physical rewrite: rows where
@@ -3963,10 +3866,11 @@ object VersionedTable {
     * facts — prunes which dirs rewrite; the full predicate then decides
     * rows. Unextractable shapes (disjunctions across columns, function
     * calls) simply prune nothing and every dir rewrites — correct,
-    * loud in cost, never wrong. Generalizes [[deleteWhere]] (one range)
-    * and [[deleteWhereIn]] (one id list) to compound conditions:
-    * `deleteMatching(s, root, col("date").between(a, b) &&
-    * col("source") === "bad")`. */
+    * loud in cost, never wrong. [[deleteWhere]] (one range) and
+    * [[deleteWhereIn]] (one id list) are its one-constraint shapes and
+    * select their dirs through the same [[constrainedSelection]]; this
+    * takes compound conditions: `deleteMatching(s, root,
+    * col("date").between(a, b) && col("source") === "bad")`. */
   def deleteMatching(spark: SparkSession, root: String,
                      predicate: org.apache.spark.sql.Column,
                      fileRows: Option[Int] = None,
@@ -4006,6 +3910,7 @@ object VersionedTable {
                      fileRows: Option[Int] = None,
                      bloomBits: Long = 0L): Int =
       commitLoop(spark, root, Rederive) { at =>
+    requireSet(at.m, set)
     val (touched, _) = matchingSelection(spark, root, at.m, predicate,
       "UPDATE")
     if (touched.isEmpty) at.cur // index proves nothing can match

@@ -151,6 +151,66 @@ class DerivedPartitionSpec extends SparkSpec {
     assert(m == Map("b" -> (("bucket:8", "id"))))
   }
 
+  /** Dirs whose mapping moved off gen0: what a rewrite touched. */
+  private def remapped(root: String): Set[String] =
+    VersionedTable.resolveManifest(spark, root, None).mapping
+      .collect { case (rel, gen) if gen != "gen0" => rel }.toSet
+
+  /** 400 ids over bucket(8) of id, no stats on id. */
+  private def bucketTable(root: String): Unit = {
+    val df = (0 until 400).map(i => (i.toLong, s"name_$i", i % 7))
+      .toDF("id", "name", "v")
+      .withColumn("b", VersionedTable.derivedPartitionColumn("bucket:8", "id"))
+    VersionedTable.upsert(spark, root, df, Seq("id", "b"), Seq("b"))
+    VersionedTable.addDerivedPartition(spark, root, "b", "bucket:8", "id")
+  }
+
+  /** The dir holding `id` at the current version. */
+  private def bucketDirOf(root: String, id: Long): String =
+    "b=" + VersionedTable.read(spark, root).filter(col("id") === id)
+      .select($"b").collect().head.get(0)
+
+  test("bucket(): shape DML of one id rewrites only that id's hash dir") {
+    val del = tmp("bucketdel")
+    bucketTable(del)
+    val delDir = bucketDirOf(del, 137L)
+    VersionedTable.deleteWhereIn(spark, del, "id", Seq(137L))
+    assert(remapped(del) == Set(delDir))
+    assert(VersionedTable.resolveManifest(spark, del, None).mapping
+      .count(_._2 == "gen0") == 7)
+    assert(VersionedTable.read(spark, del).count() == 399)
+    val upd = tmp("bucketupd")
+    bucketTable(upd)
+    val updDir = bucketDirOf(upd, 290L)
+    VersionedTable.updateWhereIn(spark, upd, "id", Seq(290L),
+      Map("name" -> lit("fixed")))
+    assert(remapped(upd) == Set(updDir))
+    assert(VersionedTable.read(spark, upd).filter($"name" === "fixed")
+      .select($"id").as[Long].collect().toSeq == Seq(290L))
+    // a RANGE on id cannot map through the hash (not monotone): with no
+    // stats on id every dir rewrites, and every id in range goes
+    val ranged = tmp("bucketrange")
+    bucketTable(ranged)
+    VersionedTable.deleteWhere(spark, ranged, "id", 100L, 110L)
+    assert(remapped(ranged).size == 8)
+    assert(VersionedTable.read(spark, ranged).count() == 389)
+  }
+
+  test("day(): shape DML over a ts range rewrites only that day's dir") {
+    val del = tmp("daydel")
+    dayTable(del)
+    VersionedTable.deleteWhere(spark, del, "ts", ts(4, 6), ts(4, 8))
+    assert(remapped(del) == Set("day=2024-02-04"))
+    assert(VersionedTable.read(spark, del).count() == 237)
+    val upd = tmp("dayupd")
+    dayTable(upd)
+    VersionedTable.updateWhere(spark, upd, "ts", ts(4, 6), ts(4, 8),
+      Map("v" -> lit(-1L)))
+    assert(remapped(upd) == Set("day=2024-02-04"))
+    assert(VersionedTable.read(spark, upd).filter($"v" === -1L)
+      .select($"id").as[Int].collect().toSet == Set(406, 407, 408))
+  }
+
   test("registration validation refuses bad shapes") {
     val root = tmp("val")
     dayTable(root)

@@ -615,6 +615,75 @@ class OpsSpec extends SparkSpec {
       .select($"id").as[Int].collect().toSeq == Seq(1000))
   }
 
+  test("VersionedTable shape reads and DML select the files SQL selects") {
+    import graft.plans.VersionedScan
+    import org.apache.spark.sql.{Column, DataFrame}
+    val dir = java.nio.file.Files.createTempDirectory("graft_vtshape").toString
+    // every index kind on one table: stats on v (clustered within each
+    // partition: 10 files of 50 rows, 50 v values each), a bloom on the
+    // unclustered unique id, and the partition column p
+    val rows = (0 until 2000).map { i =>
+      ((i * 2654435761L) % 1000003L, s"p${i % 4}", i / 4) }
+    def build(root: String): Unit =
+      VersionedTable.upsert(spark, root, rows.toDF("id", "p", "v"),
+        Seq("id", "p"), Seq("p"), statsCols = Seq("v"), fileRows = Some(50),
+        bloomCols = Seq("id"))
+    val root = s"$dir/a"
+    build(root)
+    def files(df: DataFrame): Int = VersionedTable.physicalInputFiles(df)
+    def viaSql(r: String, pred: Column): DataFrame =
+      VersionedScan.table(spark, r).filter(pred)
+    def rowsOf(df: DataFrame): Set[org.apache.spark.sql.Row] =
+      df.select("id", "p", "v").collect().toSet
+    val total = files(VersionedTable.read(spark, root))
+    assert(total == 40)
+    def same(shape: DataFrame, pred: Column, expect: Int): Unit = {
+      val sql = viaSql(root, pred)
+      assert(files(shape) == files(sql), s"shape vs SQL files for $pred")
+      assert(files(shape) == expect, s"files kept for $pred")
+      assert(rowsOf(shape) == rowsOf(sql))
+    }
+    // a data-column range: one file per partition
+    val range = VersionedTable.readWhere(spark, root, "v", 100, 149)
+    same(range, col("v") >= 100 && col("v") <= 149, 4)
+    assert(range.count() == 200)
+    assert(VersionedTable.skipStats(spark, root, "v", 100, 149) == ((4, total)))
+    // an equality on the bloom column: the needle's file alone
+    val needle = rows(137)._1
+    val eq = VersionedTable.readWhereEq(spark, root, "id", needle)
+    same(eq, col("id") === needle, 1)
+    assert(VersionedTable.skipStatsEq(spark, root, "id", needle) ==
+      ((1, total)))
+    // a partition-column range prunes dirs by their values
+    val part = VersionedTable.readWhere(spark, root, "p", "p1", "p2")
+    same(part, col("p") >= "p1" && col("p") <= "p2", 20)
+    assert(part.count() == 1000)
+    // a 2,000-value id list with two hits: the blooms rule out most
+    // files (a bloom false positive keeps a file, in SQL and DML alike),
+    // and the shape DML rewrites exactly the dirs of the files SQL scans
+    val real = rows.map(_._1).toSet
+    val hits = Seq(rows(1)._1, rows(1001)._1)
+    val list = hits ++ Iterator.from(0).map(k => (k * 7919L) % 1000003L)
+      .filterNot(real).take(1998).toSeq
+    val in = viaSql(root, col("id").isin(list: _*))
+    assert(files(in) >= 2 && files(in) < total / 4)
+    val inDirs = in.inputFiles.map(f =>
+      new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+    assert(inDirs.contains("p=p1"))
+    def remapped(r: String): Set[String] =
+      VersionedTable.resolveManifest(spark, r, None).mapping
+        .collect { case (rel, gen) if gen != "gen0" => rel }.toSet
+    val other = s"$dir/b"
+    build(other)
+    VersionedTable.deleteWhereIn(spark, root, "id", list)
+    VersionedTable.deleteMatching(spark, other, col("id").isin(list: _*))
+    assert(remapped(root) == inDirs)
+    assert(remapped(other) == remapped(root))
+    assert(rowsOf(VersionedTable.read(spark, root)) ==
+      rowsOf(VersionedTable.read(spark, other)))
+    assert(VersionedTable.read(spark, root).count() == 1998)
+  }
+
   test("VersionedTable.deleteWhere: index-targeted rewrite, untouched dirs intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft_vtdel").toString
     val root = s"$dir/table"

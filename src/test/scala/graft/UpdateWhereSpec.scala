@@ -208,4 +208,25 @@ class UpdateWhereSpec extends SparkSpec {
     }
     assert(VersionedTable.history(spark, root) == Seq(0))
   }
+
+  test("UPDATE checks its SET map even when no file can match") {
+    val (root, _) = freshTable("setcheck")
+    // v tops out at 174: the stats index proves no file holds v = 5000
+    val ops: Seq[Map[String, org.apache.spark.sql.Column] => Int] = Seq(
+      set => VersionedTable.updateWhere(spark, root, "v", 5000, 6000, set),
+      set => VersionedTable.updateWhereIn(spark, root, "v", Seq(5000), set),
+      set => VersionedTable.updateMatching(spark, root, col("v") === 5000, set))
+    ops.foreach { op =>
+      val bad = intercept[IllegalArgumentException] {
+        op(Map("no_such_col" -> lit(1L)))
+      }
+      assert(bad.getMessage.contains(
+        "SET column no_such_col is not in the table schema"))
+      val empty = intercept[IllegalArgumentException](op(Map.empty))
+      assert(empty.getMessage.contains("UPDATE needs at least one SET column"))
+      // a valid SET map where nothing matches stays a no-op
+      assert(op(Map("w" -> lit(0L))) == 0)
+    }
+    assert(VersionedTable.history(spark, root) == Seq(0))
+  }
 }
