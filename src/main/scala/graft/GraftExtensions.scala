@@ -303,11 +303,7 @@ object GraftExtensions {
         // measure aliases, tombstones/internals hidden), from pure SQL;
         // the frame's own analysis runs here, at the outer query's
         // ANALYSIS time, so the resolved subtree just slots in.
-        // Join-backed views dispatch by their spec sidecar.
-        (if (graft.ops.JoinMatView.isView(spark, root))
-          graft.ops.JoinMatView.read(spark, root)
-        else graft.ops.MatView.read(spark, root))
-          .queryExecution.analyzed
+        graft.ops.MatView.read(spark, root).queryExecution.analyzed
       }),
     (FunctionIdentifier("graft_snapshot"),
       new ExpressionInfo(graft.ops.MultiSync.getClass.getName,

@@ -2059,8 +2059,8 @@ object SparkEntry {
           .select(col("n_nationkey"), lit("RENAMED").as("n_name")),
         Seq("n_nationkey"), Seq("n_nationkey"))
     }
-    JoinMatView.refresh(s, view)
-    require(!JoinMatView.lastFullRecompute,
+    MatView.refresh(s, view)
+    require(!MatView.lastFullRecompute,
       "surgical two-source updates must refresh via the delta path")
     require(JoinMatView.lastDimChangedKeys == 1L,
       s"dim leg saw ${JoinMatView.lastDimChangedKeys} changed keys, " +
@@ -2068,7 +2068,7 @@ object SparkEntry {
     require(VersionedTable.currentVersion(s, view) == Some(1),
       "join matview refresh did not produce exactly one incremental " +
         "version")
-    JoinMatView.read(s, view).select(col("n_name"), col("bal_sum"),
+    MatView.read(s, view).select(col("n_name"), col("bal_sum"),
       r6(col("bal_avg")).as("bal_avg"), col("n_cust"))
   }
 

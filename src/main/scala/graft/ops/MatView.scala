@@ -1,60 +1,74 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /**
- * Incrementally-maintained materialized aggregate over a
- * [[VersionedTable]] — the consumer the change feed exists for, and the
- * scalable replacement for the reference's warehouse-sync pattern
+ * Incrementally-maintained materialized aggregate over [[VersionedTable]]
+ * sources — the consumer the change feed exists for, and the scalable
+ * replacement for the reference's warehouse-sync pattern
  * (load_stream_to_snowflake.py:243-323 recomputes and re-MERGEs its
  * ENTIRE aggregate frame every cycle; a 100 TB lake cannot).
  *
  * A view is `GROUP BY groupCols` with COUNT(*) / SUM / AVG / MIN / MAX
  * / approx-DISTINCT measures, itself stored as a versioned table at
  * `viewRoot` (so the serving layer inherits time travel, pruned reads,
- * and concurrency). AVG rides the sum machinery (internal sum +
- * non-null count, divided at read); approx-DISTINCT is a mergeable HLL
- * sketch column — inserts union in, removals join the recompute
- * trigger below. [[refresh]] advances it to the source's current
- * version:
+ * and concurrency). Its source rows come from ONE table, or — when
+ * `Spec.join` names a dim side — through a fact ⋈ dim equi-join whose
+ * signed change rows [[JoinMatView.feed]] builds. Either way this one
+ * engine reads, refreshes and commits the view. AVG rides the sum
+ * machinery (internal sum + non-null count, divided at read);
+ * approx-DISTINCT is a mergeable HLL sketch column — inserts union in,
+ * removals join the recompute trigger below. [[refresh]] advances the
+ * view to every source's current version:
  *
- *  - **Delta path** (only COUNT/SUM/AVG measures): the
- *    [[VersionedTable.changeFeedCdf]] pre/post images make row-count and
- *    sum contributions subtractable, so the refresh reads the CHANGE
- *    FEED ONLY — zero source-table scans, cost O(|changed keys|) however
- *    large the source. Sums carry a per-measure non-null count so a
- *    group whose surviving values are all NULL serves NULL (matching a
- *    direct aggregate), not 0. Counts stay exact; double-typed sums
- *    incur normal floating re-association.
- *  - **Recompute path** (any MIN/MAX measure): deletes make extrema
- *    non-subtractable, so the AFFECTED GROUPS (distinct group keys in
- *    the feed — still O(|changes|) to find) are re-aggregated from the
- *    source and upserted. When the view groups by ONE column and the
- *    affected set is small (≤ [[InListCap]]), the re-read goes through
- *    the manifest's bloom/stats IN-probes and touches only files that
- *    can hold those groups; otherwise a broadcast semi join prunes
+ *  - **Delta path** (only COUNT/SUM/AVG measures): the signed change
+ *    rows ([[VersionedTable.changeFeedCdf]] pre/post images, or the
+ *    join's ΔF ⋈ D_new ∪ F_old ⋈ ΔD legs) make row-count and sum
+ *    contributions subtractable, so a single-table refresh reads the
+ *    CHANGE FEED ONLY — zero source-table scans, cost O(|changed keys|)
+ *    however large the source. Sums carry a per-measure non-null count
+ *    so a group whose surviving values are all NULL serves NULL
+ *    (matching a direct aggregate), not 0. Counts stay exact;
+ *    double-typed sums incur normal floating re-association.
+ *  - **Recompute path** (any MIN/MAX/DISTINCT measure; single-table
+ *    views only — [[JoinMatView.create]] refuses them): deletes make
+ *    extrema non-subtractable, so the AFFECTED GROUPS (distinct group
+ *    keys in the feed — still O(|changes|) to find) are re-aggregated
+ *    from the source and upserted. When the view groups by ONE column
+ *    and the affected set is small (≤ [[InListCap]]), the re-read goes
+ *    through the manifest's bloom/stats IN-probes and touches only files
+ *    that can hold those groups; otherwise a broadcast semi join prunes
  *    after the scan.
+ *  - **Full recompute** (past [[RescanFraction]]: a rescan set of most
+ *    live groups, or a join's mass dim change): the initial build's
+ *    plan plus tombstones for vanished groups.
  *
- * The synced source version rides the view table's own exactly-once txn
- * watermark (`matview:<srcRoot>` stream id), so it survives compaction
- * and vacuum like any streaming sink cursor, and a crashed refresh
- * replays idempotently. Groups whose last row disappears stay as
- * `__cnt = 0` tombstone rows (hidden by [[read]]); a later OPTIMIZE or
+ * Each source's synced version rides the view table's own exactly-once
+ * txn watermark (`Spec.sources`), so it survives compaction and vacuum
+ * like any streaming sink cursor, and a crashed refresh replays
+ * idempotently. Every advancing watermark commits in the refresh's ONE
+ * manifest, so a join view is never synced to one source but not the
+ * other. Groups whose last row disappears stay as `__cnt = 0` tombstone
+ * rows (hidden by [[read]]); a later OPTIMIZE or
  * `deleteWhere(__cnt, 0, 0)` clears them — refresh never needs the
  * delete machinery on its hot path.
  */
 object MatView {
 
+  /** A join view's dim side: the source's `fkCols(i)` joins the dim's
+    * `dimKeys(i)` (its recorded merge keys, FROZEN at create). */
+  case class Join(dimRoot: String, dimKeys: Seq[String],
+                  fkCols: Seq[String])
+
   /** Measures: user-visible alias -> source column. AVG is stored as an
     * internal subtractable sum + non-null count (division happens at
     * read); DISTINCT is stored as a mergeable HLL sketch binary —
     * unions absorb inserts, removals force the group onto the recompute
-    * path exactly like extrema (a sketch cannot subtract). */
+    * path exactly like extrema (a sketch cannot subtract). A join view's
+    * `srcRoot`/`srcKeys` are the fact side's. */
   case class Spec(srcRoot: String, srcKeys: Seq[String],
                   groupCols: Seq[String],
                   sums: Seq[(String, String)],
@@ -63,7 +77,8 @@ object MatView {
                   countAlias: Option[String],
                   buckets: Int,
                   avgs: Seq[(String, String)] = Nil,
-                  distincts: Seq[(String, String)] = Nil) {
+                  distincts: Seq[(String, String)] = Nil,
+                  join: Option[Join] = None) {
     /** Aliases whose STORED column name equals the served name. */
     private[graft] def measureAliases: Seq[String] =
       sums.map(_._1) ++ mins.map(_._1) ++ maxs.map(_._1)
@@ -74,6 +89,13 @@ object MatView {
       * internal sum — one code path maintains both. */
     private[graft] def sumsStored: Seq[(String, String)] =
       sums ++ avgs.map { case (a, c) => (avgSum(a), c) }
+    /** Each source's txn stream id and root, fact first: the view's
+      * watermarks, in commit-tag order. */
+    private[graft] def sources: Seq[(String, String)] = join match {
+      case None => Seq((s"matview:$srcRoot", srcRoot))
+      case Some(j) => Seq((s"matviewj:$srcRoot", srcRoot),
+        (s"matviewjd:${j.dimRoot}", j.dimRoot))
+    }
   }
 
   private def avgSum(alias: String) = s"__avg_$alias"
@@ -83,12 +105,7 @@ object MatView {
     * recompute path prunes by semi join instead of index probes. */
   val InListCap = 10000
 
-  private val StreamPrefix = "matview:"
   private def specPath(viewRoot: String) = new Path(viewRoot, "_matview")
-  private def b64e(s: String) = java.util.Base64.getEncoder
-    .encodeToString(s.getBytes(StandardCharsets.UTF_8))
-  private def b64d(s: String) = new String(
-    java.util.Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
   private def nn(alias: String) = s"__nn_$alias"
 
   /** Define the view and run the initial full build (the ONLY full
@@ -106,67 +123,96 @@ object MatView {
     require(sums.nonEmpty || mins.nonEmpty || maxs.nonEmpty ||
       avgs.nonEmpty || distincts.nonEmpty ||
       countAlias.isDefined, "at least one measure")
-    val spec = Spec(srcRoot, srcKeys, groupCols, sums, mins, maxs,
-      countAlias, buckets, avgs, distincts)
-    val aliases = spec.allAliases ++ countAlias
+    define(spark, viewRoot, Spec(srcRoot, srcKeys, groupCols, sums, mins,
+      maxs, countAlias, buckets, avgs, distincts))
+  }
+
+  /** Claim the view's spec file (refusing to redefine) and run the
+    * initial build. A failed build removes the claim, so CREATE stays
+    * retryable without manual cleanup. */
+  private[ops] def define(spark: SparkSession, viewRoot: String,
+                          spec: Spec): Int = {
+    val aliases = spec.allAliases ++ spec.countAlias
     require(aliases.distinct.length == aliases.length,
       s"duplicate measure alias: ${aliases.mkString(", ")}")
-    require(aliases.forall(a => !groupCols.contains(a)),
+    require(aliases.forall(a => !spec.groupCols.contains(a)),
       "a measure alias collides with a group column")
-    val fs = specPath(viewRoot).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // atomic claim (refuse to redefine): local-FS create(overwrite=false)
-    // is exists-check-then-create, so the claim rides the same
-    // O_CREAT|O_EXCL path every manifest claim does
-    val out = VersionedTable.createExclusive(fs, specPath(viewRoot))
-    try out.write(render(spec).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // a failed initial build must not leave the spec behind — CREATE
-    // would otherwise be unretryable without manual cleanup
+    val p = specPath(viewRoot)
+    SpecFile.writeExclusive(spark, p, render(spec))
     try refresh(spark, viewRoot)
     catch { case t: Throwable =>
-      try fs.delete(specPath(viewRoot), false)
+      try SpecFile.fs(spark, p).delete(p, false)
       catch { case c: Throwable => t.addSuppressed(c) }
       throw t
     }
   }
 
-  /** Advance the view to the source's current version (no-op when
+  /** Advance the view to every source's current version (no-op when
     * already there). Returns the view's current version. */
   def refresh(spark: SparkSession, viewRoot: String): Int = {
     // every refresh owns the observables — a no-op or initial-build
-    // refresh must not leave a previous refresh's fallback flag visible
+    // refresh must not leave a previous refresh's values visible
     lastFullRecomputeTl.set(false)
+    JoinMatView.lastDimKeysTl.set(-1L)
     val spec = readSpec(spark, viewRoot)
-    val srcCur = VersionedTable.currentVersion(spark, spec.srcRoot)
+    val (ids, roots) = spec.sources.unzip
+    val cur = roots.map(r => VersionedTable.currentVersion(spark, r)
       .getOrElse(throw new java.io.FileNotFoundException(
-        s"no committed version at ${spec.srcRoot}"))
-    val streamId = StreamPrefix + spec.srcRoot
-    val synced = VersionedTable.currentVersion(spark, viewRoot)
-      .flatMap(_ => VersionedTable.lastTxn(spark, viewRoot, streamId))
-    synced match {
-      case Some(v) if v >= srcCur =>
-        VersionedTable.currentVersion(spark, viewRoot).get
-      case None => // initial full build — pinned to the watermarked
-        // version: a source commit landing mid-build would otherwise be
-        // included yet re-applied by the next refresh (double count)
-        commit(spark, viewRoot, spec, srcCur,
-          aggregate(VersionedTable.read(spark, spec.srcRoot, Some(srcCur)),
-            spec))
-      case Some(from) =>
-        val feed = VersionedTable.changeFeedCdf(spark, spec.srcRoot,
-          spec.srcKeys, from.toInt, srcCur)
-        // pin the (group-sized) feed aggregation: it feeds the delta
-        // rows, the rescan split, and the recompute's pruning probes.
-        // smallQuery at this source frame: change-sized feeds plan
-        // statically (one job per action instead of one per AQE stage)
-        // and every derived frame inherits the session
-        val delta = VersionedTable.smallQuery(feedDelta(spec, feed))
-          .persist()
-        val (rows, pins) = deltaGroups(spark, viewRoot, spec, delta, srcCur)
-        try commit(spark, viewRoot, spec, srcCur, rows)
-        finally (delta +: pins).foreach(_.unpersist())
+        s"no committed version at $r")))
+    val viewCur = VersionedTable.currentVersion(spark, viewRoot)
+    val synced = ids.map(id =>
+      viewCur.flatMap(_ => VersionedTable.lastTxn(spark, viewRoot, id)))
+    if (synced.exists(_.isEmpty))
+      // initial full build — pinned to the watermarked versions: a
+      // source commit landing mid-build would otherwise be included yet
+      // re-applied by the next refresh (double count)
+      commit(spark, viewRoot, spec, ids.zip(cur.map(_.toLong)),
+        aggregate(source(spark, spec, cur), spec))
+    else {
+      val from = synced.map(_.get.toInt)
+      // only ADVANCING watermarks are written: re-tagging an unmoved
+      // source at its old value would trip the txn idempotence abort
+      // and silently drop the whole refresh
+      val tags = ids.zip(cur).zip(from).collect {
+        case ((id, c), f) if c > f => (id, c.toLong) }
+      if (tags.isEmpty) viewCur.get
+      else {
+        // a join view's signed rows come through the join; None = a mass
+        // dim change, past which the whole view is recomputed
+        val feed = spec.join match {
+          case None => Some(VersionedTable.changeFeedCdf(spark,
+            spec.srcRoot, spec.srcKeys, from.head, cur.head))
+          case Some(_) => JoinMatView.feed(spark, spec, from, cur)
+        }
+        feed match {
+          case None =>
+            lastFullRecomputeTl.set(true)
+            commit(spark, viewRoot, spec, tags, fullRecompute(spark, spec,
+              VersionedTable.read(spark, viewRoot), cur))
+          case Some(f) =>
+            // pin the (group-sized) feed aggregation: it feeds the delta
+            // rows, the rescan split, and the recompute's pruning
+            // probes. smallQuery at this source frame: change-sized
+            // feeds plan statically (one job per action instead of one
+            // per AQE stage) and every derived frame inherits the session
+            val delta = VersionedTable.smallQuery(feedDelta(spec, f))
+              .persist()
+            val (rows, pins) =
+              deltaGroups(spark, viewRoot, spec, delta, cur)
+            try commit(spark, viewRoot, spec, tags, rows)
+            finally (delta +: pins).foreach(_.unpersist())
+        }
+      }
     }
+  }
+
+  /** The view's source rows pinned at `at` (one version per source):
+    * the source table, or a join view's fact ⋈ dim. */
+  private def source(spark: SparkSession, spec: Spec,
+                     at: Seq[Int]): DataFrame = {
+    val src = VersionedTable.read(spark, spec.srcRoot, Some(at.head))
+    spec.join.fold(src)(j => JoinMatView.joined(spec, j, src,
+      VersionedTable.read(spark, j.dimRoot, Some(at(1)))))
   }
 
   /** Whether `root` carries a materialized-view spec — the read path
@@ -174,7 +220,7 @@ object MatView {
     * backing table. */
   private[graft] def isView(spark: SparkSession, root: String): Boolean = {
     val p = specPath(root)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    SpecFile.fs(spark, p).exists(p)
   }
 
   /** Source rescans the LAST [[refresh]] needed for extremum/sketch
@@ -190,7 +236,8 @@ object MatView {
 
   /** Whether the LAST [[refresh]] took the full-recompute fallback
     * (mass-removal: the rescan set exceeded [[RescanFraction]] of the
-    * view's live groups). Same per-thread observability contract as
+    * view's live groups, or a join view's changed dim keys exceeded it
+    * of the dim's rows). Same per-thread observability contract as
     * [[lastRescanGroups]]. */
   private val lastFullRecomputeTl = new ThreadLocal[java.lang.Boolean] {
     override def initialValue: java.lang.Boolean = false
@@ -203,8 +250,8 @@ object MatView {
     * a near-table-sized group-key set into the pruned path — past this
     * point the "pruned" rescan reads most of the source anyway, and the
     * broadcast of |groups| keys is pure overhead (a driver OOM at 100 TB
-    * group cardinalities). [[JoinMatView]] applies the same threshold to
-    * the dim's changed keys. */
+    * group cardinalities). [[JoinMatView.feed]] applies the same
+    * threshold to the dim's changed keys against the dim's rows. */
   private[graft] val RescanFraction = 0.5
 
   /** The view's served contents: group columns + measures, tombstones
@@ -282,7 +329,7 @@ object MatView {
     * old and added). Only that provably-undecidable residue — typically
     * empty — goes through [[recomputeGroups]]'s pruned re-aggregation. */
   private def deltaGroups(spark: SparkSession, viewRoot: String,
-                          spec: Spec, delta: DataFrame, srcCur: Int)
+                          spec: Spec, delta: DataFrame, srcCur: Seq[Int])
       : (DataFrame, Seq[DataFrame]) = {
     val cur = VersionedTable.read(spark, viewRoot)
     val extrema = spec.mins ++ spec.maxs
@@ -342,17 +389,14 @@ object MatView {
             when(o.isNull, ad).when(ad.isNull, o)
               .otherwise(hll_union(o, ad))).as(dHll(a)) } :+
         newCnt.as("__cnt"): _*)
-    if (extrema.isEmpty && spec.distincts.isEmpty) {
-      lastFullRecomputeTl.set(false)
-      (deltaRows, Nil)
-    } else {
+    if (extrema.isEmpty && spec.distincts.isEmpty) (deltaRows, Nil)
+    else {
       // pin the rescan keys: the recompute reads them several times
       // (IN-list collect, null probe, semi join, tombstone anti-join),
       // and counting them is the path's key observable
       val rescanKeys = joined.filter(rescan)
         .select(spec.groupCols.map(col): _*).persist()
       lastRescan.set(rescanKeys.count())
-      lastFullRecomputeTl.set(false)
       if (lastRescanGroups == 0) (deltaRows, Seq(rescanKeys))
       else {
         // mass-removal fallback: past RescanFraction of the LIVE groups
@@ -367,36 +411,24 @@ object MatView {
           lastFullRecomputeTl.set(true)
           (fullRecompute(spark, spec, cur, srcCur), Seq(rescanKeys))
         } else (deltaRows.unionByName(
-          recomputeGroups(spark, spec, rescanKeys, srcCur)),
+          recomputeGroups(spark, spec, rescanKeys, srcCur.head)),
           Seq(rescanKeys))
       }
     }
   }
 
   /** Whole-view recompute (the mass-removal fallback): re-aggregate the
-    * ENTIRE source at the pinned version — the initial build's plan —
+    * ENTIRE source at the pinned versions — the initial build's plan —
     * and tombstone every currently-live group the new aggregate no
     * longer contains (the upsert only replaces keys it carries, so a
     * vanished group's stale row must be overwritten explicitly). The
     * anti-join is group-keyed and unhinted: both sides are
     * O(|groups|), so AQE picks the strategy. */
   private def fullRecompute(spark: SparkSession, spec: Spec,
-                            cur: DataFrame, srcCur: Int): DataFrame = {
-    val rec = aggregate(
-      VersionedTable.read(spark, spec.srcRoot, Some(srcCur)), spec)
-    val recKeys = rec.select(spec.groupCols.map(c =>
-      col(c).as(s"__r_$c")): _*)
-    val dead = cur.filter(col("__cnt") > 0)
-      .select(spec.groupCols.map(col): _*)
-      .join(recKeys,
-        spec.groupCols.map(c => col(c) <=> col(s"__r_$c")).reduce(_ && _),
-        "left_anti")
-    val deadRows = rec.columns.filterNot(spec.groupCols.contains)
-      .foldLeft(dead)((d, a) => d.withColumn(a,
-        if (a == "__cnt") lit(0L)
-        else lit(null).cast(rec.schema(a).dataType)))
-    rec.unionByName(deadRows.select(rec.columns.map(col).toSeq: _*))
-  }
+                            cur: DataFrame, srcCur: Seq[Int]): DataFrame =
+    withTombstones(spec, aggregate(source(spark, spec, srcCur), spec),
+      cur.filter(col("__cnt") > 0).select(spec.groupCols.map(col): _*),
+      smallRec = false)
 
   /** Recompute path: re-aggregate ONLY the groups the feed names —
     * through the source's index probes when they fit [[InListCap]],
@@ -409,11 +441,20 @@ object MatView {
       col(c).as(s"__a_$c")): _*)
     val semiCond = spec.groupCols.map(c => col(c) <=> col(s"__a_$c"))
       .reduce(_ && _)
-    val rec = aggregate(src.join(broadcast(aff), semiCond, "left_semi"),
-      spec)
+    withTombstones(spec, aggregate(src.join(broadcast(aff), semiCond,
+      "left_semi"), spec), affected, smallRec = true)
+  }
+
+  /** `rec` plus an explicit `__cnt = 0` tombstone (NULL measures) for
+    * every group of `keys` that `rec` no longer holds — the stale row of
+    * a vanished group is overwritten, never left serving. `smallRec`
+    * broadcasts `rec`'s group keys (an affected-group recompute); a
+    * whole-view recompute leaves the strategy to AQE. */
+  private def withTombstones(spec: Spec, rec: DataFrame, keys: DataFrame,
+                             smallRec: Boolean): DataFrame = {
     val recKeys = rec.select(spec.groupCols.map(c =>
       col(c).as(s"__r_$c")): _*)
-    val dead = affected.join(broadcast(recKeys),
+    val dead = keys.join(if (smallRec) broadcast(recKeys) else recKeys,
       spec.groupCols.map(c => col(c) <=> col(s"__r_$c")).reduce(_ && _),
       "left_anti")
     val deadRows = rec.columns.filterNot(spec.groupCols.contains)
@@ -450,12 +491,13 @@ object MatView {
       }
     } else VersionedTable.read(spark, spec.srcRoot, Some(srcCur))
 
-  /** Upsert the changed group rows into the view table under the synced
-    * source version's txn watermark. The frame is pinned first: upsert
-    * evaluates it several times, and each evaluation would otherwise
-    * re-run the two-version feed join. */
+  /** Upsert the changed group rows into the view table under the
+    * advancing source watermarks `tags`, all in ONE manifest: a crash can
+    * never leave a join view synced to the fact but not the dim. The
+    * frame is pinned first: upsert evaluates it several times, and each
+    * evaluation would otherwise re-run the two-version feed join. */
   private def commit(spark: SparkSession, viewRoot: String, spec: Spec,
-                     srcVersion: Int, rows: DataFrame): Int = {
+                     tags: Seq[(String, Long)], rows: DataFrame): Int = {
     val withBucket = VersionedTable.smallQuery(rows.withColumn("__bucket",
       pmod(xxhash64(spec.groupCols.map(col): _*), lit(spec.buckets))
         .cast("int"))).persist()
@@ -471,65 +513,53 @@ object MatView {
     // partCols-within-keys contract
     try VersionedTable.upsert(spark, viewRoot, withBucket,
       keys = spec.groupCols :+ "__bucket", partCols = Seq("__bucket"),
-      txn = Some((StreamPrefix + spec.srcRoot, srcVersion.toLong)))
+      txn = tags.headOption, extraTxns = tags.drop(1))
     finally withBucket.unpersist()
   }
 
   private def render(spec: Spec): String = {
+    import SpecFile.b64e
     val sb = new StringBuilder("#graft-matview\t1\n")
-    sb.append("#src\t").append(b64e(spec.srcRoot)).append('\n')
-    sb.append("#keys\t").append(spec.srcKeys.map(b64e).mkString("\t"))
-      .append('\n')
-    sb.append("#groups\t").append(spec.groupCols.map(b64e).mkString("\t"))
-      .append('\n')
-    spec.sums.foreach { case (a, c) =>
-      sb.append("#sum\t").append(b64e(a)).append('\t').append(b64e(c))
-        .append('\n') }
-    spec.mins.foreach { case (a, c) =>
-      sb.append("#min\t").append(b64e(a)).append('\t').append(b64e(c))
-        .append('\n') }
-    spec.maxs.foreach { case (a, c) =>
-      sb.append("#max\t").append(b64e(a)).append('\t').append(b64e(c))
-        .append('\n') }
-    spec.avgs.foreach { case (a, c) =>
-      sb.append("#avg\t").append(b64e(a)).append('\t').append(b64e(c))
-        .append('\n') }
-    spec.distincts.foreach { case (a, c) =>
-      sb.append("#dct\t").append(b64e(a)).append('\t').append(b64e(c))
-        .append('\n') }
-    spec.countAlias.foreach(a =>
-      sb.append("#count\t").append(b64e(a)).append('\n'))
+    def line(tag: String, xs: Seq[String]): Unit =
+      sb.append(s"#$tag\t").append(xs.map(b64e).mkString("\t")).append('\n')
+    line("src", Seq(spec.srcRoot))
+    line("keys", spec.srcKeys)
+    line("groups", spec.groupCols)
+    Seq("sum" -> spec.sums, "min" -> spec.mins, "max" -> spec.maxs,
+      "avg" -> spec.avgs, "dct" -> spec.distincts).foreach { case (t, ms) =>
+      ms.foreach { case (a, c) => line(t, Seq(a, c)) } }
+    spec.countAlias.foreach(a => line("count", Seq(a)))
+    spec.join.foreach { j =>
+      line("dim", Seq(j.dimRoot))
+      line("dkeys", j.dimKeys)
+      line("fk", j.fkCols)
+    }
     sb.append("#buckets\t").append(spec.buckets).append('\n')
     sb.toString
   }
 
   private[graft] def readSpec(spark: SparkSession,
                               viewRoot: String): Spec = {
-    val p = specPath(viewRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) throw new java.io.FileNotFoundException(
-      s"no materialized view at $viewRoot (missing ${p.getName})")
-    val in = fs.open(p)
-    val text = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
+    import SpecFile.b64d
+    val text = SpecFile.readText(spark, specPath(viewRoot),
+      s"no materialized view at $viewRoot (missing _matview)")
+    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
     require(lines.headOption.exists(_.startsWith("#graft-matview\t1")),
       s"unrecognized matview spec at $viewRoot")
-    def one(tag: String) = lines.collectFirst {
-      case l if l.startsWith(s"#$tag\t") => l.split("\t", -1).drop(1).toSeq }
-    def pairs(tag: String) = lines.toSeq.collect {
-      case l if l.startsWith(s"#$tag\t") =>
-        val p = l.split("\t", -1); (b64d(p(1)), b64d(p(2))) }
+    def fields(tag: String) = lines.collect {
+      case l if l.startsWith(s"#$tag\t") => l.split("\t", -1).toSeq.drop(1) }
+    def one(tag: String) =
+      fields(tag).headOption.map(_.filter(_.nonEmpty).map(b64d))
+    def pairs(tag: String) = fields(tag).map(p => (b64d(p(0)), b64d(p(1))))
     Spec(
-      srcRoot = b64d(one("src").get.head),
-      srcKeys = one("keys").get.filter(_.nonEmpty).map(b64d),
-      groupCols = one("groups").get.filter(_.nonEmpty).map(b64d),
+      srcRoot = one("src").get.head,
+      srcKeys = one("keys").get,
+      groupCols = one("groups").get,
       sums = pairs("sum"), mins = pairs("min"), maxs = pairs("max"),
-      countAlias = one("count").map(s => b64d(s.head)),
-      buckets = one("buckets").get.head.toInt,
-      avgs = pairs("avg"), distincts = pairs("dct"))
+      countAlias = one("count").map(_.head),
+      buckets = fields("buckets").head.head.toInt,
+      avgs = pairs("avg"), distincts = pairs("dct"),
+      join = one("dim").map(d => Join(d.head, one("dkeys").get,
+        one("fk").get)))
   }
 }

@@ -1962,19 +1962,15 @@ case class GraftShowExpectationsCommand(root: Option[String])
 }
 
 /** `REFRESH MATERIALIZED VIEW graft.`/view`` —
-  * [[graft.ops.MatView.refresh]]: advance to the source's current
-  * version at change-volume cost. */
+  * [[graft.ops.MatView.refresh]]: advance every view, single-table or
+  * join-backed, to its sources' current versions at change-volume
+  * cost. */
 case class GraftMvRefreshCommand(viewRoot: String)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
-    // dispatch join-backed views by their spec sidecar — the same rule
-    // graft_view reads by, so everything readable is refreshable
-    Seq(Row(
-      if (graft.ops.JoinMatView.isView(spark, viewRoot))
-        graft.ops.JoinMatView.refresh(spark, viewRoot)
-      else graft.ops.MatView.refresh(spark, viewRoot)))
+    Seq(Row(graft.ops.MatView.refresh(spark, viewRoot)))
 }
 
 /** `DESCRIBE HISTORY graft.`root`` — one row per still-committed version:

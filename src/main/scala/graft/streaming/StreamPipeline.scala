@@ -401,13 +401,13 @@ object StreamPipeline {
       .start()
 
   /** Continuously-fresh materialized aggregate: a metronome-triggered
-    * [[graft.ops.MatView.refresh]] loop — each tick advances the view to
-    * the source's current version at change-volume cost (idle ticks cost
-    * two manifest listings and commit nothing). The view's own txn
-    * watermark is the crash-safe cursor, so restarting the stream — or
-    * running it from a different driver — resumes exactly where the
-    * last committed refresh left off. Pairs with
-    * [[startVersionedMerge]]: stream → versioned table → serving
+    * [[graft.ops.MatView.refresh]] loop — each tick advances the view
+    * (single-table or join-backed) to its sources' current versions at
+    * change-volume cost (idle ticks list manifests and commit nothing).
+    * The view's own txn watermarks are the crash-safe cursor, so
+    * restarting the stream — or running it from a different driver —
+    * resumes exactly where the last committed refresh left off. Pairs
+    * with [[startVersionedMerge]]: stream → versioned table → serving
     * aggregate, every leg incremental. */
   def startMatViewRefresh(spark: SparkSession, view: String,
                           pollInterval: String = "1 second")

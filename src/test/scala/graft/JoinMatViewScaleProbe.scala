@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ops.{JoinMatView, VersionedTable}
+import graft.ops.{JoinMatView, MatView, VersionedTable}
 
 /** Scale evidence for incremental JOIN-view maintenance: at growing FACT
   * sizes (1×, N×) against a fixed-size dimension, price (a) the initial
@@ -87,9 +87,9 @@ object JoinMatViewScaleProbe {
       VersionedTable.upsert(spark, fact, batch, Seq("okey", "bucket7"),
         Seq("bucket7"), statsCols = Seq("okey"), bloomCols = Seq("cid"))
       t(s"$tag fact-delta refresh (fixed 2.5k-row change)") {
-        JoinMatView.refresh(spark, view)
+        MatView.refresh(spark, view)
       }
-      assert(!JoinMatView.lastFullRecompute,
+      assert(!MatView.lastFullRecompute,
         "fixed-size fact change must stay on the delta path")
       // (c) 2-key dim change: one segment move + one balance touch —
       // the affected-key fact rescan must prune to those keys' files
@@ -97,13 +97,13 @@ object JoinMatViewScaleProbe {
         dim0.limit(2).withColumn("segment", lit("MOVED")),
         Seq("dbucket", "cid"), Seq("dbucket"))
       t(s"$tag dim-delta refresh (2 changed keys)") {
-        JoinMatView.refresh(spark, view)
+        MatView.refresh(spark, view)
       }
-      assert(!JoinMatView.lastFullRecompute,
+      assert(!MatView.lastFullRecompute,
         "a 2-key dim change must stay on the delta path")
       println(s"[probe] $tag dim changed-keys " +
         s"${JoinMatView.lastDimChangedKeys} (expect 2)")
-      val served = JoinMatView.read(spark, view)
+      val served = MatView.read(spark, view)
         .agg(sum("n")).collect().head.getLong(0)
       println(s"[probe] $tag served joined-row count $served " +
         s"(expect ${n0 * mult + 500})")

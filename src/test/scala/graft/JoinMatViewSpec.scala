@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{JoinMatView, VersionedTable}
+import graft.ops.{JoinMatView, MatView, VersionedTable}
 
 /** Incrementally-maintained aggregate-over-equi-join views
   * (JoinMatView): the view equals a from-scratch aggregate of the
@@ -52,7 +52,7 @@ class JoinMatViewSpec extends SparkSpec {
   private def assertMatches(view: String, fact: String,
                             dim: String): Unit = {
     val cols = Seq("segment", "amt_sum", "amt_avg", "n")
-    assert(rowsOf(JoinMatView.read(spark, view).select(cols.map(col): _*))
+    assert(rowsOf(MatView.read(spark, view).select(cols.map(col): _*))
       == rowsOf(direct(fact, dim).select(cols.map(col): _*)))
   }
 
@@ -81,8 +81,8 @@ class JoinMatViewSpec extends SparkSpec {
       .toDF("oid", "part", "cid", "amount")
     VersionedTable.upsert(spark, fact, batch, Seq("oid", "part"),
       Seq("part"), statsCols = Seq("oid"), bloomCols = Seq("cid"))
-    JoinMatView.refresh(spark, view)
-    assert(!JoinMatView.lastFullRecompute,
+    MatView.refresh(spark, view)
+    assert(!MatView.lastFullRecompute,
       "a surgical fact update must refresh via the delta path")
     assert(JoinMatView.lastDimChangedKeys == 0L)
     assertMatches(view, fact, dim)
@@ -93,8 +93,8 @@ class JoinMatViewSpec extends SparkSpec {
     VersionedTable.upsert(spark, dim,
       Seq((3L, "d1", "s_moved"), (999L, "d1", "s0"))
         .toDF("cid", "dpart", "segment"), Seq("cid"), Seq("cid"))
-    JoinMatView.refresh(spark, view)
-    assert(!JoinMatView.lastFullRecompute,
+    MatView.refresh(spark, view)
+    assert(!MatView.lastFullRecompute,
       "a surgical dim update must refresh via the delta path")
     assert(JoinMatView.lastDimChangedKeys == 2L)
     assertMatches(view, fact, dim)
@@ -106,20 +106,20 @@ class JoinMatViewSpec extends SparkSpec {
     VersionedTable.upsert(spark, dim,
       Seq((7L, "d1", "s_moved")).toDF("cid", "dpart", "segment"),
       Seq("cid"), Seq("cid"))
-    JoinMatView.refresh(spark, view)
-    assert(!JoinMatView.lastFullRecompute)
+    MatView.refresh(spark, view)
+    assert(!MatView.lastFullRecompute)
     assertMatches(view, fact, dim)
 
     // no-op replay: no version, watermarks unchanged
     val before = VersionedTable.currentVersion(spark, view).get
-    assert(JoinMatView.refresh(spark, view) == before)
+    assert(MatView.refresh(spark, view) == before)
     assert(VersionedTable.currentVersion(spark, view).get == before)
 
     // SQL surface: graft_view dispatches to the join-backed reader
     val viaSql = spark.sql(
       s"SELECT segment, amt_sum, n FROM graft_view('$view')")
       .collect().map(_.mkString("|")).toSet
-    assert(viaSql == JoinMatView.read(spark, view)
+    assert(viaSql == MatView.read(spark, view)
       .select($"segment", $"amt_sum", $"n")
       .collect().map(_.mkString("|")).toSet)
   }
@@ -134,21 +134,21 @@ class JoinMatViewSpec extends SparkSpec {
       countAlias = Some("n"))
     // fact predicate delete clears slices of several groups
     VersionedTable.deleteMatching(spark, fact, col("oid") % 3 === 1)
-    JoinMatView.refresh(spark, view)
-    assert(!JoinMatView.lastFullRecompute)
+    MatView.refresh(spark, view)
+    assert(!MatView.lastFullRecompute)
     assertMatches(view, fact, dim)
     // delete every dim row of segment s4 (cids 4,9,14,19) — the group
     // dies; read() hides its tombstone
     VersionedTable.deleteMatching(spark, dim, col("segment") === "s4")
-    JoinMatView.refresh(spark, view)
+    MatView.refresh(spark, view)
     assertMatches(view, fact, dim)
-    assert(!JoinMatView.read(spark, view).collect()
+    assert(!MatView.read(spark, view).collect()
       .exists(_.getString(0) == "s4"))
     // group REBIRTH: a dim row brings s4 back with fresh fact rows
     VersionedTable.upsert(spark, dim,
       Seq((4L, "d0", "s4")).toDF("cid", "dpart", "segment"),
       Seq("cid"), Seq("cid"))
-    JoinMatView.refresh(spark, view)
+    MatView.refresh(spark, view)
     assertMatches(view, fact, dim)
     // all-NULL measure group serves NULL sum/avg like a direct agg:
     // give cid 21's rows (segment s1) NULL amounts is already seeded
@@ -161,9 +161,9 @@ class JoinMatViewSpec extends SparkSpec {
         (951, "p1", 500L, None: Option[Long]))
         .toDF("oid", "part", "cid", "amount"),
       Seq("oid", "part"), Seq("part"))
-    JoinMatView.refresh(spark, view)
+    MatView.refresh(spark, view)
     assertMatches(view, fact, dim)
-    val nullRow = JoinMatView.read(spark, view)
+    val nullRow = MatView.read(spark, view)
       .filter($"segment" === "s_null").collect()
     assert(nullRow.length == 1 && nullRow.head.isNullAt(1) &&
       nullRow.head.isNullAt(2) && nullRow.head.getLong(3) == 2L)
@@ -179,7 +179,7 @@ class JoinMatViewSpec extends SparkSpec {
       sums = Seq(("amt_sum", "amount")), countAlias = Some("n"))
     def matchesSumN(): Unit = {
       val sel = Seq("segment", "amt_sum", "n")
-      assert(rowsOf(JoinMatView.read(spark, view).select(sel.map(col): _*))
+      assert(rowsOf(MatView.read(spark, view).select(sel.map(col): _*))
         == rowsOf(direct(fact, dim).select(sel.map(col): _*)))
     }
     matchesSumN()
@@ -187,20 +187,52 @@ class JoinMatViewSpec extends SparkSpec {
     VersionedTable.upsert(spark, dim,
       (0L until 23L).map(c => (c, s"d${c % 2}", s"t${c % 3}"))
         .toDF("cid", "dpart", "segment"), Seq("cid"), Seq("cid"))
-    JoinMatView.refresh(spark, view)
-    assert(JoinMatView.lastFullRecompute,
+    MatView.refresh(spark, view)
+    assert(MatView.lastFullRecompute,
       "a whole-dim rewrite must take the full-recompute fallback")
     matchesSumN()
     // stale groups from before the rewrite are tombstoned, not served
-    assert(JoinMatView.read(spark, view).collect()
+    assert(MatView.read(spark, view).collect()
       .forall(_.getString(0).startsWith("t")))
     // surgical follow-up: back on the delta path
     VersionedTable.upsert(spark, dim,
       Seq((11L, "d1", "t_solo")).toDF("cid", "dpart", "segment"),
       Seq("cid"), Seq("cid"))
-    JoinMatView.refresh(spark, view)
-    assert(!JoinMatView.lastFullRecompute)
+    MatView.refresh(spark, view)
+    assert(!MatView.lastFullRecompute)
     matchesSumN()
+  }
+
+  test("refresh job counts: fact-only, dim-only, mass-dim fallback, " +
+      "no-op") {
+    val dir = tmp("jobs")
+    val (fact, dim, view) = (s"$dir/fact", s"$dir/dim", s"$dir/view")
+    seedFact(fact); seedDim(dim)
+    JoinMatView.create(spark, view, fact, dim,
+      fkCols = Seq("cid"), groupCols = Seq("segment"),
+      sums = Seq(("amt_sum", "amount")), avgs = Seq(("amt_avg", "amount")),
+      countAlias = Some("n"))
+    VersionedTable.upsert(spark, fact,
+      Seq((901, "p1", 3L, Some(77L))).toDF("oid", "part", "cid", "amount"),
+      Seq("oid", "part"), Seq("part"))
+    val factOnly = jobsAndStages(MatView.refresh(spark, view))
+    assert(!MatView.lastFullRecompute && JoinMatView.lastDimChangedKeys == 0L)
+    VersionedTable.upsert(spark, dim,
+      Seq((3L, "d1", "s_moved")).toDF("cid", "dpart", "segment"),
+      Seq("cid"), Seq("cid"))
+    val dimOnly = jobsAndStages(MatView.refresh(spark, view))
+    assert(!MatView.lastFullRecompute && JoinMatView.lastDimChangedKeys == 1L)
+    VersionedTable.upsert(spark, dim,
+      (0L until 23L).map(c => (c, s"d${c % 2}", s"t${c % 3}"))
+        .toDF("cid", "dpart", "segment"), Seq("cid"), Seq("cid"))
+    val mass = jobsAndStages(MatView.refresh(spark, view))
+    assert(MatView.lastFullRecompute)
+    val noop = jobsAndStages(MatView.refresh(spark, view))
+    assert((factOnly, dimOnly, mass, noop) ==
+      ((5, 16), (9, 28), (8, 27), (0, 0)),
+      s"fact-only $factOnly, dim-only $dimOnly, mass-dim $mass, " +
+        s"no-op $noop (jobs, stages)")
+    assertMatches(view, fact, dim)
   }
 
   test("create-time refusals: ambiguous column, dim-pk reference, " +
@@ -237,7 +269,7 @@ class JoinMatViewSpec extends SparkSpec {
 
   private def assertMatches2(view: String, fact: String,
                              dim: String): Unit = {
-    val got = JoinMatView.read(spark, view)
+    val got = MatView.read(spark, view)
       .select($"segment", $"n").collect().map(_.mkString("|")).toSet
     val want = direct(fact, dim)
       .select($"segment", $"n").collect().map(_.mkString("|")).toSet
@@ -258,7 +290,7 @@ class JoinMatViewSpec extends SparkSpec {
       .groupBy($"segment", $"part")
       .agg(sum($"amount").as("amt_sum"), count(lit(1)).as("n"))
       .collect().map(_.mkString("|")).toSet
-    def served(): Set[String] = JoinMatView.read(spark, view)
+    def served(): Set[String] = MatView.read(spark, view)
       .select($"segment", $"part", $"amt_sum", $"n")
       .collect().map(_.mkString("|")).toSet
     assert(served() == truth())
@@ -268,8 +300,8 @@ class JoinMatViewSpec extends SparkSpec {
     VersionedTable.upsert(spark, fact,
       Seq((991, "p2", 5L, Some(13L))).toDF("oid", "part", "cid", "amount"),
       Seq("oid", "part"), Seq("part"))
-    JoinMatView.refresh(spark, view)
-    assert(!JoinMatView.lastFullRecompute)
+    MatView.refresh(spark, view)
+    assert(!MatView.lastFullRecompute)
     assert(served() == truth())
   }
 
@@ -290,5 +322,57 @@ class JoinMatViewSpec extends SparkSpec {
     assert(n == VersionedTable.read(spark, fact)
       .join(VersionedTable.read(spark, dim)
         .select($"cid".as("d_cid")), $"cid" === $"d_cid").count())
+  }
+
+  test("SQL DELETE, UPDATE and MERGE on a join view are refused") {
+    val dir = tmp("dml")
+    val (fact, dim, view) = (s"$dir/fact", s"$dir/dim", s"$dir/view")
+    seedFact(fact); seedDim(dim)
+    JoinMatView.create(spark, view, fact, dim,
+      fkCols = Seq("cid"), groupCols = Seq("segment"),
+      sums = Seq(("amt_sum", "amount")), avgs = Seq(("amt_avg", "amount")),
+      countAlias = Some("n"))
+    val before = VersionedTable.currentVersion(spark, view)
+    Seq(s"DELETE FROM graft.`$view` WHERE segment = 's0'",
+      s"UPDATE graft.`$view` SET n = 0 WHERE segment = 's0'",
+      s"""MERGE INTO graft.`$view` t USING (SELECT 's0' AS segment) s
+         |ON t.segment = s.segment
+         |WHEN MATCHED THEN DELETE""".stripMargin).foreach { stmt =>
+      val e = intercept[IllegalArgumentException](spark.sql(stmt))
+      assert(e.getMessage.contains("materialized view"),
+        s"$stmt: ${e.getMessage}")
+    }
+    assert(VersionedTable.currentVersion(spark, view) == before)
+    val cols = Seq("segment", "amt_sum", "amt_avg", "n")
+    assert(rowsOf(spark.sql(s"SELECT * FROM graft_view('$view')")
+      .select(cols.map(col): _*)) ==
+      rowsOf(direct(fact, dim).select(cols.map(col): _*)))
+  }
+
+  test("startMatViewRefresh keeps a join view current") {
+    val dir = tmp("metronome")
+    val (fact, dim, view) = (s"$dir/fact", s"$dir/dim", s"$dir/view")
+    seedFact(fact); seedDim(dim)
+    JoinMatView.create(spark, view, fact, dim,
+      fkCols = Seq("cid"), groupCols = Seq("segment"),
+      sums = Seq(("amt_sum", "amount")), avgs = Seq(("amt_avg", "amount")),
+      countAlias = Some("n"))
+    val q = graft.streaming.StreamPipeline.startMatViewRefresh(spark, view,
+      pollInterval = "100 milliseconds")
+    try {
+      VersionedTable.upsert(spark, fact,
+        Seq((993, "p1", 4L, Some(21L))).toDF("oid", "part", "cid", "amount"),
+        Seq("oid", "part"), Seq("part"))
+      VersionedTable.upsert(spark, dim,
+        Seq((6L, "d0", "s_moved")).toDF("cid", "dpart", "segment"),
+        Seq("cid"), Seq("cid"))
+      val cols = Seq("segment", "amt_sum", "amt_avg", "n")
+      def synced =
+        rowsOf(MatView.read(spark, view).select(cols.map(col): _*)) ==
+          rowsOf(direct(fact, dim).select(cols.map(col): _*))
+      val end = System.currentTimeMillis + 30000
+      while (!synced && System.currentTimeMillis < end) Thread.sleep(100)
+      assertMatches(view, fact, dim)
+    } finally q.stop()
   }
 }

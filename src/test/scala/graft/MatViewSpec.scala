@@ -263,6 +263,29 @@ class MatViewSpec extends SparkSpec {
     assertMatches(view, src, Seq("g", "x_min", "x_max", "n"))
   }
 
+  test("refresh job counts: sum delta path, max rescan, no-op") {
+    val dir = tmp("jobs")
+    val (src, sv, mv) = (s"$dir/src", s"$dir/sum", s"$dir/max")
+    seed(src)
+    MatView.create(spark, sv, src, Seq("id", "part"), Seq("g"),
+      sums = Seq(("x_sum", "x")), countAlias = Some("n"))
+    MatView.create(spark, mv, src, Seq("id", "part"), Seq("g"),
+      maxs = Seq(("x_max", "x")), countAlias = Some("n"))
+    // remove g1's maximum: the sum view folds the feed alone, the max
+    // view rescans g1 alone
+    val top = VersionedTable.read(spark, src).filter($"g" === "g1")
+      .orderBy($"x".desc_nulls_last).select($"id").as[Int].head()
+    VersionedTable.deleteMatching(spark, src, col("id") === top)
+    val sumPath = jobsAndStages(MatView.refresh(spark, sv))
+    val maxPath = jobsAndStages(MatView.refresh(spark, mv))
+    assert(!MatView.lastFullRecompute && MatView.lastRescanGroups == 1L)
+    val noop = jobsAndStages(MatView.refresh(spark, sv))
+    assert((sumPath, maxPath, noop) == ((4, 15), (12, 42), (0, 0)),
+      s"sum $sumPath, max $maxPath, no-op $noop (jobs, stages)")
+    assertMatches(sv, src, Seq("g", "x_sum", "n"))
+    assertMatches(mv, src, Seq("g", "x_max", "n"))
+  }
+
   test("randomized rounds: view == direct aggregate after every refresh") {
     val dir = tmp("rand")
     val (src, view) = (s"$dir/src", s"$dir/view")

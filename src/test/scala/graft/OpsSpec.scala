@@ -3845,34 +3845,4 @@ class OpsSpec extends SparkSpec {
     assert(a.keySet.size == 6, a.keySet) // 3 dirs in each of 2 generations
     assert(a == b)
   }
-
-  private def jobsAndStages(body: => Any): (Int, Int) = {
-    val tag = "graft.test.commitJobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty(tag)) match {
-          case Some("commit") =>
-            jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
-          case Some("marker") => drained.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "commit")
-      body
-      sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-    (jobs.get, stages.get)
-  }
 }

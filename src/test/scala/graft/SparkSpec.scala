@@ -33,4 +33,37 @@ object SparkSpec {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs and stages that `body` starts on this thread. A marker
+    * job run after `body` drains the listener bus first, so late
+    * job-start events are counted before the totals are read. */
+  def jobsAndStages(body: => Any): (Int, Int) = {
+    val tag = "graft.test.commitJobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(tag)) match {
+          case Some("commit") =>
+            jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
+          case Some("marker") => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "commit")
+      body
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, stages.get)
+  }
 }
